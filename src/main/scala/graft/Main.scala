@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.ZipEntriesRead
 import graft.zip.{GraftError, ZipExtract, ZipToParquetConfig}
 
 /** CLI entry point with the reference's exact flag surface
@@ -77,21 +78,23 @@ object Main {
 
   /** O14 — the Spark stand-in for the reference's progress BAR
     * (src/logger.rs:7-57: indicatif renders `{pos}/{len}` from `inc(1)`
-    * per row, src/builder.rs:90), at INTRA-task grain: the extraction
-    * flatMap bumps a named LongAccumulator per row, and the accumulator's
+    * per row, src/builder.rs:90), at INTRA-task grain: the `format("zip")`
+    * row reader reports its emitted-row count as the scan's "zip entries
+    * read" custom metric (Spark polls it every 100 rows), and the metric's
     * task-partial value rides the executor heartbeat to the driver (Spark
-    * reports `TaskMetrics.accumulators()` — internal AND user — for every
+    * reports `TaskMetrics.accumulators()`, SQL metrics included, for every
     * RUNNING task on each heartbeat), so a single giant archive (= one
     * task) ticks while it extracts instead of sitting at 0 until task
     * end. pos = Σ per-task high-water marks; per-task max() keeps a late
     * or reordered heartbeat from regressing the bar, and task-end folds
-    * in the task's final delta through the same map. The tick cadence is
+    * in the task's final value through the same map. The tick cadence is
     * `spark.executor.heartbeatInterval` (10s default — tune the standard
     * knob for a faster bar); a literal per-row driver callback would
     * serialize the job. A retried task double-counts its rows (two task
     * ids) — the clamp to `total` keeps the bar honest, the same trade
-    * every accumulator-driven progress display makes. */
-  private[graft] class RowProgressListener(total: Long, accName: String)
+    * every accumulator-driven progress display makes. The metric is
+    * matched by name, so the listener is attached only around one run. */
+  private[graft] class RowProgressListener(total: Long)
       extends org.apache.spark.scheduler.SparkListener {
     private val perTask =
       new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
@@ -104,7 +107,7 @@ object Main {
     private def record(taskId: Long,
         infos: Iterable[org.apache.spark.scheduler.AccumulableInfo]): Unit = {
       infos.foreach { ai =>
-        if (ai.name.contains(accName)) ai.update.foreach {
+        if (ai.name.contains(ZipEntriesRead.Description)) ai.update.foreach {
           case l: java.lang.Long =>
             perTask.merge(taskId, l,
               (a, b) => if (a.longValue >= b.longValue) a else b)
@@ -139,23 +142,17 @@ object Main {
     // O8/O14 parity: the reference totals the entry count before extracting
     // (src/builder.rs:24-45) — under --simple print it as a plain log line.
     // stderr, because --stdout streams parquet bytes on stdout.
-    if (!simple) {
+    def extract(): Unit =
       if (stdout) ZipExtract.runToStream(spark, cfg, System.out)
       else ZipExtract.run(spark, cfg)
-      return
-    }
+    if (!simple) { extract(); return }
     val total = ZipExtract.countEntries(spark, cfg)
     System.err.println(s"$total files")
-    // per-run accumulator name: two --simple runs on one session must not
-    // read each other's counts
-    val accName = "graft_rows_" + java.util.UUID.randomUUID().toString.take(8)
-    val acc = spark.sparkContext.longAccumulator(accName)
-    val progress = new RowProgressListener(total, accName)
+    val progress = new RowProgressListener(total)
     spark.sparkContext.addSparkListener(progress)
     try {
-      if (stdout) ZipExtract.runToStream(spark, cfg, System.out, Some(acc))
-      else ZipExtract.run(spark, cfg, Some(acc))
-      // the listener bus is async: wait (bounded) for the final write
+      extract()
+      // the listener bus is async: wait (bounded) for the last scan
       // task's metrics to drain so the last `total/total rows` line is
       // printed before the listener detaches
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000

@@ -71,12 +71,9 @@ object ParityOps {
       .select(col("doc_id"), col("lang"))
       .orderBy("doc_id")
 
-  /** O1-O3+O5-O7 end-to-end — the REAL extractor over a deterministic zip
-    * synthesized at query time (driver runs a rows-only check; exact-value
-    * coverage lives in ZipExtractSpec). Output excludes `source` (a temp
-    * path) so the result is deterministic. */
-  def zipExtract(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zip").toFile
+  /** The 3-entry zip both zip queries read, written fresh to a temp dir. */
+  private def fixtureZip(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
     dir.deleteOnExit()
     val zipPath = new java.io.File(dir, "fixture.zip")
     val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zipPath))
@@ -89,35 +86,27 @@ object ParityOps {
     add("dir/b.png", Array.tabulate[Byte](16)(i => (i * 7).toByte))
     add("dir/sub/c.txt", Array.emptyByteArray)
     zout.close()
-    val cfg = ZipToParquetConfig(inputs = Seq(zipPath.getAbsolutePath))
-    ZipExtract.entries(s, cfg)
+    zipPath.getAbsolutePath
+  }
+
+  /** O1-O3+O5-O7 end-to-end — the REAL extractor over a deterministic zip
+    * synthesized at query time (driver runs a rows-only check; exact-value
+    * coverage lives in ZipExtractSpec). Output excludes `source` (a temp
+    * path) so the result is deterministic. */
+  def zipExtract(s: SparkSession, d: String): DataFrame =
+    ZipExtract.entries(s, ZipToParquetConfig(inputs = Seq(fixtureZip("graft_zip"))))
       .select(col("name"), col("hash"), length(col("body")).as("body_len"))
       .orderBy("name")
-  }
 
   /** The DSv2 `format("zip")` source end-to-end (SURVEY.md §7.2 M3) with a
     * pushed name predicate and pruned columns — same fixture as
     * [[zipExtract]]; rows-only check (plan-level pushdown assertions live
     * in ZipDataSourceSpec). */
-  def zipDsv2(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zip_v2").toFile
-    dir.deleteOnExit()
-    val zipPath = new java.io.File(dir, "fixture.zip")
-    val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zipPath))
-    def add(name: String, body: Array[Byte]): Unit = {
-      zout.putNextEntry(new java.util.zip.ZipEntry(name))
-      zout.write(body)
-      zout.closeEntry()
-    }
-    add("a.txt", "hello".getBytes("UTF-8"))
-    add("dir/b.png", Array.tabulate[Byte](16)(i => (i * 7).toByte))
-    add("dir/sub/c.txt", Array.emptyByteArray)
-    zout.close()
-    s.read.format("zip").load(zipPath.getAbsolutePath)
+  def zipDsv2(s: SparkSession, d: String): DataFrame =
+    s.read.format("zip").load(fixtureZip("graft_zip_v2"))
       .filter(col("name").endsWith(".txt")) // pushed into the scan
       .select(col("name"), col("hash"))     // pruned: body never read
       .orderBy("name")
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_hash_sha256" -> hashSha256,

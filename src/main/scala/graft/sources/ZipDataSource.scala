@@ -1,12 +1,17 @@
 package graft.sources
 
 import java.util
+import java.util.regex.Pattern
+import java.util.zip.{ZipEntry, ZipInputStream}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -14,29 +19,34 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.zip.{GlobRegex, GraftError, SerializableConfiguration, ZipExtract}
+import graft.zip.{GlobRegex, GraftError, ZipExtract}
 
-/** DataSourceV2 `format("zip")` — SURVEY.md §7.2 M3: the reference's two
-  * hand-rolled optimizations (src/builder.rs:180-195 — glob-filter entry
-  * names BEFORE decompression; read the body only when body/hash columns
-  * are needed) promoted into Catalyst-native pushdown contracts, so plain
+/** DataSourceV2 `format("zip")` — the one zip reader. `ZipExtract.entries`
+  * (and so the CLI) is a projection over it. SURVEY.md §7.2 M3: the
+  * reference's two hand-rolled optimizations (src/builder.rs:180-195 —
+  * glob-filter entry names BEFORE reading them; read the body only when
+  * body/hash columns are needed) promoted into Catalyst-native pushdown
+  * contracts, so plain
   * `spark.read.format("zip").load(...).filter(...).select(...)` gets them
   * automatically:
   *
   *   - [[SupportsPushDownFilters]]: deterministic predicates on `name` /
-  *     `source` evaluate per entry inside the scan, skipping decompression
-  *     for non-matching entries (and whole archives for `source` misses).
-  *     `.explain` shows them under `PushedFilters`.
+  *     `source` evaluate per entry inside the scan, so non-matching entries
+  *     are never copied out or hashed (and `source` misses skip whole
+  *     archives unopened). `.explain` shows them under `PushedFilters`.
   *   - [[SupportsPushDownRequiredColumns]]: a projection without `body`
-  *     and `hash` elides the entry read entirely — the scan then touches
-  *     only zip central-directory metadata, the same names-only fast path
-  *     as the reference's count pass (src/builder.rs:32-38).
+  *     and `hash` elides the entry read — no body array, no SHA-256.
   *   - [[SupportsPushDownAggregates]]: a global COUNT(*) (the reference's
-  *     count pass itself, src/builder.rs:24-41) collapses each partition
-  *     to ONE row — a names-only walk that counts matching entries with
-  *     no row materialization at all; Spark sums the per-archive partials.
+  *     count pass, src/builder.rs:24-41) collapses each partition to ONE
+  *     row — no row materialization; Spark sums the per-archive partials.
   *
-  * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40).
+  * None of these skip decompression: `ZipInputStream.getNextEntry` reads
+  * through (and inflates) every entry it passes over, so names-only,
+  * COUNT(*) and glob-miss scans still inflate every byte of the archive.
+  * Only a central-directory reader over a seekable stream would avoid that.
+  *
+  * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40)
+  * and `maxBodyBytes` (per-entry scale guard, default 1 GiB).
   * Partitioning: one [[InputPartition]] per archive — a zip is not
   * splittable (central directory + contiguous entry streams), matching the
   * reference's one-task-per-zip grain (src/builder.rs:49-50,64). At 100 TB
@@ -56,20 +66,70 @@ class ZipDataSource extends TableProvider with DataSourceRegister {
     new ZipTable(new CaseInsensitiveStringMap(properties))
 }
 
+/** Created once per `load()`. The glob is compiled and the inputs listed
+  * here, on the driver, so a bad glob or an input that matches nothing
+  * fails typed at `load()`, and every scan of the DataFrame plans from
+  * this one listing (an archive deleted afterwards fails typed `ReadFile`
+  * in its task). */
 class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
   override def name(): String = "zip"
   override def schema(): StructType = ZipExtract.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new ZipScanBuilder(
-      // getTable receives the resolved properties; load()-time paths arrive
-      // in the scan options — prefer the latter when present.
-      if (caseInsensitiveOptions.isEmpty) options else caseInsensitiveOptions)
+  private[sources] val globText: Option[String] = Option(options.get("glob"))
+  // Pattern is Serializable: compiled once here, shipped to every task
+  private[sources] val glob: Option[Pattern] = globText.map { g =>
+    try GlobRegex.compile(g)
+    catch { case e: GlobRegex.InvalidGlobException =>
+      GraftError.raise(GraftError.InvalidGlob(g, e.detail))
+    }
+  }
+  private[sources] val maxBodyBytes: Long =
+    Option(options.get("maxBodyBytes")).map(_.toLong).getOrElse(1L << 30)
+  private[sources] val archives: Seq[ZipInputPartition] =
+    ZipTable.list(SparkSession.active, paths)
+
+  private def paths: Seq[String] = {
+    val fromPaths = Option(options.get("paths")).toSeq.flatMap { json =>
+      // Spark encodes multi-path load() as a JSON array of strings —
+      // parse it as JSON (a naive comma split corrupts paths containing
+      // commas or escapes).
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq
+    }
+    fromPaths ++ Option(options.get("path"))
+  }
+
+  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =
+    new ZipScanBuilder(this)
 }
 
-class ZipScanBuilder(options: CaseInsensitiveStringMap)
+object ZipTable {
+  /** Expand input patterns (literal paths or globs, reference
+    * src/builder.rs:25-29) into concrete archives via the Hadoop FS,
+    * sorted by path. `readPath` keeps the full URI so tasks open the right
+    * FileSystem; `displayPath` is the plain path for the `source` column
+    * (the reference stores the path as given, src/builder.rs:216 — local
+    * files there carry no `file:` scheme). */
+  def list(spark: SparkSession, patterns: Seq[String]): Seq[ZipInputPartition] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val archives = patterns.flatMap { pat =>
+      val p = new Path(pat)
+      val fs = p.getFileSystem(conf)
+      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
+        .filter(_.isFile).map { st =>
+          val uri = st.getPath.toUri
+          val display = if (uri.getScheme == "file") uri.getPath else st.getPath.toString
+          ZipInputPartition(st.getPath.toString, display, st.getLen)
+        }
+    }.distinctBy(_.readPath).sortBy(_.readPath)
+    if (archives.isEmpty) GraftError.raise(GraftError.NoInputsFound(patterns))
+    archives
+  }
+}
+
+class ZipScanBuilder(table: ZipTable)
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
@@ -110,7 +170,7 @@ class ZipScanBuilder(options: CaseInsensitiveStringMap)
   }
 
   /** Accept any deterministic filter that references only `name`/`source` —
-    * those evaluate before decompression inside the scan. Everything else
+    * those evaluate before the entry read inside the scan. Everything else
     * (`hash`/`body` predicates need the read) stays with Spark. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (ours, rest) = filters.partition { f =>
@@ -128,10 +188,10 @@ class ZipScanBuilder(options: CaseInsensitiveStringMap)
   }
 
   override def build(): Scan =
-    new ZipScan(options, pushed, required, limit, countStar)
+    new ZipScan(table, pushed, required, limit, countStar)
 }
 
-class ZipScan(options: CaseInsensitiveStringMap, filters: Array[Filter],
+class ZipScan(table: ZipTable, filters: Array[Filter],
     required: StructType, limit: Int = -1, countStar: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
@@ -156,27 +216,14 @@ class ZipScan(options: CaseInsensitiveStringMap, filters: Array[Filter],
         ZipFilterEval.supported(f)
     }
 
-  /** Size estimate from the archive LISTING (no data read), so Catalyst's
-    * join-side selection can treat a small zip scan as broadcastable. The
-    * estimate is projection-aware, mirroring the read-elision the reader
-    * performs: a names-only scan touches central-directory metadata only
-    * (~1% of archive bytes), while body/hash projections pay decompression
-    * (compressed bytes as the honest lower bound). */
-  // listed once per scan — Catalyst may ask for statistics several times
-  // while planning, and each glob is remote round-trips
-  private lazy val archiveBytes: Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    try paths.flatMap { pat =>
-      val p = new Path(pat)
-      val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isFile).map(_.getLen)
-    }.sum
-    catch { case _: Exception => Long.MaxValue }
-  }
-
+  /** Output size estimate from the table's listing (no data read), so
+    * Catalyst's join-side selection can treat a small zip scan as
+    * broadcastable. It tracks the projection: a names-only scan emits
+    * little (taken as ~1% of archive bytes) even though its walk still
+    * inflates every entry; body/hash projections emit about the
+    * compressed bytes or more. */
   override def estimateStatistics(): Statistics = {
+    val archiveBytes = table.archives.map(_.bytes).sum
     val needsRead = required.fieldNames.contains("body") ||
       required.fieldNames.contains("hash")
     val estimate = if (needsRead) archiveBytes else math.max(archiveBytes / 100, 1)
@@ -188,62 +235,54 @@ class ZipScan(options: CaseInsensitiveStringMap, filters: Array[Filter],
     }
   }
   override def description(): String =
-    s"ZipScan(glob=${Option(options.get("glob")).getOrElse("*")}, " +
+    s"ZipScan(glob=${table.globText.getOrElse("*")}, " +
       s"pushed=[${filters.mkString(", ")}], cols=${required.fieldNames.mkString(",")}" +
       (if (limit >= 0) s", limit=$limit" else "") +
       (if (countStar) ", PushedAggregation=[COUNT(*)]" else "") + ")"
 
-  private def paths: Seq[String] = {
-    val fromPaths = Option(options.get("paths")).toSeq.flatMap { json =>
-      // Spark encodes multi-path load() as a JSON array of strings —
-      // parse it as JSON (a naive comma split corrupts paths containing
-      // commas or escapes).
-      val arr = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(json, classOf[Array[String]])
-      arr.toSeq
-    }
-    val fromPath = Option(options.get("path")).toSeq
-    fromPaths ++ fromPath
-  }
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new ZipEntriesRead)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
     val all = filters ++ runtimeFilters
-    ZipExtract.listInputs(spark, paths)
-      .filter { case (_, display) => ZipFilterEval.sourceMayMatch(all, display) }
-      .map { case (read, display) => ZipInputPartition(read, display) }
-      .toArray
+    table.archives.filter(a => ZipFilterEval.sourceMayMatch(all, a.displayPath)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val globRegex = Option(options.get("glob")).map(GlobRegex.translate)
-    if (countStar) ZipCountReaderFactory(conf, globRegex, filters)
-    else {
-      // same scale guard as the flatMap path (ZipToParquetConfig.maxBodyBytes):
-      // an oversized entry fails typed instead of OOMing the executor
-      val maxBodyBytes =
-        Option(options.get("maxBodyBytes")).map(_.toLong).getOrElse(1L << 30)
-      ZipReaderFactory(conf, globRegex, filters, required.fieldNames, limit,
-        maxBodyBytes)
-    }
+    val conf = new SerializableConfiguration(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    if (countStar) ZipCountReaderFactory(conf, table.glob, filters)
+    else ZipReaderFactory(conf, table.glob, filters, required.fieldNames, limit,
+      table.maxBodyBytes)
   }
 }
 
+/** Rows the row reader has emitted so far in its task. Spark polls
+  * [[PartitionReader.currentMetricsValues]] every 100 rows, and executor
+  * heartbeats carry the value while the task runs, so a listener can
+  * follow one long archive task (the CLI's `--simple` row progress). */
+class ZipEntriesRead extends CustomSumMetric {
+  override def name(): String = ZipEntriesRead.Name
+  override def description(): String = ZipEntriesRead.Description
+}
+object ZipEntriesRead {
+  val Name = "zipEntriesRead"
+  val Description = "zip entries read"
+}
+
 /** Pushed-COUNT(*) reader: one row per archive carrying the number of
-  * glob/filter-matching entries — names-only walk, zero decompression,
-  * zero per-entry rows (the DSv2 form of the reference's count pass,
-  * src/builder.rs:24-41). An archive with no matches still emits its 0. */
+  * glob/filter-matching entries — no entry is copied out or hashed, and no
+  * per-entry rows (the DSv2 form of the reference's count pass,
+  * src/builder.rs:24-41); the walk itself still inflates every entry. An
+  * archive with no matches still emits its 0. */
 case class ZipCountReaderFactory(
     conf: SerializableConfiguration,
-    globRegex: Option[String],
+    glob: Option[Pattern],
     filters: Array[Filter]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[ZipInputPartition]
     new PartitionReader[InternalRow] {
-      private val pattern = globRegex.map(java.util.regex.Pattern.compile(_))
       private var done = false
       private var row: InternalRow = _
 
@@ -253,7 +292,7 @@ case class ZipCountReaderFactory(
         var n = 0L
         try {
           // same walk as the row reader — count ≡ rows the row path emits
-          while (ZipEntryWalk.nextMatching(zin, pattern, filters, part) != null) {
+          while (ZipEntryWalk.nextMatching(zin, glob, filters, part) != null) {
             n += 1
           }
         } finally zin.close()
@@ -268,11 +307,13 @@ case class ZipCountReaderFactory(
   }
 }
 
-case class ZipInputPartition(readPath: String, displayPath: String) extends InputPartition
+/** One archive: the unit of partitioning. `bytes` is its listed length. */
+case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long)
+    extends InputPartition
 
 case class ZipReaderFactory(
     conf: SerializableConfiguration,
-    globRegex: Option[String],
+    glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
     limit: Int = -1,
@@ -280,15 +321,15 @@ case class ZipReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ZipInputPartition]
-    new ZipPartitionReader(p, conf, globRegex, filters, columns, limit,
+    new ZipPartitionReader(p, conf, glob, filters, columns, limit,
       maxBodyBytes)
   }
 }
 
-/** The archive walk both DSv2 readers share — open and the
-  * filter-matching entry iterator. ONE definition of "which entries this
-  * scan emits", so the pushed-COUNT(*) path can never disagree with the
-  * row path about what counts as a row. */
+/** The archive walk both DSv2 readers share — open, the filter-matching
+  * entry iterator and the entry read. ONE definition of "which entries
+  * this scan emits", so the pushed-COUNT(*) path can never disagree with
+  * the row path about what counts as a row. */
 private[sources] object ZipEntryWalk {
   /** Test observability: archives actually opened by the DSv2 readers.
     * Counting is OFF unless a test flips [[countOpens]] — production reads
@@ -298,25 +339,30 @@ private[sources] object ZipEntryWalk {
   val countOpens = new java.util.concurrent.atomic.AtomicBoolean(false)
   val opened = new java.util.concurrent.atomic.AtomicLong
 
-  def open(part: ZipInputPartition,
-      conf: SerializableConfiguration): java.util.zip.ZipInputStream =
+  /** Entry names decode as cp437 unless the entry's EFS flag says UTF-8 —
+    * the zip appnote's rule (APPNOTE 4.4.4/D.2), which
+    * `ZipInputStream(in, charset)` implements: the charset argument applies
+    * only to non-EFS entries. The reference's wax-glob path is lossy on
+    * non-UTF8 names; we decode them faithfully (documented divergence,
+    * SURVEY.md §7.6). */
+  private val EntryNameCharset = java.nio.charset.Charset.forName("IBM437")
+
+  def open(part: ZipInputPartition, conf: SerializableConfiguration): ZipInputStream =
     try {
       if (countOpens.get) opened.incrementAndGet()
       val p = new Path(part.readPath)
       val fs = p.getFileSystem(conf.value)
-      new java.util.zip.ZipInputStream(
-        new java.io.BufferedInputStream(fs.open(p), 1 << 16),
-        ZipExtract.EntryNameCharset)
+      new ZipInputStream(new java.io.BufferedInputStream(fs.open(p), 1 << 16),
+        EntryNameCharset)
     } catch { case e: java.io.IOException =>
+      // src/error.rs:5-8 — the archive itself is unreadable
       GraftError.raise(GraftError.ReadFile(part.displayPath, e.toString))
     }
 
   /** Next entry this scan emits (directory-skipping, glob + pushed-filter
     * matching), or null at end of archive. Errors carry the zip taxonomy. */
-  def nextMatching(zin: java.util.zip.ZipInputStream,
-      pattern: Option[java.util.regex.Pattern],
-      filters: Array[Filter],
-      part: ZipInputPartition): java.util.zip.ZipEntry = {
+  def nextMatching(zin: ZipInputStream, glob: Option[Pattern],
+      filters: Array[Filter], part: ZipInputPartition): ZipEntry = {
     while (true) {
       val e =
         try zin.getNextEntry
@@ -328,31 +374,53 @@ private[sources] object ZipEntryWalk {
         }
       if (e == null) return null
       if (!e.isDirectory &&
-          pattern.forall(_.matcher(e.getName).matches()) &&
+          glob.forall(_.matcher(e.getName).matches()) &&
           ZipFilterEval.matches(filters, e.getName, part.displayPath)) return e
     }
     null // unreachable
   }
+
+  /** The current entry's bytes, failing typed past `maxBytes` (the scale
+    * guard: EntryTooLarge instead of an executor OOM) or mid-inflate. */
+  def readEntry(zin: ZipInputStream, maxBytes: Long, name: String,
+      zipPath: String): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(8192)
+    val buf = new Array[Byte](1 << 16)
+    try {
+      var n = zin.read(buf)
+      while (n >= 0) {
+        out.write(buf, 0, n)
+        if (out.size() > maxBytes)
+          GraftError.raise(GraftError.EntryTooLarge(name, zipPath, maxBytes))
+        n = zin.read(buf)
+      }
+    } catch {
+      case g: GraftError.GraftException => throw g // EntryTooLarge from above
+      case scala.util.control.NonFatal(x) =>
+        // src/error.rs:17-21 — this entry's stream failed mid-inflate.
+        // NonFatal: inflater internals can throw beyond ZipException|IOException.
+        GraftError.raise(GraftError.ReadFileInZip(name, zipPath, x.toString))
+    }
+    out.toByteArray
+  }
 }
 
 /** Streams one archive's entries as InternalRows, honoring pushed filters
-  * (pre-decompression) and the pruned projection (read elision). */
+  * (before the entry read) and the pruned projection (read elision). */
 class ZipPartitionReader(
     part: ZipInputPartition,
     conf: SerializableConfiguration,
-    globRegex: Option[String],
+    glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
     limit: Int = -1,
     maxBodyBytes: Long = 1L << 30) extends PartitionReader[InternalRow] {
 
-  private var emitted = 0
+  private var emitted = 0L
 
   private val needBody = columns.contains("body")
   private val needHash = columns.contains("hash")
-  private val needSource = columns.contains("source")
 
-  private val pattern = globRegex.map(java.util.regex.Pattern.compile(_))
   private val zin = ZipEntryWalk.open(part, conf)
   private var current: InternalRow = _
   private var closed = false
@@ -366,21 +434,19 @@ class ZipPartitionReader(
     if (closed) return false
     // pushed name/source predicates run BEFORE the entry read — the DSv2
     // form of src/builder.rs:180-183 (shared walk with the COUNT(*) path)
-    val e = ZipEntryWalk.nextMatching(zin, pattern, filters, part)
+    val e = ZipEntryWalk.nextMatching(zin, glob, filters, part)
     if (e == null) { closed = true; zin.close(); return false }
     var body: Array[Byte] = null
     var hash: String = null
     if (needBody || needHash) { // read elision: src/builder.rs:185
-      // shared hardened read: maxBodyBytes guard + typed mid-inflate
-      // errors, identical to the flatMap path's semantics
-      val bytes = ZipExtract.readEntry(zin, maxBodyBytes, e.getName,
+      val bytes = ZipEntryWalk.readEntry(zin, maxBodyBytes, e.getName,
         part.displayPath)
-      if (needHash) hash = ZipExtract.sha256Hex(bytes)
-      if (needBody) body = bytes
+      if (needHash) hash = ZipExtract.sha256Hex(bytes) // src/builder.rs:196-209
+      if (needBody) body = bytes                       // src/builder.rs:185-195
     }
     val values = columns.map {
       case "name" => UTF8String.fromString(e.getName)
-      case "source" => if (needSource) UTF8String.fromString(part.displayPath) else null
+      case "source" => UTF8String.fromString(part.displayPath)
       case "body" => body
       case "hash" => if (hash != null) UTF8String.fromString(hash) else null
     }
@@ -390,6 +456,15 @@ class ZipPartitionReader(
   }
 
   override def get(): InternalRow = current
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = {
+    val n = emitted
+    Array(new CustomTaskMetric {
+      override def name(): String = ZipEntriesRead.Name
+      override def value(): Long = n
+    })
+  }
+
   override def close(): Unit = if (!closed) { closed = true; zin.close() }
 }
 
@@ -430,5 +505,20 @@ object ZipFilterEval {
     case sources.Or(l, r) => eval(l, row) || eval(r, row)
     case sources.Not(c) => !eval(c, row)
     case _ => true
+  }
+}
+
+/** Minimal serializable wrapper for the Hadoop Configuration (the one in
+  * spark-core is private[spark]). */
+class SerializableConfiguration(@transient var value: Configuration)
+    extends Serializable {
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    out.defaultWriteObject()
+    value.write(out)
+  }
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    in.defaultReadObject()
+    value = new Configuration(false)
+    value.readFields(in)
   }
 }

@@ -16,8 +16,8 @@ package graft.zip
   */
 object GlobRegex {
 
-  final class InvalidGlobException(glob: String, msg: String)
-      extends IllegalArgumentException(s"invalid glob '$glob': $msg")
+  final class InvalidGlobException(glob: String, val detail: String)
+      extends IllegalArgumentException(s"invalid glob '$glob': $detail")
 
   /** Translate a glob to an anchored Java regex string. */
   def translate(glob: String): String = {
@@ -65,10 +65,13 @@ object GlobRegex {
     if (j >= glob.length) -1 else j
   }
 
+  /** Translate and compile. A glob that translates but is no valid regex
+    * (e.g. the reversed range `[z-a]`) also raises [[InvalidGlobException]],
+    * with the regex error's one-line description. */
   def compile(glob: String): java.util.regex.Pattern =
     try java.util.regex.Pattern.compile(translate(glob))
     catch {
-      case e: InvalidGlobException => throw e
-      case e: Exception => throw new InvalidGlobException(glob, e.getMessage)
+      case e: java.util.regex.PatternSyntaxException =>
+        throw new InvalidGlobException(glob, e.getDescription)
     }
 }

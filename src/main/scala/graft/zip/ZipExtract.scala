@@ -1,22 +1,13 @@
 package graft.zip
 
-import java.io.BufferedInputStream
 import java.security.MessageDigest
-import java.util.zip.ZipInputStream
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One output row per file entry inside a zip archive — the reference's
-  * `UnzippedFile { name, source, body, hash }` (reference:
-  * src/builder.rs:156-161). `hash` is plain lowercase SHA-256 hex of `body`
-  * (the reference's stored form is quote-wrapped by a Debug-format bug,
-  * src/builder.rs:207 — we implement the intended semantics, SURVEY.md B2).
-  */
-case class ZipEntryRow(name: String, source: String, body: Array[Byte], hash: String)
+import graft.sources.ZipTable
 
 /** The reference's whole "query language" is 9 CLI flags
   * (reference: src/main.rs:16-44); this config is its Spark-native
@@ -111,7 +102,8 @@ object GraftError {
 }
 
 /** Spark-native zip → rows extractor (reference dataflow:
-  * src/builder.rs:23-119).
+  * src/builder.rs:23-119), served by the one zip reader, the DSv2
+  * `format("zip")` source (`graft.sources.ZipDataSource`).
   *
   * Scale design: the unit of parallelism is one Spark task per zip archive —
   * the same granularity as the reference's one-thread-per-zip pool
@@ -125,15 +117,21 @@ object GraftError {
   * pipeline (list → extract → write), zero shuffles.
   *
   * Reference pushdowns reproduced (SURVEY.md §4.1):
-  *   - name-glob filter applied BEFORE body decompression
-  *     (src/builder.rs:180-183): non-matching entries are skipped by
-  *     `getNextEntry` without inflating their data.
+  *   - name-glob filter applied BEFORE the entry read
+  *     (src/builder.rs:180-183): a non-matching entry is never copied out
+  *     or hashed. `getNextEntry` still reads through, and so inflates, it.
   *   - body read elided entirely when neither body nor hash is requested
   *     (src/builder.rs:185); hash alone still forces the read
   *     (hash ← body dependency, src/builder.rs:196-209).
   */
 object ZipExtract {
 
+  /** One row per file entry inside a zip archive — the reference's
+    * `UnzippedFile { name, source, body, hash }` (reference:
+    * src/builder.rs:156-161). `hash` is plain lowercase SHA-256 hex of
+    * `body` (the reference's stored form is quote-wrapped by a Debug-format
+    * bug, src/builder.rs:207 — we implement the intended semantics,
+    * SURVEY.md B2). */
   val schema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
     StructField("source", StringType, nullable = true),
@@ -141,63 +139,23 @@ object ZipExtract {
     StructField("hash", StringType, nullable = true)))
 
   /** Expand input patterns (literal paths or globs, reference
-    * src/builder.rs:25-29) into concrete zip paths via the Hadoop FS.
-    * Returns (readPath, displayPath): readPath keeps the full URI so tasks
-    * open the right FileSystem; displayPath is the plain path for the
-    * `source` column (the reference stores the path as given,
-    * src/builder.rs:216 — local files there carry no `file:` scheme). */
-  def listInputs(spark: SparkSession, patterns: Seq[String]): Seq[(String, String)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val paths = patterns.flatMap { pat =>
-      val p = new Path(pat)
-      val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isFile).map { st =>
-          val uri = st.getPath.toUri
-          val display = if (uri.getScheme == "file") uri.getPath else st.getPath.toString
-          (st.getPath.toString, display)
-        }
-    }.distinct.sortBy(_._1)
-    if (paths.isEmpty) GraftError.raise(GraftError.NoInputsFound(patterns))
-    paths
-  }
+    * src/builder.rs:25-29) into (readPath, displayPath) pairs, sorted —
+    * the listing `format("zip")` plans its partitions from. */
+  def listInputs(spark: SparkSession, patterns: Seq[String]): Seq[(String, String)] =
+    ZipTable.list(spark, patterns).map(a => (a.readPath, a.displayPath))
 
-  /** The extractor: Dataset of zip paths → one row per matching entry.
-    * Narrow plan, one task per archive. */
-  def entries(spark: SparkSession, cfg: ZipToParquetConfig,
-      rowProgress: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    import spark.implicits._
-    // Validate the glob on the driver so a bad pattern fails fast (B4).
-    val globRegex: Option[String] = cfg.entryGlob.map { g =>
-      try GlobRegex.translate(g)
-      catch { case e: GlobRegex.InvalidGlobException =>
-        GraftError.raise(GraftError.InvalidGlob(g, e.getMessage))
-      }
-    }
-    val paths = listInputs(spark, cfg.inputs)
-    val needBody = cfg.includeBody
-    val needHash = cfg.includeHash
-    val needRead = needBody || needHash // src/builder.rs:185
-    val needSource = cfg.includeSource
-    val maxBody = cfg.maxBodyBytes
-    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-
-    // One task per archive: reference grain (src/builder.rs:64). repartition
-    // by path count so a 1000-zip input becomes 1000 tasks, not local[N].
-    val pathDs: Dataset[(String, String)] =
-      spark.createDataset(paths).repartition(paths.length)
-
-    val rows = pathDs.flatMap { case (readPath, displayPath) =>
-      val it = extractOne(readPath, displayPath, hadoopConf.value, globRegex,
-        needRead, needBody, needHash, needSource, maxBody)
-      // O14 per-ROW grain (reference src/logger.rs:29-45 `inc(1)` per row):
-      // the accumulator's task-partial value rides the executor heartbeat
-      // to the driver, so a listener can tick INSIDE a long single-archive
-      // task — one add per row, no driver round-trip on the hot path.
-      rowProgress.fold(it)(acc => it.map { r => acc.add(1L); r })
-    }(org.apache.spark.sql.Encoders.product[ZipEntryRow])
-    val df = rows.toDF()
+  /** The extractor: `format("zip")` projected to the fixed 4-column layout,
+    * one task per archive. A column whose flag is off is a typed NULL
+    * literal, so column pruning keeps it out of the scan: with neither body
+    * nor hash the entry read is elided. The glob and the inputs are checked
+    * here, on the driver (typed InvalidGlob / NoInputsFound, B4). */
+  def entries(spark: SparkSession, cfg: ZipToParquetConfig): DataFrame = {
+    val reader = spark.read.format("zip").option("maxBodyBytes", cfg.maxBodyBytes)
+    val zip = cfg.entryGlob.fold(reader)(reader.option("glob", _)).load(cfg.inputs: _*)
+    def flagged(c: String, on: Boolean) =
+      if (on) col(c) else lit(null).cast(schema(c).dataType).as(c)
+    val df = zip.select(col("name"), flagged("source", cfg.includeSource),
+      flagged("body", cfg.includeBody), flagged("hash", cfg.includeHash))
     // B2 byte-parity: reproduce the reference's quote-wrapped stored hash
     // (src/builder.rs:207 Debug-format bug). concat preserves NULL.
     if (cfg.quirkQuotedHash)
@@ -207,116 +165,19 @@ object ZipExtract {
 
   /** O8/O14 parity — the reference's pre-extraction count pass
     * (src/builder.rs:24-45 walks entry NAMES to total the progress bar).
-    * Body and hash are elided, so `needRead` is false in [[entries]] and no
-    * entry is ever decompressed — the pass touches zip metadata only. The
-    * glob (and the rest of cfg) still applies: the count is exactly the
-    * rows the extraction will emit. */
+    * `count()` prunes every column, so the source's pushed COUNT(*) runs:
+    * no entry is copied out or hashed, though the walk still inflates
+    * every entry. The glob (and the rest of cfg) still applies: the count
+    * is exactly the rows the extraction will emit. */
   def countEntries(spark: SparkSession, cfg: ZipToParquetConfig): Long =
-    entries(spark, cfg.copy(includeBody = false, includeHash = false)).count()
-
-  /** Stream one archive; iterator so downstream write pipelines without
-    * buffering the archive (bounded memory = one entry, cf. the reference's
-    * bounded channel src/builder.rs:53). */
-  private[zip] def extractOne(
-      readPath: String,
-      displayPath: String,
-      conf: Configuration,
-      globRegex: Option[String],
-      needRead: Boolean,
-      needBody: Boolean,
-      needHash: Boolean,
-      needSource: Boolean,
-      maxBodyBytes: Long): Iterator[ZipEntryRow] = {
-    val pattern = globRegex.map(java.util.regex.Pattern.compile(_))
-    val p = new Path(readPath)
-    val zin =
-      try {
-        val fs = p.getFileSystem(conf)
-        new ZipInputStream(new BufferedInputStream(fs.open(p), 1 << 16),
-          EntryNameCharset)
-      } catch { case e: java.io.IOException =>
-        // src/error.rs:5-8 — the archive itself is unreadable
-        GraftError.raise(GraftError.ReadFile(displayPath, e.toString))
-      }
-    val source = if (needSource) displayPath else null
-
-    new Iterator[ZipEntryRow] {
-      private var nextRow: ZipEntryRow = _
-      private var done = false
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null && !done) {
-          val e =
-            try zin.getNextEntry
-            catch { case scala.util.control.NonFatal(x) =>
-              // src/error.rs:13-16 — broken zip structure. NonFatal, not just
-              // ZipException|IOException: the JDK raises e.g.
-              // IllegalArgumentException from ZipCoder on malformed UTF-8
-              // entry names, and the typed-taxonomy contract covers those too.
-              GraftError.raise(GraftError.Zip(displayPath, x.toString))
-            }
-          if (e == null) { done = true; zin.close() }
-          else if (!e.isDirectory &&
-                   pattern.forall(_.matcher(e.getName).matches())) {
-            // glob filter BEFORE decompression (src/builder.rs:180-183):
-            // a non-matching entry never reaches the read below.
-            var body: Array[Byte] = null
-            var hash: String = null
-            if (needRead) {
-              val bytes = readEntry(zin, maxBodyBytes, e.getName, displayPath)
-              if (needHash) hash = sha256Hex(bytes) // src/builder.rs:196-209
-              if (needBody) body = bytes            // src/builder.rs:185-195
-            }
-            nextRow = ZipEntryRow(e.getName, source, body, hash)
-          }
-        }
-      }
-      advance()
-      def hasNext: Boolean = nextRow != null
-      def next(): ZipEntryRow = { val r = nextRow; advance(); r }
-    }
-  }
-
-  /** Entry names decode as cp437 unless the entry's EFS flag says UTF-8 —
-    * the zip appnote's rule (APPNOTE 4.4.4/D.2), which
-    * `ZipInputStream(in, charset)` implements: the charset argument applies
-    * only to non-EFS entries. The reference's wax-glob path is lossy on
-    * non-UTF8 names; we decode them faithfully (documented divergence,
-    * SURVEY.md §7.6). */
-  private[graft] val EntryNameCharset = java.nio.charset.Charset.forName("IBM437")
-
-  private[graft] def readEntry(zin: ZipInputStream, maxBytes: Long, name: String,
-      zipPath: String): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(8192)
-    val buf = new Array[Byte](1 << 16)
-    try {
-      var n = zin.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > maxBytes)
-          GraftError.raise(GraftError.EntryTooLarge(name, zipPath, maxBytes))
-        n = zin.read(buf)
-      }
-    } catch {
-      case g: GraftError.GraftException => throw g // EntryTooLarge from above
-      case scala.util.control.NonFatal(x) =>
-        // src/error.rs:17-21 — this entry's stream failed mid-inflate.
-        // NonFatal: inflater internals can throw beyond ZipException|IOException.
-        GraftError.raise(GraftError.ReadFileInZip(name, zipPath, x.toString))
-    }
-    out.toByteArray
-  }
+    entries(spark, cfg).count()
 
   private def causeChain(t: Throwable): List[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(x => x != null)
       .take(16).toList // cycle guard
 
-  def sha256Hex(bytes: Array[Byte]): String = {
-    val d = MessageDigest.getInstance("SHA-256").digest(bytes)
-    val sb = new StringBuilder(64)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.result()
-  }
+  def sha256Hex(bytes: Array[Byte]): String =
+    java.util.HexFormat.of().formatHex(MessageDigest.getInstance("SHA-256").digest(bytes))
 
   /** Full reference pipeline: extract → Parquet(Snappy)
     * (reference sink: src/builder.rs:232-278). `singleFile=true` mirrors the
@@ -333,12 +194,10 @@ object ZipExtract {
     * the knob maps exactly. One deviation: parquet-mr ALSO closes a group
     * when the byte limit (`parquet.block.size`) fills — a safety net the
     * reference lacks; it never fires at the reference's 100-row default. */
-  def run(spark: SparkSession, cfg: ZipToParquetConfig,
-      rowProgress: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Unit = {
+  def run(spark: SparkSession, cfg: ZipToParquetConfig): Unit = {
     // src/error.rs:41 + src/main.rs:57-62 — a sink must be chosen up front
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
-    val df0 = entries(spark, cfg, rowProgress)
+    val df0 = entries(spark, cfg)
     if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
     // repartition(1), NOT coalesce(1): coalesce folds the upstream
     // extraction into the single writer task (serializing the whole
@@ -418,16 +277,13 @@ object ZipExtract {
     * the part file out (buffered, so outputs larger than memory are fine,
     * cf. the reference's BufWriter comment src/main.rs:71). */
   def runToStream(spark: SparkSession, cfg: ZipToParquetConfig,
-      out: java.io.OutputStream,
-      rowProgress: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Unit = {
+      out: java.io.OutputStream): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stdout").toFile
     val file = new java.io.File(tmp, "out.parquet")
     try {
       // run() in singleFile mode yields a regular FILE at the path —
       // stream it straight out
-      run(spark, cfg.copy(output = file.getAbsolutePath, singleFile = true),
-        rowProgress)
+      run(spark, cfg.copy(output = file.getAbsolutePath, singleFile = true))
       val in = new java.io.BufferedInputStream(
         new java.io.FileInputStream(file), 1 << 16)
       try {
@@ -439,20 +295,5 @@ object ZipExtract {
     } finally {
       Option(tmp.listFiles()).foreach(_.foreach(_.delete())); tmp.delete()
     }
-  }
-}
-
-/** Minimal serializable wrapper for the Hadoop Configuration (the one in
-  * spark-core is private[spark]). */
-class SerializableConfiguration(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
   }
 }

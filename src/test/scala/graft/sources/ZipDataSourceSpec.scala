@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** DSv2 `format("zip")` (SURVEY.md §7.2 M3): results match the flatMap
-  * extractor, and — the point of the source — Catalyst pushes name/source
+/** DSv2 `format("zip")` (SURVEY.md §7.2 M3): results match
+  * `ZipExtract.entries` (a projection over this source), and — the point of the source — Catalyst pushes name/source
   * predicates and column pruning INTO the scan (asserted on the physical
   * plan, not just on results). */
 class ZipDataSourceSpec extends SparkSpec {
@@ -63,6 +63,15 @@ class ZipDataSourceSpec extends SparkSpec {
     assert(df.count() == 3)
     val txt = spark.read.format("zip").option("glob", "**/*.png").load(zip1, zip2)
     assert(txt.collect().map(_.getString(0)).toSeq == Seq("img/b.png"))
+  }
+
+  test("invalid entry glob raises typed InvalidGlob at load()") {
+    for (g <- Seq("a[bc", "[z-a]")) { // unclosed class; reversed range
+      val e = intercept[graft.zip.GraftError.GraftException] {
+        spark.read.format("zip").option("glob", g).load(zip1)
+      }
+      assert(e.err.isInstanceOf[graft.zip.GraftError.InvalidGlob], s"glob $g")
+    }
   }
 
   test("scan statistics come from the listing and track the projection") {

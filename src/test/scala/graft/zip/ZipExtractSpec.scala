@@ -118,6 +118,43 @@ class ZipExtractSpec extends SparkSpec {
         ZipToParquetConfig(inputs = Seq(zip1), entryGlob = Some("a[bc")))
     }
     assert(e.err.isInstanceOf[GraftError.InvalidGlob])
+    // translates, but is no valid regex (reversed range): still typed,
+    // still on the driver — never a PatternSyntaxException inside a task
+    val e2 = intercept[GraftError.GraftException] {
+      ZipExtract.entries(spark,
+        ZipToParquetConfig(inputs = Seq(zip1), entryGlob = Some("[z-a]")))
+    }
+    assert(e2.err.isInstanceOf[GraftError.InvalidGlob])
+  }
+
+  test("--no-body --no-hash scans neither body nor hash (body read elided)") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val df = ZipExtract.entries(spark, ZipToParquetConfig(inputs = Seq(zip1),
+      includeBody = false, includeHash = false))
+    val scanned = df.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.scan.readSchema().fieldNames.toSeq
+    }
+    assert(scanned == Seq(Seq("name", "source")), s"scan columns: $scanned")
+    assert(df.collect().forall(r => r.isNullAt(2) && r.isNullAt(3)))
+  }
+
+  test("countEntries' count() plan is the source's pushed COUNT(*)") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // Dataset.count() runs groupBy().count(); the exchange would make AQE
+    // hide the scan, so read the static plan
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val counted = ZipExtract.entries(spark, ZipToParquetConfig(inputs = Seq(zip1)))
+        .groupBy().count()
+      val scans = counted.queryExecution.executedPlan.collect {
+        case b: BatchScanExec => b.scan.description()
+      }
+      assert(scans.size == 1 && scans.head.contains("PushedAggregation=[COUNT(*)]"),
+        s"scans: $scans")
+      assert(counted.collect().head.getLong(0) == 2L)
+      assert(ZipExtract.countEntries(spark, ZipToParquetConfig(inputs = Seq(zip1))) == 2L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("run() writes snappy parquet readable back with identical rows") {
@@ -141,6 +178,24 @@ class ZipExtractSpec extends SparkSpec {
       s"temp dataset left behind: ${siblings.mkString(", ")}")
     assert(!siblings.contains(".out.parquet.crc"),
       "checksum litter next to the output file")
+  }
+
+  test("run() footer: the 4 schema columns in order, name required, the rest optional") {
+    import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
+    import scala.jdk.CollectionConverters._
+    val out = new File(dir, "footer.parquet").getAbsolutePath
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(zip1), output = out))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(out), spark.sparkContext.hadoopConfiguration))
+    val fields =
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
+        .map(f => (f.getName, f.getRepetition))
+      finally reader.close()
+    assert(fields == Seq("name" -> REQUIRED, "source" -> OPTIONAL,
+      "body" -> OPTIONAL, "hash" -> OPTIONAL))
+    assert(fields == ZipExtract.schema.fields.toSeq
+      .map(f => (f.name, if (f.nullable) OPTIONAL else REQUIRED)))
   }
 
   test("run(singleFile=false) writes the scalable multi-file directory layout") {
