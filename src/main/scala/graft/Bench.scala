@@ -133,6 +133,10 @@ object Bench {
     path
   }
 
+  /** Median time of [[anchorIoSetup]]'s scan. The ~300 MB file is
+    * resident in the OS page cache after the untimed warm-up read, so the
+    * timed reps measure page-cache reads plus column decode, not the
+    * disk: real device contention can leave this anchor flat. */
   private def anchorIoMedian(spark: SparkSession, path: String,
       reps: Int): Double = {
     import org.apache.spark.sql.functions._

@@ -2024,15 +2024,17 @@ object DedupOps {
     // #3): the md5-random level generated where it is joined, the
     // Lloyd-trained one the trainer's own bounded √K-row output as
     // LocalRelation data — no constant-folded array literal on any arm
-    val random1 = SimilarityOps.coarseFlatDf(s, k1)
-    val trained1 = SimilarityOps.oneRowFlatDf(s,
-      SimilarityOps.cosineFlatOfTrained(
-        SimilarityOps.lloydCodebook(
-          emb.select(col("vec_id"), col("embedding")), k1)))
-    def arm(coarse1: DataFrame, cb: String): DataFrame =
-      SimilarityOps.routedMeltAssign(samp, k, coarse1, k1, p1s)
+    val tflat = SimilarityOps.cosineFlatOfTrained(
+      SimilarityOps.lloydCodebook(emb.select(col("vec_id"), col("embedding")), k1))
+    // Lloyd can return fewer than k1 cells (a cell left empty by an
+    // iteration is dropped; seeding can find fewer than k1 vectors), so
+    // each arm's probe clamp is its own codebook's cell count
+    val nTrained = tflat.length / (SimilarityOps.Dim + 1)
+    def arm(coarse1: DataFrame, nCoarse: Int, cb: String): DataFrame =
+      SimilarityOps.routedMeltAssign(samp, k, coarse1, nCoarse, p1s)
         .select(lit(cb).as("cb"), col("p1"), col("vec_id"), col("cell"))
-    val assigned = arm(random1, "random").union(arm(trained1, "trained"))
+    val assigned = arm(SimilarityOps.coarseFlatDf(s, k1), k1, "random")
+      .union(arm(SimilarityOps.oneRowFlatDf(s, tflat), nTrained, "trained"))
     val rbase = assigned.join(v, Seq("vec_id"))
     val pairs = rbase.as("a")
       .join(rbase.as("b"),

@@ -2,10 +2,10 @@ package graft.sources
 
 import java.util
 import java.util.regex.Pattern
-import java.util.zip.{ZipEntry, ZipInputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -35,15 +35,16 @@ import graft.zip.{GlobRegex, GraftError, ZipExtract}
   *     are never copied out or hashed (and `source` misses skip whole
   *     archives unopened). `.explain` shows them under `PushedFilters`.
   *   - [[SupportsPushDownRequiredColumns]]: a projection without `body`
-  *     and `hash` elides the entry read — no body array, no SHA-256.
+  *     and `hash` elides the entry read — no body array, no SHA-256; a
+  *     `hash` without `body` streams the entry through SHA-256 and builds
+  *     no body array.
   *   - [[SupportsPushDownAggregates]]: a global COUNT(*) (the reference's
   *     count pass, src/builder.rs:24-41) collapses each partition to ONE
   *     row — no row materialization; Spark sums the per-archive partials.
   *
-  * None of these skip decompression: `ZipInputStream.getNextEntry` reads
-  * through (and inflates) every entry it passes over, so names-only,
-  * COUNT(*) and glob-miss scans still inflate every byte of the archive.
-  * Only a central-directory reader over a seekable stream would avoid that.
+  * Archives are read through their central directory ([[ZipArchive]]), so
+  * names-only, COUNT(*) and glob-miss scans read only the archive's tail
+  * and directory: no local header, no data byte, no inflate.
   *
   * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40)
   * and `maxBodyBytes` (per-entry scale guard, default 1 GiB).
@@ -51,7 +52,8 @@ import graft.zip.{GlobRegex, GraftError, ZipExtract}
   * splittable (central directory + contiguous entry streams), matching the
   * reference's one-task-per-zip grain (src/builder.rs:49-50,64). At 100 TB
   * the scan parallelism is the archive count; entries stream one at a time
-  * so task memory is bounded by one decompressed entry, never an archive.
+  * so task memory is bounded by the archive's central directory plus one
+  * decompressed entry, never the archive.
   */
 class ZipDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zip"
@@ -159,11 +161,11 @@ class ZipScanBuilder(table: ZipTable)
     ok
   }
 
-  /** Per-partition early termination: a task stops walking its archive
-    * after `n` emitted rows (no further decompression or even
-    * central-directory iteration). Returns false — the limit is only
-    * partially pushed (it bounds each partition, not the union), so Spark
-    * keeps its own global Limit on top. */
+  /** Per-partition early termination: a task stops walking its archive's
+    * directory after `n` emitted rows (no further entry is read). Returns
+    * false — the limit is only partially pushed (it bounds each
+    * partition, not the union), so Spark keeps its own global Limit on
+    * top. */
   override def pushLimit(n: Int): Boolean = {
     limit = n
     false
@@ -219,9 +221,9 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
   /** Output size estimate from the table's listing (no data read), so
     * Catalyst's join-side selection can treat a small zip scan as
     * broadcastable. It tracks the projection: a names-only scan emits
-    * little (taken as ~1% of archive bytes) even though its walk still
-    * inflates every entry; body/hash projections emit about the
-    * compressed bytes or more. */
+    * little (taken as ~1% of archive bytes) and reads only the
+    * directories; body/hash projections emit about the compressed bytes
+    * or more. */
   override def estimateStatistics(): Statistics = {
     val archiveBytes = table.archives.map(_.bytes).sum
     val needsRead = required.fieldNames.contains("body") ||
@@ -248,9 +250,11 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
     table.archives.filter(a => ZipFilterEval.sourceMayMatch(all, a.displayPath)).toArray
   }
 
+  /** The Hadoop conf rides one broadcast per scan (as Spark's own
+    * `FileScan` does), not a serialized copy in every task. */
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sparkContext.hadoopConfiguration)
+    val sc = SparkSession.active.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     if (countStar) ZipCountReaderFactory(conf, table.glob, filters)
     else ZipReaderFactory(conf, table.glob, filters, required.fieldNames, limit,
       table.maxBodyBytes)
@@ -271,12 +275,12 @@ object ZipEntriesRead {
 }
 
 /** Pushed-COUNT(*) reader: one row per archive carrying the number of
-  * glob/filter-matching entries — no entry is copied out or hashed, and no
-  * per-entry rows (the DSv2 form of the reference's count pass,
-  * src/builder.rs:24-41); the walk itself still inflates every entry. An
+  * glob/filter-matching entries, counted from the central directory — no
+  * local header or data byte is read and no per-entry rows are built (the
+  * DSv2 form of the reference's count pass, src/builder.rs:24-41). An
   * archive with no matches still emits its 0. */
 case class ZipCountReaderFactory(
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     glob: Option[Pattern],
     filters: Array[Filter]) extends PartitionReaderFactory {
 
@@ -288,15 +292,11 @@ case class ZipCountReaderFactory(
 
       override def next(): Boolean = {
         if (done) return false
-        val zin = ZipEntryWalk.open(part, conf)
-        var n = 0L
-        try {
-          // same walk as the row reader — count ≡ rows the row path emits
-          while (ZipEntryWalk.nextMatching(zin, glob, filters, part) != null) {
-            n += 1
-          }
-        } finally zin.close()
-        row = new GenericInternalRow(Array[Any](n))
+        val zip = ZipEntryWalk.open(part, conf.value.value)
+        // same predicate as the row reader — count ≡ rows the row path emits
+        val n = try zip.entries.count(ZipEntryWalk.emits(_, glob, filters, part))
+          finally zip.close()
+        row = new GenericInternalRow(Array[Any](n.toLong))
         done = true
         true
       }
@@ -312,7 +312,7 @@ case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long)
     extends InputPartition
 
 case class ZipReaderFactory(
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
@@ -321,15 +321,14 @@ case class ZipReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ZipInputPartition]
-    new ZipPartitionReader(p, conf, glob, filters, columns, limit,
+    new ZipPartitionReader(p, conf.value.value, glob, filters, columns, limit,
       maxBodyBytes)
   }
 }
 
-/** The archive walk both DSv2 readers share — open, the filter-matching
-  * entry iterator and the entry read. ONE definition of "which entries
-  * this scan emits", so the pushed-COUNT(*) path can never disagree with
-  * the row path about what counts as a row. */
+/** What both DSv2 readers share — opening an archive and the predicate
+  * for "which entries this scan emits" — so the pushed-COUNT(*) path can
+  * never disagree with the row path about what counts as a row. */
 private[sources] object ZipEntryWalk {
   /** Test observability: archives actually opened by the DSv2 readers.
     * Counting is OFF unless a test flips [[countOpens]] — production reads
@@ -339,77 +338,35 @@ private[sources] object ZipEntryWalk {
   val countOpens = new java.util.concurrent.atomic.AtomicBoolean(false)
   val opened = new java.util.concurrent.atomic.AtomicLong
 
-  /** Entry names decode as cp437 unless the entry's EFS flag says UTF-8 —
-    * the zip appnote's rule (APPNOTE 4.4.4/D.2), which
-    * `ZipInputStream(in, charset)` implements: the charset argument applies
-    * only to non-EFS entries. The reference's wax-glob path is lossy on
-    * non-UTF8 names; we decode them faithfully (documented divergence,
-    * SURVEY.md §7.6). */
-  private val EntryNameCharset = java.nio.charset.Charset.forName("IBM437")
-
-  def open(part: ZipInputPartition, conf: SerializableConfiguration): ZipInputStream =
-    try {
-      if (countOpens.get) opened.incrementAndGet()
-      val p = new Path(part.readPath)
-      val fs = p.getFileSystem(conf.value)
-      new ZipInputStream(new java.io.BufferedInputStream(fs.open(p), 1 << 16),
-        EntryNameCharset)
-    } catch { case e: java.io.IOException =>
-      // src/error.rs:5-8 — the archive itself is unreadable
-      GraftError.raise(GraftError.ReadFile(part.displayPath, e.toString))
-    }
-
-  /** Next entry this scan emits (directory-skipping, glob + pushed-filter
-    * matching), or null at end of archive. Errors carry the zip taxonomy. */
-  def nextMatching(zin: ZipInputStream, glob: Option[Pattern],
-      filters: Array[Filter], part: ZipInputPartition): ZipEntry = {
-    while (true) {
-      val e =
-        try zin.getNextEntry
-        catch { case scala.util.control.NonFatal(x) =>
-          // NonFatal (not just ZipException|IOException): JDK ZipCoder throws
-          // IllegalArgumentException on malformed UTF-8 entry names — those
-          // belong to the same GraftError.Zip contract (src/error.rs:13-16).
-          GraftError.raise(GraftError.Zip(part.displayPath, x.toString))
-        }
-      if (e == null) return null
-      if (!e.isDirectory &&
-          glob.forall(_.matcher(e.getName).matches()) &&
-          ZipFilterEval.matches(filters, e.getName, part.displayPath)) return e
-    }
-    null // unreachable
-  }
-
-  /** The current entry's bytes, failing typed past `maxBytes` (the scale
-    * guard: EntryTooLarge instead of an executor OOM) or mid-inflate. */
-  def readEntry(zin: ZipInputStream, maxBytes: Long, name: String,
-      zipPath: String): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(8192)
-    val buf = new Array[Byte](1 << 16)
-    try {
-      var n = zin.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > maxBytes)
-          GraftError.raise(GraftError.EntryTooLarge(name, zipPath, maxBytes))
-        n = zin.read(buf)
+  /** Open the archive and read its central directory (typed `ReadFile`
+    * when the file cannot be opened, `Zip` when it is no readable zip). */
+  def open(part: ZipInputPartition, conf: Configuration): ZipArchive = {
+    if (countOpens.get) opened.incrementAndGet()
+    val in =
+      try {
+        val p = new Path(part.readPath)
+        p.getFileSystem(conf).open(p)
+      } catch { case e: java.io.IOException =>
+        // src/error.rs:5-8 — the archive itself is unreadable
+        GraftError.raise(GraftError.ReadFile(part.displayPath, e.toString))
       }
-    } catch {
-      case g: GraftError.GraftException => throw g // EntryTooLarge from above
-      case scala.util.control.NonFatal(x) =>
-        // src/error.rs:17-21 — this entry's stream failed mid-inflate.
-        // NonFatal: inflater internals can throw beyond ZipException|IOException.
-        GraftError.raise(GraftError.ReadFileInZip(name, zipPath, x.toString))
-    }
-    out.toByteArray
+    ZipArchive.open(in, part.bytes, part.displayPath)
   }
+
+  /** Does this scan emit entry `e`? Directories never; then the glob and
+    * the pushed filters. */
+  def emits(e: ZipCdEntry, glob: Option[Pattern], filters: Array[Filter],
+      part: ZipInputPartition): Boolean =
+    !e.isDirectory &&
+      glob.forall(_.matcher(e.name).matches()) &&
+      ZipFilterEval.matches(filters, e.name, part.displayPath)
 }
 
 /** Streams one archive's entries as InternalRows, honoring pushed filters
   * (before the entry read) and the pruned projection (read elision). */
 class ZipPartitionReader(
     part: ZipInputPartition,
-    conf: SerializableConfiguration,
+    conf: Configuration,
     glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
@@ -421,31 +378,30 @@ class ZipPartitionReader(
   private val needBody = columns.contains("body")
   private val needHash = columns.contains("hash")
 
-  private val zin = ZipEntryWalk.open(part, conf)
+  private val zip = ZipEntryWalk.open(part, conf)
+  private var at = 0 // index of the next directory entry to consider
   private var current: InternalRow = _
   private var closed = false
 
   override def next(): Boolean = {
     current = null
-    if (limit >= 0 && emitted >= limit) {
-      if (!closed) { closed = true; zin.close() }
-      return false
-    }
     if (closed) return false
+    if (limit >= 0 && emitted >= limit) { close(); return false }
     // pushed name/source predicates run BEFORE the entry read — the DSv2
-    // form of src/builder.rs:180-183 (shared walk with the COUNT(*) path)
-    val e = ZipEntryWalk.nextMatching(zin, glob, filters, part)
-    if (e == null) { closed = true; zin.close(); return false }
-    var body: Array[Byte] = null
-    var hash: String = null
-    if (needBody || needHash) { // read elision: src/builder.rs:185
-      val bytes = ZipEntryWalk.readEntry(zin, maxBodyBytes, e.getName,
-        part.displayPath)
-      if (needHash) hash = ZipExtract.sha256Hex(bytes) // src/builder.rs:196-209
-      if (needBody) body = bytes                       // src/builder.rs:185-195
-    }
+    // form of src/builder.rs:180-183 (shared with the COUNT(*) path)
+    val entries = zip.entries
+    while (at < entries.length && !ZipEntryWalk.emits(entries(at), glob, filters, part))
+      at += 1
+    if (at == entries.length) { close(); return false }
+    val e = entries(at)
+    at += 1
+    // read elision: src/builder.rs:185; hash src/builder.rs:196-209, body
+    // src/builder.rs:185-195
+    val (body, hash) =
+      if (needBody || needHash) zip.read(e, needBody, needHash, maxBodyBytes)
+      else (null, null)
     val values = columns.map {
-      case "name" => UTF8String.fromString(e.getName)
+      case "name" => UTF8String.fromString(e.name)
       case "source" => UTF8String.fromString(part.displayPath)
       case "body" => body
       case "hash" => if (hash != null) UTF8String.fromString(hash) else null
@@ -465,7 +421,7 @@ class ZipPartitionReader(
     })
   }
 
-  override def close(): Unit = if (!closed) { closed = true; zin.close() }
+  override def close(): Unit = if (!closed) { closed = true; zip.close() }
 }
 
 /** Driver/executor-side evaluation of the pushed v1 filters over the two

@@ -110,19 +110,23 @@ object GraftError {
   * (src/builder.rs:49-50,64); a zip is not splittable (central directory +
   * per-entry streams). We deliberately do NOT use `format("binaryFile")`,
   * which materializes the whole archive as one row (2 GiB max, full copy in
-  * memory): instead tasks open a Hadoop `FileSystem` stream and decode with
-  * `ZipInputStream`, so memory per task is one *entry* body, not one
-  * archive — the same bound as the reference's streaming reads. On a
+  * memory): instead tasks open a Hadoop `FileSystem` stream, read the
+  * archive's central directory, and stream one entry at a time from its
+  * local header, so memory per task is the directory plus one *entry*
+  * body, not one archive — the reference's reader shape (it opens the
+  * archive by its directory, src/builder.rs:172-179). On a
   * 1000-executor cluster against 100 TB of zips this plan is a pure narrow
   * pipeline (list → extract → write), zero shuffles.
   *
   * Reference pushdowns reproduced (SURVEY.md §4.1):
   *   - name-glob filter applied BEFORE the entry read
-  *     (src/builder.rs:180-183): a non-matching entry is never copied out
-  *     or hashed. `getNextEntry` still reads through, and so inflates, it.
+  *     (src/builder.rs:180-183): the glob matches the central
+  *     directory's names, so a non-matching entry's data is never read,
+  *     inflated or hashed.
   *   - body read elided entirely when neither body nor hash is requested
-  *     (src/builder.rs:185); hash alone still forces the read
-  *     (hash ← body dependency, src/builder.rs:196-209).
+  *     (src/builder.rs:185); hash alone still reads and inflates the
+  *     entry (hash ← body dependency, src/builder.rs:196-209) but builds
+  *     no body array.
   */
 object ZipExtract {
 
@@ -166,9 +170,9 @@ object ZipExtract {
   /** O8/O14 parity — the reference's pre-extraction count pass
     * (src/builder.rs:24-45 walks entry NAMES to total the progress bar).
     * `count()` prunes every column, so the source's pushed COUNT(*) runs:
-    * no entry is copied out or hashed, though the walk still inflates
-    * every entry. The glob (and the rest of cfg) still applies: the count
-    * is exactly the rows the extraction will emit. */
+    * it counts central-directory records and reads no entry data, like
+    * the reference's `file_names()`. The glob (and the rest of cfg) still
+    * applies: the count is exactly the rows the extraction will emit. */
   def countEntries(spark: SparkSession, cfg: ZipToParquetConfig): Long =
     entries(spark, cfg).count()
 

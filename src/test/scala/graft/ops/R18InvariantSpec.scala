@@ -133,6 +133,31 @@ class R18InvariantSpec extends SparkSpec {
       b == c / k2h && b >= 0 && b < k1h && comps.size == 64 })
   }
 
+  test("recall melt survives a trained coarse codebook with fewer than " +
+      "K1 cells: each arm probes at most its own cell count") {
+    graft.GraftSession.init(spark)
+    val n = 2000L
+    val k1 = SimilarityOps.coarseCountFor(SimilarityOps.cellCountFor(n))
+    // a blobs corpus whose first K1 vectors are one planted exact
+    // duplicate: Lloyd seeds K1 equal centroids, ties send every vector
+    // to the lowest, and the empty cells are dropped after one iteration
+    val blobs = graft.ScaleGen.embeddings(spark, n, "blobs")
+    val v0 = blobs.filter(col("vec_id") === 0L).select("embedding").head().getSeq[Float](0)
+    val dir = java.nio.file.Files.createTempDirectory("meltfew").toString
+    blobs.withColumn("embedding",
+        when(col("vec_id") < k1, typedLit(v0)).otherwise(col("embedding")))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, dir)
+    val trained = SimilarityOps.lloydCodebook(emb, k1)
+    assert(trained.nonEmpty && trained.size < k1,
+      s"fixture must train fewer than $k1 coarse cells, got ${trained.size}")
+    val melt = DedupOps.nearDupRecallMelt(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+    val p1s = (Seq(2L, 4L, 8L) :+ k1.toLong).distinct
+    assert(melt.keySet == (for (cb <- Seq("random", "trained"); p <- p1s) yield (cb, p)).toSet,
+      s"every (codebook, P1) row must be present: ${melt.keySet}")
+  }
+
   private def bruteSample(emb: DataFrame): DataFrame = {
     val v = emb.filter(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"),

@@ -1,0 +1,221 @@
+package graft.sources
+
+import java.io.{ByteArrayOutputStream, File}
+import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.file.Files
+import java.util.zip.{CRC32, ZipEntry, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileSystem
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+import graft.SparkSpec
+import graft.zip.{GraftError, ZipExtract}
+
+/** The central-directory reader behind `format("zip")`: entry data is
+  * still checked (CRC, inflated size) when it is read, scans that need no
+  * entry body read only the archive's tail and directory, and the rows
+  * equal what `java.util.zip.ZipFile` reads from the same archives. */
+class ZipArchiveSpec extends SparkSpec {
+
+  private lazy val dir: File = {
+    val d = Files.createTempDirectory("graft_cd_spec").toFile
+    d.deleteOnExit()
+    d
+  }
+
+  private val Cp437 = Charset.forName("IBM437")
+
+  /** One entry to write: STORED entries carry their sizes and CRC up front
+    * (no data descriptor); DEFLATED ones are written with a data
+    * descriptor, as `ZipOutputStream` does. */
+  private case class Spec(name: String, body: Array[Byte], stored: Boolean)
+
+  private def zipBytes(entries: Seq[Spec], charset: Charset = StandardCharsets.UTF_8,
+      stub: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    bos.write(stub) // bytes in front: the recorded offsets do not count them
+    val z = new ZipOutputStream(bos, charset)
+    entries.foreach { s =>
+      val e = new ZipEntry(s.name)
+      if (s.stored) {
+        val crc = new CRC32
+        crc.update(s.body)
+        e.setMethod(ZipEntry.STORED)
+        e.setSize(s.body.length.toLong)
+        e.setCompressedSize(s.body.length.toLong)
+        e.setCrc(crc.getValue)
+      }
+      z.putNextEntry(e); z.write(s.body); z.closeEntry()
+    }
+    z.close()
+    bos.toByteArray
+  }
+
+  private def write(name: String, bytes: Array[Byte]): String = {
+    val f = new File(dir, name)
+    Files.write(f.toPath, bytes)
+    f.getAbsolutePath
+  }
+
+  private def le32(b: Array[Byte], i: Int): Long =
+    java.nio.ByteBuffer.wrap(b, i, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt & 0xFFFFFFFFL
+
+  /** Offset of the first central-directory record (archive without a
+    * comment: the end record is the last 22 bytes). */
+  private def cenStart(b: Array[Byte]): Int = le32(b, b.length - 22 + 16).toInt
+
+  private def typed(e: Throwable): Option[GraftError] = GraftError.unwrap(e)
+
+  private def names(path: String): Seq[String] =
+    spark.read.format("zip").load(path).select("name").collect().map(_.getString(0)).toSeq
+
+  test("a flipped byte in a STORED entry's data fails body and hash reads " +
+      "typed ReadFileInZip (CRC); names and COUNT(*) still read") {
+    val body = Array.tabulate[Byte](4000)(i => (i * 7).toByte)
+    val good = zipBytes(Seq(Spec("ok.txt", "fine".getBytes("UTF-8"), stored = true),
+      Spec("s.bin", body, stored = true)))
+    // STORED data is the body verbatim: find it past its local header
+    val at = good.indexOfSlice(body.take(64)) + 100
+    val bad = good.clone()
+    bad(at) = (bad(at) ^ 0x40).toByte
+    val path = write("crc_flip.zip", bad)
+    for (cols <- Seq(Seq("name", "body"), Seq("name", "hash"))) {
+      val e = intercept[Exception] {
+        spark.read.format("zip").load(path).select(cols.head, cols.tail: _*).collect()
+      }
+      typed(e) match {
+        case Some(GraftError.ReadFileInZip("s.bin", _, cause)) =>
+          assert(cause.contains("CRC"), s"$cols: $cause")
+        case other => fail(s"$cols: expected ReadFileInZip for s.bin, got $other ($e)")
+      }
+    }
+    // like the reference's file_names(), a names-only pass reads no data
+    assert(names(path) == Seq("ok.txt", "s.bin"))
+    assert(spark.read.format("zip").load(path).count() == 2L)
+  }
+
+  test("an entry whose declared size is smaller than its inflated bytes " +
+      "fails typed; names and COUNT(*) still read") {
+    val body = ("abcdefgh" * 2000).getBytes("UTF-8")
+    val good = zipBytes(Seq(Spec("big.txt", body, stored = false)))
+    val bad = good.clone()
+    val cen = cenStart(bad)
+    assert(le32(bad, cen) == 0x02014b50L && le32(bad, cen + 24) == body.length)
+    // declare 100 bytes fewer than the entry inflates to
+    val declared = body.length - 100
+    (0 until 4).foreach(i => bad(cen + 24 + i) = (declared >>> (8 * i)).toByte)
+    val path = write("short_size.zip", bad)
+    for (cols <- Seq(Seq("body"), Seq("hash"))) {
+      val e = intercept[Exception] {
+        spark.read.format("zip").load(path).select("name", cols: _*).collect()
+      }
+      typed(e) match {
+        case Some(GraftError.ReadFileInZip("big.txt", _, cause)) =>
+          assert(cause.contains("size"), s"$cols: $cause")
+        case other => fail(s"$cols: expected ReadFileInZip for big.txt, got $other ($e)")
+      }
+    }
+    assert(names(path) == Seq("big.txt"))
+    assert(spark.read.format("zip").load(path).count() == 1L)
+  }
+
+  test("a truncated archive with no end record fails typed Zip at open") {
+    val good = zipBytes((0 until 5).map(i => Spec(s"e$i", Array.fill[Byte](300)(i.toByte),
+      stored = i % 2 == 0)))
+    val path = write("no_end.zip", good.take(good.length - 30))
+    for (read <- Seq[() => Any](() => names(path),
+        () => spark.read.format("zip").load(path).count())) {
+      val e = intercept[Exception](read())
+      assert(typed(e).exists(_.isInstanceOf[GraftError.Zip]), s"got $e")
+    }
+  }
+
+  /** Bytes read so far through Hadoop's local (`file`) FileSystem. */
+  private def fsReadBytes(): Long =
+    FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
+
+  test("names-only, COUNT(*) and glob-miss scans read only the tail and " +
+      "the central directory") {
+    val rnd = new scala.util.Random(5)
+    val entries = (0 until 200).map { i =>
+      val b = new Array[Byte](20000)
+      rnd.nextBytes(b) // incompressible: the archive is about 4 MB
+      Spec(f"doc$i%03d.bin", b, stored = i % 3 == 0)
+    }
+    val bytes = zipBytes(entries)
+    val path = write("elide.zip", bytes)
+    val cenSize = le32(bytes, bytes.length - 22 + 12)
+    // the tail holds the longest end record and the ZIP64 records
+    val bound = math.min(bytes.length.toLong, 0xFFFFL + 22 + 20 + 56) + cenSize
+    def readOf(body: => Any): Long = {
+      val before = fsReadBytes()
+      body
+      fsReadBytes() - before
+    }
+    val reads = Seq(
+      "names" -> readOf(assert(names(path).size == 200)),
+      "count" -> readOf(assert(spark.read.format("zip").load(path).count() == 200L)),
+      "countEntries" -> readOf(assert(ZipExtract.countEntries(spark,
+        graft.zip.ZipToParquetConfig(inputs = Seq(path))) == 200L)),
+      "glob miss" -> readOf(assert(spark.read.format("zip").option("glob", "**/*.nomatch")
+        .load(path).collect().isEmpty)))
+    reads.foreach { case (what, n) =>
+      assert(n > 0 && n <= bound,
+        s"$what read $n bytes; the tail and directory are $bound of ${bytes.length}")
+    }
+    // the statistic counts entry reads too: a hash read covers the archive
+    val hashed = readOf(spark.read.format("zip").load(path).select("hash").collect())
+    assert(hashed >= bytes.length - bound, s"hash read only $hashed bytes")
+  }
+
+  test("property: format(zip) rows equal java.util.zip.ZipFile's, in order, " +
+      "with bytes and hashes") {
+    val nameChar = Gen.oneOf("abcxyzABC019_-.ñéüßç".toSeq)
+    val wideChar = Gen.oneOf("数据жλ".toSeq)
+    val bodyGen: Gen[Array[Byte]] = Gen.oneOf(
+      Gen.choose(0, 3000).flatMap(n => Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue))
+        .map(_.toArray)),
+      // compressible: DEFLATED shrinks it
+      Gen.zip(Gen.alphaStr, Gen.choose(1, 400)).map { case (s, k) => (s * k).getBytes("UTF-8") })
+    def entryGen(i: Int, cp437: Boolean): Gen[Spec] = for {
+      base <- Gen.listOfN(6, if (cp437) nameChar else Gen.frequency(4 -> nameChar, 1 -> wideChar))
+      kind <- Gen.choose(0, 9)
+      body <- bodyGen
+    } yield {
+      val name = s"$i/${base.mkString}"
+      if (kind == 0) Spec(name + "/", Array.emptyByteArray, stored = true) // directory
+      else Spec(name, body, stored = kind % 2 == 0)
+    }
+    val archiveGen = for {
+      cp437 <- Gen.oneOf(true, false) // cp437 names carry no EFS flag
+      n <- Gen.choose(1, 12)
+      entries <- Gen.sequence[List[Spec], Spec]((0 until n).map(entryGen(_, cp437)))
+      stub <- Gen.oneOf(Gen.const(0), Gen.choose(1, 5000)) // self-extracting stub
+    } yield (cp437, entries, Array.tabulate[Byte](stub)(i => (i * 31 + 7).toByte))
+    var trial = 0
+    val prop = Prop.forAll(archiveGen) { case (cp437, entries, stub) =>
+      trial += 1
+      val path = write(s"parity_$trial.zip",
+        zipBytes(entries, if (cp437) Cp437 else StandardCharsets.UTF_8, stub))
+      val zf = new ZipFile(new File(path), Cp437)
+      val want = try zf.entries().asScala.filterNot(_.isDirectory).map { e =>
+          val in = zf.getInputStream(e)
+          try (e.getName, in.readAllBytes()) finally in.close()
+        }.toList
+        finally zf.close()
+      val got = spark.read.format("zip").load(path).select("name", "body", "hash")
+        .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getString(2))).toList
+      got.map(_._1) == want.map(_._1) &&
+        got.zip(want).forall { case ((_, body, hash), (_, bytes)) =>
+          body.sameElements(bytes) && hash == ZipExtract.sha256Hex(bytes)
+        } &&
+        names(path) == want.map(_._1) &&
+        spark.read.format("zip").load(path).count() == want.size.toLong
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
+    assert(res.passed, s"parity property failed: ${res.status}")
+  }
+}
