@@ -1516,7 +1516,11 @@ object SimilarityOps {
       .select(col("cell"), col("bucket"), col("comps"),
         expr("aggregate(comps, CAST(0.0 AS DOUBLE), (a, x) -> a + x * x)")
           .as("cn"))
+    // KmIters > 0, so the returned relation is a checkpoint of its own:
+    // it no longer reaches withB or an earlier iteration's cents, whose
+    // blocks are released as soon as they are superseded
     for (_ <- 0 until KmIters) {
+      val prev = cents
       // embedding rides INSIDE the min-struct as a never-compared
       // payload ((d, cell) is unique per candidate set), so the
       // assignment + update stay ONE shuffle per iteration
@@ -1545,9 +1549,21 @@ object SimilarityOps {
           expr("aggregate(comps, CAST(0.0 AS DOUBLE), (a, x) -> a + x * x)")
             .as("cn"))
         .localCheckpoint()
+      // the eager checkpoint above is filled: the superseded one can go
+      releaseCheckpoint(prev)
     }
+    releaseCheckpoint(withB)
     cents
   }
+
+  /** Drop the blocks behind a `localCheckpoint`ed DataFrame (a no-op for
+    * a DataFrame that is not one). Only for checkpoints that nothing
+    * still to be computed reads. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = true)
+      case _ => ()
+    }
 
   /** Driver-side readout of [[hierCellsDf]] —
     * (k1, k2, cents(cell, bucket, comps, cn)) in ascending-cell order.

@@ -48,12 +48,17 @@ import graft.zip.{GlobRegex, GraftError, ZipExtract}
   *
   * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40)
   * and `maxBodyBytes` (per-entry scale guard, default 1 GiB).
-  * Partitioning: one [[InputPartition]] per archive — a zip is not
-  * splittable (central directory + contiguous entry streams), matching the
-  * reference's one-task-per-zip grain (src/builder.rs:49-50,64). At 100 TB
-  * the scan parallelism is the archive count; entries stream one at a time
-  * so task memory is bounded by the archive's central directory plus one
-  * decompressed entry, never the archive.
+  * Partitioning: one [[InputPartition]] per archive, except that a scan
+  * which reads entry data (`body` or `hash`) splits an archive larger than
+  * [[ZipScan.cutTarget]] into contiguous entry ranges of about equal
+  * compressed bytes. The central directory, read once on the driver, says
+  * where every entry starts, so a range task seeks straight to its first
+  * entry; the reference instead caps an archive at one thread
+  * (src/builder.rs:49-50,64). Names-only and COUNT(*) scans read only the
+  * directory and keep one task per archive. Rows come in archive order,
+  * then entry order. Entries stream one at a time, so task memory is
+  * bounded by the archive's central directory plus one decompressed
+  * entry, never the archive.
   */
 class ZipDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zip"
@@ -245,9 +250,44 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new ZipEntriesRead)
 
+  /** One partition per archive; when the scan reads entry data, an
+    * archive above [[ZipScan.cutTarget]] becomes several entry ranges (its
+    * central directory is read here, on the driver), or none when the
+    * glob and pushed filters leave it no entry. */
   override def planInputPartitions(): Array[InputPartition] = {
     val all = filters ++ runtimeFilters
-    table.archives.filter(a => ZipFilterEval.sourceMayMatch(all, a.displayPath)).toArray
+    table.archives.filter(a => ZipFilterEval.sourceMayMatch(all, a.displayPath))
+      .flatMap(a => if (readsData && a.bytes > cutTarget) planned.computeIfAbsent(a, split)
+        else Seq(a))
+      .toArray
+  }
+
+  private val readsData = !countStar &&
+    (required.fieldNames.contains("body") || required.fieldNames.contains("hash"))
+
+  // from the archives the pushed filters leave, so it does not move when a
+  // runtime filter prunes more
+  private lazy val cutTarget = ZipScan.cutTarget(
+    table.archives.filter(a => ZipFilterEval.sourceMayMatch(filters, a.displayPath))
+      .map(_.bytes).sum,
+    SparkSession.active.sparkContext.defaultParallelism)
+
+  /** Each split archive's ranges, kept for the life of the scan: Spark
+    * plans every copy of the scan node again, and a split reads the
+    * archive's directory. */
+  private val planned =
+    new java.util.concurrent.ConcurrentHashMap[ZipInputPartition, Seq[ZipInputPartition]]
+
+  private def split(a: ZipInputPartition): Seq[ZipInputPartition] = {
+    val zip = ZipEntryWalk.open(a, SparkSession.active.sparkContext.hadoopConfiguration)
+    val entries = try zip.entries finally zip.close()
+    val emits = entries.map(ZipEntryWalk.emits(_, table.glob, filters, a))
+    // entries this scan skips cost no data read: they weigh nothing
+    val ranges = ZipScan.cut(
+      entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L), cutTarget)
+    if (!emits.contains(true)) Seq.empty // no row to read: no task
+    else if (ranges.size <= 1) Seq(a)
+    else ranges.map { case (from, until) => a.copy(from = from, until = until) }
   }
 
   /** The Hadoop conf rides one broadcast per scan (as Spark's own
@@ -258,6 +298,51 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
     if (countStar) ZipCountReaderFactory(conf, table.glob, filters)
     else ZipReaderFactory(conf, table.glob, filters, required.fieldNames, limit,
       table.maxBodyBytes)
+  }
+}
+
+object ZipScan {
+  /** Test seam: when positive, replaces the derived cut target. */
+  @volatile private[sources] var cutTargetOverride: Long = 0L
+
+  /** Largest archive (listed bytes) a data-reading scan keeps as one
+    * partition, and the compressed bytes a split range aims at: half a
+    * core's even share of the scan's archives, so a skewed corpus still
+    * fills every core, but never below 1 MiB, where a task's fixed cost
+    * (opening the archive, reading its directory, starting a Parquet
+    * part) would outweigh its work. */
+  def cutTarget(totalBytes: Long, parallelism: Int): Long =
+    if (cutTargetOverride > 0) cutTargetOverride
+    else math.max(totalBytes / (2L * math.max(parallelism, 1)), 1L << 20)
+
+  /** Cut entries with these weights (compressed bytes, in directory
+    * order) into contiguous `[from, until)` index ranges that cover every
+    * entry. Each range is non-empty and weighs at most `target`, unless it
+    * is one entry that alone weighs more; ranges aim at an equal share of
+    * the total so the last one is not a sliver. */
+  def cut(weights: IndexedSeq[Long], target: Long): Seq[(Int, Int)] = {
+    val total = weights.sum
+    val n = math.max(1L, (total + target - 1) / target)
+    val aim = total / n
+    val out = Seq.newBuilder[(Int, Int)]
+    var from = 0
+    var sum = 0L // weight of [from, i)
+    var left = total // weight of [i, length)
+    var i = 0
+    while (i < weights.length) {
+      if (i > from && sum + weights(i) > target) {
+        out += ((from, i)); from = i; sum = 0L
+      }
+      sum += weights(i)
+      left -= weights(i)
+      i += 1
+      // trailing weightless entries join the last range
+      if (sum > 0 && sum >= aim && left > 0) {
+        out += ((from, i)); from = i; sum = 0L
+      }
+    }
+    if (from < weights.length) out += ((from, weights.length))
+    out.result()
   }
 }
 
@@ -274,11 +359,11 @@ object ZipEntriesRead {
   val Description = "zip entries read"
 }
 
-/** Pushed-COUNT(*) reader: one row per archive carrying the number of
-  * glob/filter-matching entries, counted from the central directory — no
-  * local header or data byte is read and no per-entry rows are built (the
-  * DSv2 form of the reference's count pass, src/builder.rs:24-41). An
-  * archive with no matches still emits its 0. */
+/** Pushed-COUNT(*) reader: one row per partition carrying the number of
+  * glob/filter-matching entries in its range, counted from the central
+  * directory — no local header or data byte is read and no per-entry rows
+  * are built (the DSv2 form of the reference's count pass,
+  * src/builder.rs:24-41). A partition with no matches still emits its 0. */
 case class ZipCountReaderFactory(
     conf: Broadcast[SerializableConfiguration],
     glob: Option[Pattern],
@@ -294,7 +379,8 @@ case class ZipCountReaderFactory(
         if (done) return false
         val zip = ZipEntryWalk.open(part, conf.value.value)
         // same predicate as the row reader — count ≡ rows the row path emits
-        val n = try zip.entries.count(ZipEntryWalk.emits(_, glob, filters, part))
+        val n = try part.range(zip).count(i => ZipEntryWalk.emits(zip.entries(i), glob,
+            filters, part))
           finally zip.close()
         row = new GenericInternalRow(Array[Any](n.toLong))
         done = true
@@ -307,9 +393,15 @@ case class ZipCountReaderFactory(
   }
 }
 
-/** One archive: the unit of partitioning. `bytes` is its listed length. */
-case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long)
-    extends InputPartition
+/** One archive, or the entries `[from, until)` of its central directory:
+  * the unit of partitioning. `bytes` is the archive's listed length. A
+  * whole archive has `until = Int.MaxValue`: its entry count is known
+  * only once a task reads the directory. */
+case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long,
+    from: Int = 0, until: Int = Int.MaxValue) extends InputPartition {
+  /** The directory indices this partition serves in `zip`. */
+  def range(zip: ZipArchive): Range = from until math.min(until, zip.entries.length)
+}
 
 case class ZipReaderFactory(
     conf: Broadcast[SerializableConfiguration],
@@ -362,7 +454,7 @@ private[sources] object ZipEntryWalk {
       ZipFilterEval.matches(filters, e.name, part.displayPath)
 }
 
-/** Streams one archive's entries as InternalRows, honoring pushed filters
+/** Streams one partition's entries as InternalRows, honoring pushed filters
   * (before the entry read) and the pruned projection (read elision). */
 class ZipPartitionReader(
     part: ZipInputPartition,
@@ -379,7 +471,8 @@ class ZipPartitionReader(
   private val needHash = columns.contains("hash")
 
   private val zip = ZipEntryWalk.open(part, conf)
-  private var at = 0 // index of the next directory entry to consider
+  private val end = part.range(zip).end
+  private var at = part.from // index of the next directory entry to consider
   private var current: InternalRow = _
   private var closed = false
 
@@ -390,9 +483,9 @@ class ZipPartitionReader(
     // pushed name/source predicates run BEFORE the entry read — the DSv2
     // form of src/builder.rs:180-183 (shared with the COUNT(*) path)
     val entries = zip.entries
-    while (at < entries.length && !ZipEntryWalk.emits(entries(at), glob, filters, part))
+    while (at < end && !ZipEntryWalk.emits(entries(at), glob, filters, part))
       at += 1
-    if (at == entries.length) { close(); return false }
+    if (at >= end) { close(); return false }
     val e = entries(at)
     at += 1
     // read elision: src/builder.rs:185; hash src/builder.rs:196-209, body

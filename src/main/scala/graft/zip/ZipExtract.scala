@@ -2,7 +2,7 @@ package graft.zip
 
 import java.security.MessageDigest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -105,18 +105,21 @@ object GraftError {
   * src/builder.rs:23-119), served by the one zip reader, the DSv2
   * `format("zip")` source (`graft.sources.ZipDataSource`).
   *
-  * Scale design: the unit of parallelism is one Spark task per zip archive —
-  * the same granularity as the reference's one-thread-per-zip pool
-  * (src/builder.rs:49-50,64); a zip is not splittable (central directory +
-  * per-entry streams). We deliberately do NOT use `format("binaryFile")`,
-  * which materializes the whole archive as one row (2 GiB max, full copy in
-  * memory): instead tasks open a Hadoop `FileSystem` stream, read the
-  * archive's central directory, and stream one entry at a time from its
-  * local header, so memory per task is the directory plus one *entry*
-  * body, not one archive — the reference's reader shape (it opens the
-  * archive by its directory, src/builder.rs:172-179). On a
+  * Scale design: the unit of parallelism is one Spark task per zip archive,
+  * the reference's one-thread-per-zip grain (src/builder.rs:49-50,64),
+  * except that a read of entry data splits a large archive into entry
+  * ranges cut from its central directory, so one big archive no longer
+  * holds the whole scan on one core. We deliberately do NOT use
+  * `format("binaryFile")`, which materializes the whole archive as one row
+  * (2 GiB max, full copy in memory): instead tasks open a Hadoop
+  * `FileSystem` stream, read the archive's central directory, and stream
+  * one entry at a time from its local header, so memory per task is the
+  * directory plus one *entry* body, not one archive — the reference's
+  * reader shape (it opens the archive by its directory,
+  * src/builder.rs:172-179). On a
   * 1000-executor cluster against 100 TB of zips this plan is a pure narrow
-  * pipeline (list → extract → write), zero shuffles.
+  * pipeline (list → extract → write), zero shuffles, also when [[run]]
+  * writes a single file.
   *
   * Reference pushdowns reproduced (SURVEY.md §4.1):
   *   - name-glob filter applied BEFORE the entry read
@@ -149,9 +152,10 @@ object ZipExtract {
     ZipTable.list(spark, patterns).map(a => (a.readPath, a.displayPath))
 
   /** The extractor: `format("zip")` projected to the fixed 4-column layout,
-    * one task per archive. A column whose flag is off is a typed NULL
-    * literal, so column pruning keeps it out of the scan: with neither body
-    * nor hash the entry read is elided. The glob and the inputs are checked
+    * one task per archive or, for a large archive, per entry range. A
+    * column whose flag is off is a typed NULL literal, so column pruning
+    * keeps it out of the scan: with neither body nor hash the entry read
+    * is elided. The glob and the inputs are checked
     * here, on the driver (typed InvalidGlob / NoInputsFound, B4). */
   def entries(spark: SparkSession, cfg: ZipToParquetConfig): DataFrame = {
     val reader = spark.read.format("zip").option("maxBodyBytes", cfg.maxBodyBytes)
@@ -187,11 +191,17 @@ object ZipExtract {
     * (reference sink: src/builder.rs:232-278). `singleFile=true` mirrors the
     * reference's one-output-FILE contract exactly: `-o PATH` yields a
     * regular parquet file at PATH (src/builder.rs:232-278 opens one
-    * `File`), not a Spark part-file directory — the dataset is written to a
-    * sibling temp directory with one part file, and that part is promoted
-    * to PATH by an O(1) rename. Fine at parity scale, NOT the default you
-    * want at 100 TB (pass singleFile=false to write a many-file directory
-    * and let the reader glob it).
+    * `File`), not a Spark part-file directory. The reference feeds N
+    * producers into one writer (src/builder.rs:52-75); here every scan task
+    * writes its own Parquet part to a sibling temp directory, with no
+    * exchange, and the parts become the one file: a single part by an O(1)
+    * rename, several by [[ParquetStitch]], which copies their row groups
+    * byte for byte and merges their footers. The file then has each part's
+    * row groups in turn, so a part's last group can be short; values and
+    * row order are those of [[entries]]. The stitch still copies every
+    * byte once on the driver: NOT the default you want at 100 TB (pass
+    * singleFile=false to write a many-file directory and let the reader
+    * glob it).
     * Row-group sizing (reference `--row-group-size`, src/main.rs:41-43,
     * enforced by src/builder.rs:254 `set_max_row_group_size`): parquet-mr's
     * `parquet.block.row.count.limit` is the same rows-per-group ceiling, so
@@ -203,12 +213,6 @@ object ZipExtract {
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
     val df0 = entries(spark, cfg)
     if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
-    // repartition(1), NOT coalesce(1): coalesce folds the upstream
-    // extraction into the single writer task (serializing the whole
-    // pipeline — observed 5x slower); repartition keeps one task per
-    // archive and funnels rows to one writer through an exchange — the
-    // same N-producers/1-consumer topology as the reference's channel
-    // (src/builder.rs:52-75).
     val outPath = new Path(cfg.output)
     val fs =
       try outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -220,37 +224,65 @@ object ZipExtract {
     val tmp = new Path(cfg.output + ".graft-tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
     try {
-      writeParquetDir(df0.repartition(1), cfg, tmp.toString)
-      try {
-        val part = Option(fs.globStatus(new Path(tmp, "part-*")))
-          .getOrElse(Array.empty).headOption.getOrElse(
-            GraftError.raise(GraftError.WriteFile(cfg.output,
-              "single-file write produced no part file")))
-        // mode("overwrite") contract: replace whatever sits at PATH (file
-        // or a directory from a previous multi-file run). Delete through
-        // the CHECKSUMMED fs so a local .crc sibling of the old target
-        // goes with it, then rename through the RAW fs so the temp part's
-        // .crc stays behind in tmp (swept below) instead of appearing as
-        // litter next to the user's output file.
-        if (fs.exists(outPath)) fs.delete(outPath, true)
-        val rawFs = fs match {
-          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-          case other => other
-        }
-        if (!rawFs.rename(part.getPath, outPath))
-          GraftError.raise(GraftError.WriteFile(cfg.output,
-            s"rename ${part.getPath} -> $outPath failed"))
-      } catch {
-        case e: GraftError.GraftException => throw e
-        case e: java.io.IOException =>
-          GraftError.raise(GraftError.WriteFile(cfg.output, e.toString))
-      }
+      // no exchange: every scan task (an archive or an entry range of
+      // one) encodes its own part, in parallel
+      writeParquetDir(df0, cfg, tmp.toString)
+      promote(fs, tmp, outPath, cfg.output)
     } finally {
-      // tmp holds only the committer droppings (_SUCCESS, .crc) after a
-      // successful promote — and the partial dataset after a failure.
+      // tmp holds only the committer droppings (_SUCCESS, .crc) and the
+      // parts after a successful promote — and the partial dataset after
+      // a failure.
       try fs.delete(tmp, true) catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Spark's part files in `dir`, in row order: by the partition index in
+    * `part-NNNNN-…`, then the `cNNN` file counter. */
+  private[zip] def partFiles(fs: FileSystem, dir: Path): Seq[Path] = {
+    val PartName = raw"part-(\d+)-.*-c(\d+)(\..*)?".r
+    Option(fs.listStatus(dir)).getOrElse(Array.empty).toSeq.map(_.getPath)
+      .flatMap(p => p.getName match {
+        case PartName(part, file, _) => Some((part.toLong, file.toLong, p))
+        case _ => None
+      })
+      .sortBy(t => (t._1, t._2)).map(_._3)
+  }
+
+  /** Make the parts in `tmp` the one file at `outPath`: one part is
+    * renamed; several are stitched ([[ParquetStitch]]) into a file inside
+    * `tmp`, which is then renamed, so a failed stitch leaves nothing at
+    * `outPath`. Spark always writes partition 0, so an empty result is
+    * still one (zero-row-group) part. */
+  private[zip] def promote(fs: FileSystem, tmp: Path, outPath: Path, output: String): Unit =
+    try {
+      // rename and stitch through the RAW fs: the parts' .crc files stay
+      // behind in tmp (swept by the caller) instead of appearing as
+      // litter next to the user's output file
+      val rawFs = fs match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+        case other => other
+      }
+      val single = partFiles(fs, tmp) match {
+        case Seq() => GraftError.raise(GraftError.WriteFile(output,
+          "single-file write produced no part file"))
+        case Seq(part) => part
+        case parts =>
+          val stitched = new Path(tmp, "stitched.parquet")
+          ParquetStitch(rawFs, parts, stitched)
+          stitched
+      }
+      // mode("overwrite") contract: replace whatever sits at PATH (file
+      // or a directory from a previous multi-file run). Delete through
+      // the CHECKSUMMED fs so a local .crc sibling of the old target
+      // goes with it.
+      if (fs.exists(outPath)) fs.delete(outPath, true)
+      if (!rawFs.rename(single, outPath))
+        GraftError.raise(GraftError.WriteFile(output, s"rename $single -> $outPath failed"))
+    } catch {
+      case e: GraftError.GraftException => throw e
+      case e: java.io.IOException =>
+        GraftError.raise(GraftError.WriteFile(output, e.toString))
+    }
 
   private def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,
       target: String): Unit = {

@@ -117,6 +117,23 @@ class R19InvariantSpec extends SparkSpec {
     }
   }
 
+  test("hierCellsDf keeps only the returned centroid relation's blocks: " +
+      "the bucketed corpus and every superseded iteration are released") {
+    graft.GraftSession.init(spark)
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
+      .select(col("vec_id"), col("embedding"))
+    val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cents = SimilarityOps.hierCellsDf(emb, k)
+    assert(cents.collect().nonEmpty)
+    val added = sc.getPersistentRDDs.keySet -- before
+    // the bucketed corpus and each of the KmIters iterations are
+    // checkpointed; only the returned relation's blocks may stay
+    assert(added.size == 1, s"persisted RDDs added: ${added.size}")
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
   private def pairKey(df: DataFrame): Set[(Long, Long, Double)] =
     df.select("a_id", "b_id", "cosine").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

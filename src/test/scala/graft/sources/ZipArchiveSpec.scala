@@ -170,8 +170,10 @@ class ZipArchiveSpec extends SparkSpec {
     assert(hashed >= bytes.length - bound, s"hash read only $hashed bytes")
   }
 
-  test("property: format(zip) rows equal java.util.zip.ZipFile's, in order, " +
-      "with bytes and hashes") {
+  /** The parity property over 25 seeded archives. With `split`, every
+    * data-reading scan cuts each archive with two or more data-bearing
+    * entries into entry ranges, and the property checks that it did. */
+  private def parity(split: Boolean): SCTest.Result = {
     val nameChar = Gen.oneOf("abcxyzABC019_-.ñéüßç".toSeq)
     val wideChar = Gen.oneOf("数据жλ".toSeq)
     val bodyGen: Gen[Array[Byte]] = Gen.oneOf(
@@ -197,7 +199,7 @@ class ZipArchiveSpec extends SparkSpec {
     var trial = 0
     val prop = Prop.forAll(archiveGen) { case (cp437, entries, stub) =>
       trial += 1
-      val path = write(s"parity_$trial.zip",
+      val path = write(s"parity_${if (split) "split_" else ""}$trial.zip",
         zipBytes(entries, if (cp437) Cp437 else StandardCharsets.UTF_8, stub))
       val zf = new ZipFile(new File(path), Cp437)
       val want = try zf.entries().asScala.filterNot(_.isDirectory).map { e =>
@@ -207,15 +209,115 @@ class ZipArchiveSpec extends SparkSpec {
         finally zf.close()
       val got = spark.read.format("zip").load(path).select("name", "body", "hash")
         .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getString(2))).toList
+      val dataEntries = want.count(_._2.nonEmpty)
       got.map(_._1) == want.map(_._1) &&
         got.zip(want).forall { case ((_, body, hash), (_, bytes)) =>
           body.sameElements(bytes) && hash == ZipExtract.sha256Hex(bytes)
         } &&
         names(path) == want.map(_._1) &&
-        spark.read.format("zip").load(path).count() == want.size.toLong
+        spark.read.format("zip").load(path).count() == want.size.toLong &&
+        (!split || dataEntries < 2 || partitions(spark.read.format("zip").load(path)
+          .select("name", "hash")).size >= 2)
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25)
+    SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25)
       .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
+  }
+
+  /** Run `body` with every data-reading scan cutting archives at `bytes`. */
+  private def withCutTarget[T](bytes: Long)(body: => T): T = {
+    ZipScan.cutTargetOverride = bytes
+    try body finally ZipScan.cutTargetOverride = 0L
+  }
+
+  private def partitions(df: org.apache.spark.sql.DataFrame): Seq[ZipInputPartition] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.flatMap(_.toBatch.planInputPartitions().map(_.asInstanceOf[ZipInputPartition]))
+
+  test("property: format(zip) rows equal java.util.zip.ZipFile's, in order, " +
+      "with bytes and hashes") {
+    val res = parity(split = false)
     assert(res.passed, s"parity property failed: ${res.status}")
+  }
+
+  test("property: the same parity holds when every archive is split into " +
+      "entry ranges") {
+    val res = withCutTarget(1L)(parity(split = true))
+    assert(res.passed, s"split parity property failed: ${res.status}")
+  }
+
+  test("cut: contiguous non-empty ranges that cover every entry, none above " +
+      "the target unless it is one entry") {
+    val prop = Prop.forAll(Gen.listOf(Gen.frequency(1 -> Gen.const(0L),
+        6 -> Gen.choose(1L, 5000L), 1 -> Gen.choose(5000L, 50000L))),
+      Gen.choose(1L, 20000L)) { (ws, target) =>
+      val weights = ws.toIndexedSeq
+      val ranges = ZipScan.cut(weights, target)
+      val covered = ranges.flatMap { case (from, until) => from until until }
+      covered == weights.indices &&
+        ranges.forall { case (from, until) => from < until } &&
+        ranges.forall { case (from, until) =>
+          until - from == 1 || weights.slice(from, until).sum <= target
+        }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(res.passed, s"cut property failed: ${res.status}")
+    // equal shares, not a greedy fill that leaves a sliver
+    assert(ZipScan.cut(IndexedSeq.fill(10)(10L), 60L) == Seq((0, 5), (5, 10)))
+    assert(ZipScan.cut(IndexedSeq(5L, 100L, 5L), 50L) == Seq((0, 1), (1, 2), (2, 3)))
+    assert(ZipScan.cut(IndexedSeq(0L, 0L, 0L), 50L) == Seq((0, 3)))
+    assert(ZipScan.cut(IndexedSeq.empty, 50L).isEmpty)
+  }
+
+  test("a split archive answers COUNT(*), glob, LIMIT and names-only like " +
+      "the whole archive, and its ranges' entries-read metric sums to the " +
+      "entry count") {
+    val rnd = new scala.util.Random(11)
+    val entries = (0 until 60).map { i =>
+      val b = new Array[Byte](500 + rnd.nextInt(4000))
+      rnd.nextBytes(b)
+      Spec(f"d${i % 3}/e$i%02d.${if (i % 4 == 0) "txt" else "bin"}", b, stored = i % 2 == 0)
+    }
+    val path = write("ranges.zip", zipBytes(entries))
+    def load(glob: Option[String] = None) = {
+      val r = spark.read.format("zip")
+      glob.fold(r)(r.option("glob", _)).load(path)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    def answers() = (
+      rows(load().select("name", "hash")),
+      rows(load(Some("**/*.txt")).select("name", "hash")),
+      rows(load().select("name", "hash").limit(7)),
+      load().select("name").collect().map(_.getString(0)).toSeq,
+      load().count(),
+      load(Some("**/*.txt")).count())
+    val whole = answers()
+    assert(partitions(load().select("name", "hash")).size == 1)
+    withCutTarget(20000L) {
+      val ranges = partitions(load().select("name", "hash"))
+      assert(ranges.size >= 4, s"only ${ranges.size} ranges")
+      assert(ranges.map(_.from).head == 0 && ranges.last.until == 60 &&
+        ranges.zip(ranges.tail).forall { case (a, b) => a.until == b.from })
+      assert(answers() == whole)
+      assert(whole._1.size == 60 && whole._2.size == 15 && whole._3 == whole._1.take(7))
+      // the entries-read metric, summed over the range tasks
+      val df = load().select("name", "body")
+      assert(df.collect().length == 60)
+      val read = df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.metrics(ZipEntriesRead.Name).value
+      }
+      assert(read == Seq(60L), s"entries read: $read")
+      // the pushed COUNT(*) reader serves only its range too
+      val conf = spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      val counts = ranges.map { p =>
+        val r = ZipCountReaderFactory(conf, None, Array.empty).createReader(p)
+        try { assert(r.next()); r.get().getLong(0) } finally r.close()
+      }
+      assert(counts.sum == 60L && counts.forall(_ > 0), s"range counts: $counts")
+    }
   }
 }
