@@ -38,27 +38,31 @@ import graft.zip.{GlobRegex, GraftError, ZipExtract}
   *     and `hash` elides the entry read — no body array, no SHA-256; a
   *     `hash` without `body` streams the entry through SHA-256 and builds
   *     no body array.
-  *   - [[SupportsPushDownAggregates]]: a global COUNT(*) (the reference's
-  *     count pass, src/builder.rs:24-41) collapses each partition to ONE
-  *     row — no row materialization; Spark sums the per-archive partials.
+  *
+  * `source` also takes runtime filters ([[SupportsRuntimeFiltering]]).
+  * Aggregates and limits stay with Spark: a COUNT(*) (the reference's
+  * count pass, src/builder.rs:24-41) prunes every column, so its scan
+  * emits empty rows and reads no entry, and a LIMIT stops pulling rows,
+  * so no entry past the last row it takes is read.
   *
   * Archives are read through their central directory ([[ZipArchive]]), so
   * names-only, COUNT(*) and glob-miss scans read only the archive's tail
   * and directory: no local header, no data byte, no inflate.
   *
   * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40)
-  * and `maxBodyBytes` (per-entry scale guard, default 1 GiB).
+  * and `maxBodyBytes` (per-entry scale guard, a non-negative integer,
+  * default 1 GiB).
   * Partitioning: one [[InputPartition]] per archive, except that a scan
   * which reads entry data (`body` or `hash`) splits an archive larger than
   * [[ZipScan.cutTarget]] into contiguous entry ranges of about equal
   * compressed bytes. The central directory, read once on the driver, says
   * where every entry starts, so a range task seeks straight to its first
   * entry; the reference instead caps an archive at one thread
-  * (src/builder.rs:49-50,64). Names-only and COUNT(*) scans read only the
-  * directory and keep one task per archive. Rows come in archive order,
-  * then entry order. Entries stream one at a time, so task memory is
-  * bounded by the archive's central directory plus one decompressed
-  * entry, never the archive.
+  * (src/builder.rs:49-50,64). Scans of no data column (names-only,
+  * COUNT(*)) read only the directory and keep one task per archive. Rows
+  * come in archive order, then entry order. Entries stream one at a time,
+  * so task memory is bounded by the archive's central directory plus one
+  * decompressed entry, never the archive.
   */
 class ZipDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zip"
@@ -93,7 +97,10 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
     }
   }
   private[sources] val maxBodyBytes: Long =
-    Option(options.get("maxBodyBytes")).map(_.toLong).getOrElse(1L << 30)
+    Option(options.get("maxBodyBytes")).fold(1L << 30) { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse(GraftError.raise(GraftError.InvalidArgument(
+        s"option maxBodyBytes expects a non-negative integer, got '$v'")))
+    }
   private[sources] val archives: Seq[ZipInputPartition] =
     ZipTable.list(SparkSession.active, paths)
 
@@ -139,42 +146,10 @@ object ZipTable {
 class ZipScanBuilder(table: ZipTable)
     extends ScanBuilder
     with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit
-    with SupportsPushDownAggregates {
+    with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ZipExtract.schema
-  private var limit: Int = -1
-  private var countStar = false
-
-  /** Accept exactly a global COUNT(*) — grouped or column aggregates keep
-    * their row-stream semantics with Spark. Partial pushdown: each archive
-    * partition emits its own count and Spark's final aggregate sums them
-    * (so `supportCompletePushDown` stays false). */
-  override def pushAggregation(
-      aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    val ok = limit < 0 &&
-      aggregation.groupByExpressions.isEmpty &&
-      aggregation.aggregateExpressions.length == 1 &&
-      aggregation.aggregateExpressions()(0)
-        .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar]
-    if (ok) {
-      countStar = true
-      required = StructType(Seq(StructField("count(*)", LongType, nullable = false)))
-    }
-    ok
-  }
-
-  /** Per-partition early termination: a task stops walking its archive's
-    * directory after `n` emitted rows (no further entry is read). Returns
-    * false — the limit is only partially pushed (it bounds each
-    * partition, not the union), so Spark keeps its own global Limit on
-    * top. */
-  override def pushLimit(n: Int): Boolean = {
-    limit = n
-    false
-  }
 
   /** Accept any deterministic filter that references only `name`/`source` —
     * those evaluate before the entry read inside the scan. Everything else
@@ -194,16 +169,17 @@ class ZipScanBuilder(table: ZipTable)
     required = requiredSchema
   }
 
-  override def build(): Scan =
-    new ZipScan(table, pushed, required, limit, countStar)
+  override def build(): Scan = new ZipScan(table, pushed, required)
 }
 
-class ZipScan(table: ZipTable, filters: Array[Filter],
-    required: StructType, limit: Int = -1, countStar: Boolean = false)
+class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  private val readsData =
+    required.fieldNames.contains("body") || required.fieldNames.contains("hash")
 
   /** Runtime (execution-time) filtering on `source` — the archive axis.
     * A broadcast join against a small manifest (the ingest-dedup story:
@@ -231,9 +207,7 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
     * or more. */
   override def estimateStatistics(): Statistics = {
     val archiveBytes = table.archives.map(_.bytes).sum
-    val needsRead = required.fieldNames.contains("body") ||
-      required.fieldNames.contains("hash")
-    val estimate = if (needsRead) archiveBytes else math.max(archiveBytes / 100, 1)
+    val estimate = if (readsData) archiveBytes else math.max(archiveBytes / 100, 1)
     new Statistics {
       override def sizeInBytes: java.util.OptionalLong =
         java.util.OptionalLong.of(estimate)
@@ -243,48 +217,34 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
   }
   override def description(): String =
     s"ZipScan(glob=${table.globText.getOrElse("*")}, " +
-      s"pushed=[${filters.mkString(", ")}], cols=${required.fieldNames.mkString(",")}" +
-      (if (limit >= 0) s", limit=$limit" else "") +
-      (if (countStar) ", PushedAggregation=[COUNT(*)]" else "") + ")"
+      s"pushed=[${filters.mkString(", ")}], cols=${required.fieldNames.mkString(",")})"
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new ZipEntriesRead)
 
-  /** One partition per archive; when the scan reads entry data, an
-    * archive above [[ZipScan.cutTarget]] becomes several entry ranges (its
-    * central directory is read here, on the driver), or none when the
-    * glob and pushed filters leave it no entry. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val all = filters ++ runtimeFilters
-    table.archives.filter(a => ZipFilterEval.sourceMayMatch(all, a.displayPath))
-      .flatMap(a => if (readsData && a.bytes > cutTarget) planned.computeIfAbsent(a, split)
-        else Seq(a))
-      .toArray
+  /** The scan's partitions before runtime filtering, made once because
+    * Spark plans every copy of the scan node again: one per archive the
+    * pushed filters keep, except that a scan which reads entry data splits
+    * an archive above [[ZipScan.cutTarget]] into entry ranges (its central
+    * directory is read here, on the driver), or drops it when the glob and
+    * pushed filters leave it no entry. */
+  private lazy val plan: Seq[ZipInputPartition] = {
+    val kept = table.archives.filter(a => ZipFilterEval.sourceMayMatch(filters, a.displayPath))
+    lazy val target = ZipScan.cutTarget(kept.map(_.bytes).sum,
+      SparkSession.active.sparkContext.defaultParallelism)
+    kept.flatMap(a => if (readsData && a.bytes > target) split(a, target) else Seq(a))
   }
 
-  private val readsData = !countStar &&
-    (required.fieldNames.contains("body") || required.fieldNames.contains("hash"))
+  override def planInputPartitions(): Array[InputPartition] =
+    plan.filter(a => ZipFilterEval.sourceMayMatch(runtimeFilters, a.displayPath)).toArray
 
-  // from the archives the pushed filters leave, so it does not move when a
-  // runtime filter prunes more
-  private lazy val cutTarget = ZipScan.cutTarget(
-    table.archives.filter(a => ZipFilterEval.sourceMayMatch(filters, a.displayPath))
-      .map(_.bytes).sum,
-    SparkSession.active.sparkContext.defaultParallelism)
-
-  /** Each split archive's ranges, kept for the life of the scan: Spark
-    * plans every copy of the scan node again, and a split reads the
-    * archive's directory. */
-  private val planned =
-    new java.util.concurrent.ConcurrentHashMap[ZipInputPartition, Seq[ZipInputPartition]]
-
-  private def split(a: ZipInputPartition): Seq[ZipInputPartition] = {
+  private def split(a: ZipInputPartition, target: Long): Seq[ZipInputPartition] = {
     val zip = ZipEntryWalk.open(a, SparkSession.active.sparkContext.hadoopConfiguration)
     val entries = try zip.entries finally zip.close()
     val emits = entries.map(ZipEntryWalk.emits(_, table.glob, filters, a))
     // entries this scan skips cost no data read: they weigh nothing
     val ranges = ZipScan.cut(
-      entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L), cutTarget)
+      entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L), target)
     if (!emits.contains(true)) Seq.empty // no row to read: no task
     else if (ranges.size <= 1) Seq(a)
     else ranges.map { case (from, until) => a.copy(from = from, until = until) }
@@ -295,9 +255,7 @@ class ZipScan(table: ZipTable, filters: Array[Filter],
   override def createReaderFactory(): PartitionReaderFactory = {
     val sc = SparkSession.active.sparkContext
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    if (countStar) ZipCountReaderFactory(conf, table.glob, filters)
-    else ZipReaderFactory(conf, table.glob, filters, required.fieldNames, limit,
-      table.maxBodyBytes)
+    ZipReaderFactory(conf, table.glob, filters, required.fieldNames, table.maxBodyBytes)
   }
 }
 
@@ -359,81 +317,33 @@ object ZipEntriesRead {
   val Description = "zip entries read"
 }
 
-/** Pushed-COUNT(*) reader: one row per partition carrying the number of
-  * glob/filter-matching entries in its range, counted from the central
-  * directory — no local header or data byte is read and no per-entry rows
-  * are built (the DSv2 form of the reference's count pass,
-  * src/builder.rs:24-41). A partition with no matches still emits its 0. */
-case class ZipCountReaderFactory(
-    conf: Broadcast[SerializableConfiguration],
-    glob: Option[Pattern],
-    filters: Array[Filter]) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[ZipInputPartition]
-    new PartitionReader[InternalRow] {
-      private var done = false
-      private var row: InternalRow = _
-
-      override def next(): Boolean = {
-        if (done) return false
-        val zip = ZipEntryWalk.open(part, conf.value.value)
-        // same predicate as the row reader — count ≡ rows the row path emits
-        val n = try part.range(zip).count(i => ZipEntryWalk.emits(zip.entries(i), glob,
-            filters, part))
-          finally zip.close()
-        row = new GenericInternalRow(Array[Any](n.toLong))
-        done = true
-        true
-      }
-
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
-  }
-}
-
 /** One archive, or the entries `[from, until)` of its central directory:
   * the unit of partitioning. `bytes` is the archive's listed length. A
   * whole archive has `until = Int.MaxValue`: its entry count is known
   * only once a task reads the directory. */
 case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long,
-    from: Int = 0, until: Int = Int.MaxValue) extends InputPartition {
-  /** The directory indices this partition serves in `zip`. */
-  def range(zip: ZipArchive): Range = from until math.min(until, zip.entries.length)
-}
+    from: Int = 0, until: Int = Int.MaxValue) extends InputPartition
 
 case class ZipReaderFactory(
     conf: Broadcast[SerializableConfiguration],
     glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
-    limit: Int = -1,
     maxBodyBytes: Long = 1L << 30) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ZipInputPartition]
-    new ZipPartitionReader(p, conf.value.value, glob, filters, columns, limit,
-      maxBodyBytes)
+    new ZipPartitionReader(p, conf.value.value, glob, filters, columns, maxBodyBytes)
   }
 }
 
-/** What both DSv2 readers share — opening an archive and the predicate
-  * for "which entries this scan emits" — so the pushed-COUNT(*) path can
-  * never disagree with the row path about what counts as a row. */
+/** What the driver's range split and the reader share — opening an
+  * archive and the predicate for "which entries this scan emits" — so the
+  * split weighs exactly the entries the tasks read. */
 private[sources] object ZipEntryWalk {
-  /** Test observability: archives actually opened by the DSv2 readers.
-    * Counting is OFF unless a test flips [[countOpens]] — production reads
-    * carry no global side effect, and parallel queries can't race a
-    * counter nobody is incrementing. The pruning assertions that read it
-    * assume a single-threaded (one query at a time) test session. */
-  val countOpens = new java.util.concurrent.atomic.AtomicBoolean(false)
-  val opened = new java.util.concurrent.atomic.AtomicLong
-
   /** Open the archive and read its central directory (typed `ReadFile`
     * when the file cannot be opened, `Zip` when it is no readable zip). */
   def open(part: ZipInputPartition, conf: Configuration): ZipArchive = {
-    if (countOpens.get) opened.incrementAndGet()
     val in =
       try {
         val p = new Path(part.readPath)
@@ -462,7 +372,6 @@ class ZipPartitionReader(
     glob: Option[Pattern],
     filters: Array[Filter],
     columns: Array[String],
-    limit: Int = -1,
     maxBodyBytes: Long = 1L << 30) extends PartitionReader[InternalRow] {
 
   private var emitted = 0L
@@ -471,7 +380,7 @@ class ZipPartitionReader(
   private val needHash = columns.contains("hash")
 
   private val zip = ZipEntryWalk.open(part, conf)
-  private val end = part.range(zip).end
+  private val end = math.min(part.until, zip.entries.length)
   private var at = part.from // index of the next directory entry to consider
   private var current: InternalRow = _
   private var closed = false
@@ -479,9 +388,8 @@ class ZipPartitionReader(
   override def next(): Boolean = {
     current = null
     if (closed) return false
-    if (limit >= 0 && emitted >= limit) { close(); return false }
     // pushed name/source predicates run BEFORE the entry read — the DSv2
-    // form of src/builder.rs:180-183 (shared with the COUNT(*) path)
+    // form of src/builder.rs:180-183
     val entries = zip.entries
     while (at < end && !ZipEntryWalk.emits(entries(at), glob, filters, part))
       at += 1

@@ -173,10 +173,11 @@ object ZipExtract {
 
   /** O8/O14 parity — the reference's pre-extraction count pass
     * (src/builder.rs:24-45 walks entry NAMES to total the progress bar).
-    * `count()` prunes every column, so the source's pushed COUNT(*) runs:
-    * it counts central-directory records and reads no entry data, like
-    * the reference's `file_names()`. The glob (and the rest of cfg) still
-    * applies: the count is exactly the rows the extraction will emit. */
+    * `count()` prunes every column, so the source's scan emits one empty
+    * row per matching central-directory record and reads no entry data,
+    * like the reference's `file_names()`. The glob (and the rest of cfg)
+    * still applies: the count is exactly the rows the extraction will
+    * emit. */
   def countEntries(spark: SparkSession, cfg: ZipToParquetConfig): Long =
     entries(spark, cfg).count()
 

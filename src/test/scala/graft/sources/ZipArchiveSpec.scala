@@ -310,14 +310,14 @@ class ZipArchiveSpec extends SparkSpec {
           b.metrics(ZipEntriesRead.Name).value
       }
       assert(read == Seq(60L), s"entries read: $read")
-      // the pushed COUNT(*) reader serves only its range too
+      // a reader of no column (a COUNT(*)'s) serves only its range too
       val conf = spark.sparkContext.broadcast(
         new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
       val counts = ranges.map { p =>
-        val r = ZipCountReaderFactory(conf, None, Array.empty).createReader(p)
-        try { assert(r.next()); r.get().getLong(0) } finally r.close()
+        val r = ZipReaderFactory(conf, None, Array.empty, Array.empty).createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity).size finally r.close()
       }
-      assert(counts.sum == 60L && counts.forall(_ > 0), s"range counts: $counts")
+      assert(counts.sum == 60 && counts.forall(_ > 0), s"range counts: $counts")
     }
   }
 }

@@ -138,7 +138,7 @@ class ZipExtractSpec extends SparkSpec {
     assert(df.collect().forall(r => r.isNullAt(2) && r.isNullAt(3)))
   }
 
-  test("countEntries' count() plan is the source's pushed COUNT(*)") {
+  test("countEntries' count() scans no column") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     // Dataset.count() runs groupBy().count(); the exchange would make AQE
     // hide the scan, so read the static plan
@@ -148,10 +148,9 @@ class ZipExtractSpec extends SparkSpec {
       val counted = ZipExtract.entries(spark, ZipToParquetConfig(inputs = Seq(zip1)))
         .groupBy().count()
       val scans = counted.queryExecution.executedPlan.collect {
-        case b: BatchScanExec => b.scan.description()
+        case b: BatchScanExec => b.scan.readSchema()
       }
-      assert(scans.size == 1 && scans.head.contains("PushedAggregation=[COUNT(*)]"),
-        s"scans: $scans")
+      assert(scans.size == 1 && scans.head.isEmpty, s"scans: $scans")
       assert(counted.collect().head.getLong(0) == 2L)
       assert(ZipExtract.countEntries(spark, ZipToParquetConfig(inputs = Seq(zip1))) == 2L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)

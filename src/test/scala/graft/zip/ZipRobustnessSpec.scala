@@ -60,6 +60,21 @@ class ZipRobustnessSpec extends SparkSpec {
       .load(f.getAbsolutePath).count() == 1)
   }
 
+  test("maxBodyBytes that is not a non-negative integer fails typed at load()") {
+    val f = new File(dir, "small.zip")
+    val z = new ZipOutputStream(new FileOutputStream(f))
+    z.putNextEntry(new ZipEntry("a.txt"))
+    z.write("a".getBytes("UTF-8"))
+    z.closeEntry(); z.close()
+    for (v <- Seq("ten", "-1")) {
+      val e = intercept[GraftError.GraftException] {
+        spark.read.format("zip").option("maxBodyBytes", v).load(f.getAbsolutePath)
+      }
+      assert(e.err.isInstanceOf[GraftError.InvalidArgument], s"$v: ${e.err}")
+      assert(e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("truncated entry stream raises typed ReadFileInZip (error.rs:17-21)") {
     val good = new File(dir, "tr_good.zip")
     val z = new ZipOutputStream(new FileOutputStream(good))
@@ -252,11 +267,10 @@ class ZipRobustnessSpec extends SparkSpec {
   }
 
   test("DSv2: corrupted archives fail TYPED on both row and pushed-COUNT(*) paths") {
-    // The v2 source shares ZipEntryWalk between the row reader and the
-    // pushed-aggregate COUNT(*) reader — fuzz both through
-    // spark.read.format("zip") with the same seeded mutations so the typed
-    // GraftError contract is proven for the whole DSv2 surface, not just
-    // the flatMap path.
+    // A COUNT(*) scans no column, so its reader walks names only; a row
+    // read inflates and hashes — fuzz both through spark.read.format("zip")
+    // with the same seeded mutations so the typed GraftError contract is
+    // proven for the whole DSv2 surface.
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 25) {
       val bytes = mutateArchive(rnd, trial % 3)
@@ -264,7 +278,7 @@ class ZipRobustnessSpec extends SparkSpec {
       val out = new FileOutputStream(f); out.write(bytes); out.close()
       val path = f.getAbsolutePath
       assertTypedOrClean(trial, "dsv2-count") {
-        // COUNT(*) with no filters → pushed down to the names-only walk
+        // COUNT(*) with no filters → the names-only walk
         assert(spark.read.format("zip").load(path).count() >= 0)
       }
       assertTypedOrClean(trial, "dsv2-rows") {
