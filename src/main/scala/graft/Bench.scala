@@ -2,9 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Session construction shared by the full run and drift mode — one
-    * definition so the two protocols measure under identical confs. */
-  private def buildSession(cpus: String): SparkSession = {
+  /** Session construction shared by the full run, drift mode and the
+    * [[Dev]] harness — one definition so every protocol measures under
+    * identical confs. */
+  private[graft] def buildSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

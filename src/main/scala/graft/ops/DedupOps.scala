@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline over `documents` /
@@ -1492,33 +1492,63 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** Embedding cosine near-dup, blocked by label (the generic pattern:
-    * block on a cheap partition key — cluster id, language, shard — so the
-    * pairwise compare is per-block, not corpus-wide). Norms are
-    * precomputed once per vector; the pairwise dot is a flat 64-term
-    * left-associated chain (whole-stage codegen; the addition order is the
-    * same as the oracle's sequential fold, so doubles are bit-identical). */
   /** Cosine threshold shared by [[embeddingNearDup]] and
     * [[semanticDedup]] — one constant so the report and the dedup verdict
     * can never disagree on what "near-duplicate" means. */
   private val NearDupCos = 0.4
 
-  /** The blocked near-dup PAIR relation both queries derive from
-    * (unordered — callers add their own sort/aggregation, so reuse does
-    * not drag a needless Sort into [[semanticDedup]]'s plan). */
-  private def nearDupPairs(s: SparkSession, d: String): DataFrame = {
-    val v = embeddings(s, d)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-    v.as("a")
-      .join(v.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        col("a.label").as("label"),
+  /** `(vec_id, <keep…>, embedding, nrm)` — the base every cosine pair
+    * enumeration in this tier scores: the norm is computed once per
+    * vector, never per pair. */
+  private def withNorm(emb: DataFrame, keep: String*): DataFrame =
+    emb.select((col("vec_id") +: keep.map(col)) ++ Seq(col("embedding"),
+      expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm")): _*)
+
+  /** THE blocked cosine-pair enumerator of the embedding near-dup tier:
+    * `a` joins `b` on equal `block` columns and `a.vec_id < b.vec_id`,
+    * emitting `(a_id, b_id, <block…>, cosine)` (both sides carry
+    * [[withNorm]]'s `(vec_id, embedding, nrm)`). Block on a cheap
+    * partition key — label, IVF cell, (codebook, probe, cell) — so the
+    * pairwise compare is per block, never corpus-wide; no block is the
+    * brute-force sample (the caller broadcasts one side). The pairwise
+    * dot is the codegen'd `vec_dot` chain in the oracle's sequential
+    * fold order, so doubles are bit-identical. Callers apply their own
+    * threshold, `distinct` and column order. */
+  private def cosinePairs(a: DataFrame, b: DataFrame,
+      block: String*): DataFrame =
+    a.as("a")
+      .join(b.as("b"), (block.map(c => col(s"a.$c") === col(s"b.$c")) :+
+        (col("a.vec_id") < col("b.vec_id"))).reduce(_ && _))
+      .select((Seq(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id")) ++
+        block.map(c => col(s"a.$c").as(c)) :+
         expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
+          .as("cosine")): _*)
+
+  /** Near-dup pairs `(a_id, b_id, cosine)` within the cells of an
+    * assigned base `(vec_id, embedding, nrm, cell)`. `multi`: a vector
+    * may sit in several cells (multi-probe), so a pair sharing several
+    * collapses under DISTINCT — exact, since the cosine is computed from
+    * the embeddings and is bit-identical on every instance. */
+  private def cellNearDups(base: DataFrame, multi: Boolean): DataFrame = {
+    val pairs = cosinePairs(base, base, "cell")
+      .select(col("a_id"), col("b_id"), col("cosine"))
       .filter(col("cosine") >= NearDupCos)
+    if (multi) pairs.distinct() else pairs
   }
+
+  /** The label-blocked scored pair relation `(a_id, b_id, label,
+    * cosine)`, unfiltered — the base of [[nearDupPairs]] and
+    * [[semanticSweep]]. */
+  private def labelPairsAll(s: SparkSession, d: String): DataFrame = {
+    val v = withNorm(embeddings(s, d), "label")
+    cosinePairs(v, v, "label")
+  }
+
+  /** The blocked near-dup PAIR relation the label-blocked queries derive
+    * from (unordered — callers add their own sort/aggregation, so reuse
+    * does not drag a needless Sort into [[semanticDedup]]'s plan). */
+  private def nearDupPairs(s: SparkSession, d: String): DataFrame =
+    labelPairsAll(s, d).filter(col("cosine") >= NearDupCos)
 
   def embeddingNearDup(s: SparkSession, d: String): DataFrame =
     nearDupPairs(s, d).orderBy("a_id", "b_id")
@@ -1533,61 +1563,38 @@ object DedupOps {
     * second decade (label count is fixed, blocks grow ∝ N →
     * Σnᵢ² ≈ N²/|labels| — the same wall the kNN family hit at fixed
     * K=8); this path is ∝ N·occ. Same [[NearDupCos]] threshold, same
-    * codegen'd cosine chain; like any blocked near-dup, cross-block
-    * pairs are not enumerated — production widens recall with
-    * multi-probe assignment, which adds a Generate, not a new shape. */
+    * cosine chain; like any blocked near-dup, cross-block pairs are not
+    * enumerated — multi-probe assignment ([[nearDupPairsCellsProbe2]])
+    * widens recall. */
   private[ops] def nearDupPairsCells(emb: DataFrame,
-      nCells: Int = SimilarityOps.AutoCells): DataFrame =
-    cellPairsAll(emb, nCells).filter(col("cosine") >= NearDupCos)
-
-  /** The UNFILTERED cell-blocked scored pair relation under
-    * [[nearDupPairsCells]] — exposed separately so the threshold-sweep
-    * twin can melt thresholds BELOW [[NearDupCos]] over the same
-    * occupancy-blocked base (the sweep's whole point is bracketing the
-    * production threshold from both sides). */
-  private def cellPairsAll(emb: DataFrame, nCells: Int): DataFrame = {
+      nCells: Int = SimilarityOps.AutoCells): DataFrame = {
     val assigned = SimilarityOps.knnAssign(
       emb.select(col("vec_id"), col("embedding")),
       SimilarityOps.resolveCells(emb, nCells), forceKernel = true)
-    assigned.as("a")
-      .join(assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        col("a.cell").as("cell"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
+    cosinePairs(assigned, assigned, "cell").filter(col("cosine") >= NearDupCos)
   }
 
   /** The ROUTED corpus base `(vec_id, embedding, nrm, cell)` — the
     * Θ(√K) [[graft.ops.SimilarityOps.twoLevelAssign]] assignment at
     * [[graft.ops.SimilarityOps.DeployedP1]], joined back to the
-    * embeddings by id (the [[nearDupRecall2Level]] pattern: the
-    * assignment's struct-min keeps primitive agg buffers; the id-key
-    * join re-attaches the vector payload). This replaces the flat
-    * K ∝ N `knnAssign` scan in every deployed pair plan — the r17
-    * DECADE3 probe measured that scan at exp 1.22–1.38; at both gate
-    * SFs K₁ ≤ DeployedP1 so the routed base EQUALS the flat one. */
-  private[ops] def routedCellBase(emb: DataFrame,
-      nCells: Int = SimilarityOps.AutoCells): DataFrame =
-    emb.select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-      .join(SimilarityOps.twoLevelAssign(
-        emb.select(col("vec_id"), col("embedding")),
-        SimilarityOps.resolveCells(emb, nCells)), Seq("vec_id"))
+    * embeddings by id (the assignment's struct-min keeps primitive agg
+    * buffers; the id-key join re-attaches the vector payload). This
+    * replaces the flat K ∝ N `knnAssign` scan in every deployed pair
+    * plan — the r17 DECADE3 probe measured that scan at exp 1.22–1.38;
+    * at both gate SFs K₁ ≤ DeployedP1 so the routed base EQUALS the
+    * flat one. */
+  private def routedCellBase(emb: DataFrame): DataFrame =
+    withNorm(emb).join(SimilarityOps.twoLevelAssign(
+      emb.select(col("vec_id"), col("embedding")),
+      SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)), Seq("vec_id"))
 
-  /** [[cellPairsAll]] over the ROUTED assignment — the unfiltered
-    * scored pair relation the deployed embedding-dedup tier rides
-    * (same occupancy-bounded per-cell quadratic; only the assignment
-    * spelling changed from Θ(K) to Θ(√K) per vector). */
+  /** The UNFILTERED routed cell-blocked scored pair relation `(a_id,
+    * b_id, cell, cosine)` the deployed embedding-dedup tier rides —
+    * exposed unfiltered so [[semanticSweepAuto]] can melt thresholds
+    * BELOW [[NearDupCos]] over the same occupancy-blocked base. */
   private def cellPairsAllRouted(emb: DataFrame): DataFrame = {
     val base = routedCellBase(emb)
-    base.as("a")
-      .join(base.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        col("a.cell").as("cell"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
+    cosinePairs(base, base, "cell")
   }
 
   /** [[nearDupPairsCells]]' ROUTED twin — the deployed near-dup pair
@@ -1612,51 +1619,27 @@ object DedupOps {
     * BOTH its best and second-best cell (the
     * [[graft.functions.PqArgmin2]] kernel — no K-row scoring
     * materialized), so pairs split by one cell boundary are recovered;
-    * a pair sharing both cells is emitted once (DISTINCT on the scored
-    * pair — the cosine is bit-identical on both instances, so the
-    * collapse is exact in both engines). Cost: ≤ 4× the single-probe
-    * candidate pairs at the same occupancy — the standard multi-probe
-    * recall/cost dial ([[ivfProbeCurve]]'s trade at the corpus-pair
-    * tier). [[nearDupRecall]] measures what the 4× buys. */
+    * a pair sharing both cells is emitted once. Cost: ≤ 4× the
+    * single-probe candidate pairs at the same occupancy — the standard
+    * multi-probe recall/cost dial ([[ivfProbeCurve]]'s trade at the
+    * corpus-pair tier). [[nearDupRecall]] measures what the 4× buys. */
   private[ops] def nearDupPairsCellsProbe2(emb: DataFrame,
-      nCells: Int = SimilarityOps.AutoCells): DataFrame = {
-    val ex = SimilarityOps.knnAssign2(
+      nCells: Int = SimilarityOps.AutoCells): DataFrame =
+    cellNearDups(SimilarityOps.knnAssign2(
         emb.select(col("vec_id"), col("embedding")),
         SimilarityOps.resolveCells(emb, nCells))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(array(col("cell"), col("cell2"))).as("cell"))
-    ex.as("a")
-      .join(ex.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .distinct()
-  }
+        explode(array(col("cell"), col("cell2"))).as("cell")), multi = true)
 
   /** [[nearDupPairsCellsProbe2]]'s ROUTED twin: each vector joins its
     * 2 best fine cells AMONG THE ROUTED CANDIDATES
     * ([[graft.ops.SimilarityOps.routedAssignK]] at fineProbes = 2) —
-    * the multi-probe recall dial composed with the Θ(√K) assignment.
-    * Pairs sharing both cells collapse exactly (DISTINCT on the scored
-    * pair, bit-identical cosine on every instance — the flat probe-2
-    * contract unchanged). */
+    * the multi-probe recall dial composed with the Θ(√K) assignment. */
   private[ops] def nearDupPairsCellsProbe2Routed(emb: DataFrame): DataFrame = {
     val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)
-    val ex = emb.select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-      .join(SimilarityOps.routedAssignK(
+    cellNearDups(withNorm(emb).join(SimilarityOps.routedAssignK(
         emb.select(col("vec_id"), col("embedding")), k, fineProbes = 2),
-        Seq("vec_id"))
-    ex.as("a")
-      .join(ex.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .distinct()
+      Seq("vec_id")), multi = true)
   }
 
   /** The probe-2 pair report as its own gate query
@@ -1670,17 +1653,12 @@ object DedupOps {
 
   /** TRAINED-codebook near-dup pair relation (r16 verdict ask #1): the
     * [[nearDupPairsCells]] blocking with the md5-random codebook
-    * replaced by a Lloyd-trained one
-    * ([[graft.ops.SimilarityOps.lloydCodebook]] at the SAME K — the
-    * in-repo s_kmeans trainer generalized to K ∝ N), assignment through
-    * ONE pq_argmin kernel call over the flattened (|c|², components…)
-    * codebook (`probes` = 2 adds the pq_argmin2 second-best cell — the
-    * same multi-probe widening as [[nearDupPairsCellsProbe2]]).
-    * Production SemDeDup blocks on trained cells precisely because a
-    * random codebook has weak locality — [[nearDupRecallGrid]] prices
-    * the difference on this corpus. Same [[NearDupCos]] threshold, same
-    * codegen'd cosine chain, same occupancy-bounded per-block
-    * quadratic. */
+    * replaced by a GLOBAL Lloyd-trained one
+    * ([[graft.ops.SimilarityOps.lloydCodebook]] at the SAME K), flat
+    * assignment through ONE pq_argmin kernel call (`probes` ≥ 2 adds
+    * the multi-probe widening). No gate query serves it: the deployed
+    * trained tier is [[nearDupPairsCellsHier]], and the specs keep this
+    * flat arm as the global-trained reference it is measured against. */
   private[ops] def nearDupPairsCellsTrained(emb: DataFrame,
       nCells: Int = SimilarityOps.AutoCells, probes: Int = 1): DataFrame = {
     val k = SimilarityOps.resolveCells(emb, nCells)
@@ -1693,9 +1671,7 @@ object DedupOps {
     * (random md5 or Lloyd-trained — the spelling both arms share so the
     * grid compares codebooks, never plumbing): each vector joins its P
     * best cells (ONE `pq_argmink` kernel call at P ≥ 2 — the probe set
-    * without materializing the K-row scoring), pairs sharing several
-    * cells collapse exactly (the cosine is computed from the embeddings,
-    * bit-identical on every instance). Candidate cost ≤ P²× the
+    * without materializing the K-row scoring). Candidate cost ≤ P²× the
     * single-probe pairs at equal occupancy — the multi-probe recall/cost
     * dial [[nearDupRecallGrid]] prices. */
   private def pairsOverFlat(emb: DataFrame, flatCb: Array[Double],
@@ -1703,8 +1679,7 @@ object DedupOps {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val flat = typedLit(flatCb)
     val dim = lit(SimilarityOps.Dim)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
+    val base = withNorm(emb)
     val assigned =
       if (probes == 1)
         base.withColumn("cell", call_function("pq_argmin",
@@ -1712,19 +1687,12 @@ object DedupOps {
       else
         base.withColumn("cell", explode(call_function("pq_argmink",
           col("embedding"), flat, lit(0), dim, lit(probes))))
-    val pairs = assigned.as("a")
-      .join(assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-    if (probes == 1) pairs else pairs.distinct()
+    cellNearDups(assigned, multi = probes > 1)
   }
 
   /** Probe-P widening of [[nearDupPairsCells]] on the RANDOM (md5)
     * codebook — [[nearDupPairsCellsProbe2]]'s generalization through
-    * the shared [[pairsOverFlat]] device (the probe-2 gate query keeps
+    * the shared [[pairsOverFlat]] device (the probe-2 relation keeps
     * its r16 two-kernel spelling; P > 2 rides `pq_argmink`). */
   private[ops] def nearDupPairsCellsProbeK(emb: DataFrame,
       nCells: Int = SimilarityOps.AutoCells, probes: Int = 1): DataFrame =
@@ -1732,85 +1700,15 @@ object DedupOps {
       SimilarityOps.kernelCodebook(SimilarityOps.resolveCells(emb, nCells)),
       probes)
 
-  /** [[nearDupPairsCellsTrained]]'s ROUTED twin: the TRAINED fine
-    * codebook deployed through the Θ(√K) router — the md5-random
-    * `ivf2_…` coarse level, each trained fine centroid routed to its
-    * coarse bucket BY DIRECTION (the [[graft.ops.SimilarityOps
-    * .fineToCoarse]] arithmetic over the trained double components —
-    * scale-invariant, so unit query vectors and unnormalized centroid
-    * means rank coarse cells consistently), vectors probing
-    * [[graft.ops.SimilarityOps.DeployedP1]] coarse buckets and
-    * arg-minning the kernel's own `|c|² − 2·x·c` trained-fine score
-    * within them. The K-row codebook relation here is the TRAINER's
-    * own output (Lloyd materializes centroids on the driver by
-    * construction — the bounded K×Dim grain the loop already pays);
-    * the routing adds no K-sized scan: Θ(K₁ + P₁·K/K₁) scores per
-    * vector vs the former flat Θ(K) (DECADE3 exp 1.38, ×3 passes). */
-  private[ops] def nearDupPairsCellsTrainedRouted(emb: DataFrame): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)
-    val k1 = SimilarityOps.coarseCountFor(k)
-    val p = math.min(SimilarityOps.DeployedP1, k1)
-    val cents = SimilarityOps.lloydCodebook(
-      emb.select(col("vec_id"), col("embedding")), k)
-    val coarse = SimilarityOps.coarseCellsFor(k1)
-    val cComps = coarse.map { c =>
-      val n = math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)
-      c.map(x => x.toDouble / (2.0 * n))
-    }
-    val route = cents.map { case (_, comps, _) =>
-      var best = Double.PositiveInfinity; var bestJ = 0; var j2 = 0
-      while (j2 < k1) {
-        var dot = 0.0; var i = 0
-        while (i < SimilarityOps.Dim) {
-          dot += comps(i) * cComps(j2)(i); i += 1
-        }
-        val dd = 0.0 - 2.0 * dot
-        if (dd < best) { best = dd; bestJ = j2 }
-        j2 += 1
-      }
-      bestJ
-    }
-    val fineRows = cents.zipWithIndex.map { case ((_, comps, _), j) =>
-      (route(j).toLong, j.toLong, comps.toArray,
-        comps.foldLeft(0.0)((a, x) => a + x * x))
-    }
-    val fineDf = broadcast(fineRows.toDF("coarse", "cell0", "tcomps", "cn"))
-    val coarseFlat = typedLit(SimilarityOps.cosineFlatOf(coarse))
-    val routed = emb.select(col("vec_id"), col("embedding"),
-        explode(call_function("pq_argmink", col("embedding"), coarseFlat,
-          lit(0), lit(SimilarityOps.Dim), lit(p))).as("coarse"))
-      .join(fineDf, Seq("coarse"))
-      .select(col("vec_id"),
-        struct((col("cn") - lit(2.0) * call_function("vec_dot",
-          col("embedding"), col("tcomps"))).as("d"),
-          col("cell0").as("cell")).as("s"))
-      .groupBy("vec_id")
-      .agg(min(col("s")).getField("cell").as("cell"))
-    val base = emb.select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-      .join(routed, Seq("vec_id"))
-    base.as("a")
-      .join(base.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-  }
-
-  /** HIERARCHICALLY-trained near-dup pair relation
-    * (`d_embedding_neardup_hier`): the trained tier with the Lloyd
-    * TRAINER itself at Θ(√K) per vector — the r18 DECADE3 run showed
-    * the routed-but-globally-trained arm pinned at exp ≈ 1.0 by the
-    * trainer's own N×K scoring passes; this is the named fix. The
-    * md5-random coarse level buckets the corpus (one rank-1 kernel
-    * pass), each bucket trains K₂ = ⌈K/K₁⌉ LOCAL cells with the same
-    * quantized Lloyd device ([[graft.ops.SimilarityOps
-    * .hierLloydCells]] — per-iteration scoring is a bucket-key join:
-    * √K cells per vector), and deployment probes
-    * [[graft.ops.SimilarityOps.DeployedP1]] coarse buckets and
+  /** HIERARCHICALLY-trained near-dup pair relation — the one relation
+    * behind BOTH `d_embedding_neardup_hier` and
+    * `d_embedding_neardup_trained` (the r19 declared re-gate). The Lloyd
+    * TRAINER itself runs at Θ(√K) per vector: the md5-random coarse
+    * level buckets the corpus (one rank-1 kernel pass), each bucket
+    * trains K₂ = ⌈K/K₁⌉ LOCAL cells with the same quantized Lloyd
+    * device ([[graft.ops.SimilarityOps.hierLloydCells]] — per-iteration
+    * scoring is a bucket-key join: √K cells per vector), and deployment
+    * probes [[graft.ops.SimilarityOps.DeployedP1]] coarse buckets and
     * arg-mins the probed buckets' local cells — no fine→coarse routing
     * table exists because a local cell IS under its bucket. Training
     * AND deployment are Θ(N·√K); nothing in the tier scans N×K. */
@@ -1837,56 +1735,69 @@ object DedupOps {
           col("cell")).as("s"))
       .groupBy("vec_id")
       .agg(min(col("s")).getField("cell").as("cell"))
-    val base = emb.select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-      .join(routed, Seq("vec_id"))
-    base.as("a")
-      .join(base.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
+    cellNearDups(withNorm(emb).join(routed, Seq("vec_id")), multi = false)
   }
 
-  /** The hierarchically-trained pair report as its own gate query
-    * (`d_embedding_neardup_hier`) — dynamically oracle-gated end to
-    * end: the DuckDB replay derives K, K₁, K₂ from its own count(*),
-    * regenerates the coarse codebook, buckets every vector, seeds and
-    * unrolls the PER-BUCKET quantized Lloyd iterations, and replays
-    * the probed deployment assignment (the
+  /** The hierarchically-trained pair report — the builder of BOTH
+    * `d_embedding_neardup_hier` and `d_embedding_neardup_trained` (a
+    * declared r19 re-gate: the trained tier IS this relation). The two
+    * names share one oracle string ([[HierPairsOracle]]) —
+    * dynamically gated end to end: the DuckDB replay derives K, K₁, K₂
+    * from its own count(*), regenerates the coarse codebook, buckets
+    * every vector, seeds and unrolls the PER-BUCKET quantized Lloyd
+    * iterations, and replays the probed deployment assignment (the
     * [[graft.ops.SimilarityOps.HierChain]] device). */
   def embeddingNearDupHier(s: SparkSession, d: String): DataFrame =
     nearDupPairsCellsHier(embeddings(s, d)).orderBy("a_id", "b_id")
 
-  /** The trained-codebook pair report as its own gate query
-    * (`d_embedding_neardup_trained`) — RE-GATED in r19 onto the
-    * HIERARCHICAL trainer (r18 verdict ask #1, sanctioned route (b)):
-    * through r18 this tier trained a GLOBAL Lloyd codebook (KmIters
-    * full N×K scoring passes — the DECADE3-measured exp ≈ 0.96 wall,
-    * 23.3 s at 200k vectors, the one remaining ≈ 1.0 deployment path)
-    * and routed its centroids by direction; training is now the
-    * Θ(N·√K) per-bucket [[graft.ops.SimilarityOps.hierCellsDf]] device
-    * the r18 round built and measured (exp 0.38, and HIGHER planted-
-    * blob recall than the global trainer: 0.511 vs 0.132 at 200k —
-    * spec-pinned in R18InvariantSpec). This deliberately makes the
-    * query compute the [[embeddingNearDupHier]] relation — a DECLARED
-    * re-gate, not a silent rewrite: the DuckDB oracle replays the full
-    * hierarchical chain ([[graft.ops.SimilarityOps.HierChain]]) and
-    * the driver re-hashes it at both SFs. The former global-trained
-    * spelling ([[nearDupPairsCellsTrainedRouted]]) stays as the
-    * measured comparison arm in R18InvariantSpec. */
-  def embeddingNearDupTrained(s: SparkSession, d: String): DataFrame =
-    nearDupPairsCellsHier(embeddings(s, d)).orderBy("a_id", "b_id")
+  /** Sample bound of the near-dup recall queries' brute-force base: the
+    * recall of the blocked paths is ESTIMATED on the pairs within this
+    * fixed id range, so the measurement stays O(sample²) at ANY corpus
+    * scale — the [[graft.ops.SimilarityOps.pqRecall]] discipline (the
+    * brute-force arm is the cost the blocking exists to avoid; never
+    * run it corpus-wide). */
+  private val NearDupRecallSample = 500L
+
+  /** The ONE brute-force recall base: every pair within the fixed
+    * [[NearDupRecallSample]]-id sample at cosine ≥ [[NearDupCos]], as
+    * `(a_id, b_id)` — unblocked, so one side is broadcast (a bounded
+    * sample² nested loop). */
+  private def nearDupBrute(emb: DataFrame): DataFrame = {
+    val v = withNorm(emb.filter(col("vec_id") < NearDupRecallSample))
+    cosinePairs(broadcast(v), v)
+      .filter(col("cosine") >= NearDupCos)
+      .select(col("a_id"), col("b_id"))
+  }
+
+  /** One `(<tags…>, n_caught)` row: how many `brute` pairs the blocked
+    * relation `pairs` also enumerates (restricted to the sample). */
+  private def caught(brute: DataFrame, pairs: DataFrame,
+      tags: Column*): DataFrame =
+    brute.join(
+        pairs.filter(col("a_id") < NearDupRecallSample &&
+            col("b_id") < NearDupRecallSample)
+          .select(col("a_id"), col("b_id")),
+        Seq("a_id", "b_id"), "left_semi")
+      .agg(count(lit(1)).as("n_caught"))
+      .select(tags :+ col("n_caught"): _*)
+
+  /** `(<keys…>, n_true, n_caught, recall)` over [[caught]] rows, with
+    * n_true = |brute| riding a 1-row broadcast. */
+  private def recallOf(caughtRows: DataFrame, brute: DataFrame,
+      keys: String*): DataFrame =
+    caughtRows
+      .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_true"))))
+      .select(keys.map(col) ++ Seq(col("n_true"), col("n_caught"),
+        expr("n_caught / n_true").as("recall")): _*)
 
   /** RECALL/COST GRID over the blocking design space (r16 verdict ask
     * #1): [[nearDupRecall]] extended to codebook ∈ {random, trained} ×
     * probe ∈ {1, 2, 4} at the deployed occupancy — the table that
     * prices the near-dup scale path's dials against brute force on ONE
     * fixed [[NearDupRecallSample]]-id sample (the occupancy arm is
-    * measured at 512 too via [[nearDupRecallGridAt]] + the RecallGrid
-    * harness; its K differs, so it rides the notes rather than
-    * doubling this gate's rows). Probe-(P+1) ⊇ probe-P per codebook by
+    * measured at 512 too via [[nearDupRecallGridAt]] + `graft.Dev
+    * grid`; its K differs, so it rides the notes rather than doubling
+    * this gate's rows). Probe-(P+1) ⊇ probe-P per codebook by
     * construction, spec-pinned like the r16 random tier. */
   def nearDupRecallGrid(s: SparkSession, d: String): DataFrame =
     nearDupRecallGridAt(s, d, SimilarityOps.TargetCellOcc)
@@ -1897,41 +1808,22 @@ object DedupOps {
       occ: Long): DataFrame = {
     val emb = embeddings(s, d)
     val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells, occ)
-    val v = emb.filter(col("vec_id") < NearDupRecallSample)
-      .select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-    val brute = broadcast(v.as("a"))
-      .join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .select(col("a_id"), col("b_id"))
-    def caught(pairs: DataFrame, codebook: String, probe: Long): DataFrame =
-      brute.join(
-        pairs.filter(col("a_id") < NearDupRecallSample &&
-            col("b_id") < NearDupRecallSample)
-          .select(col("a_id"), col("b_id")),
-        Seq("a_id", "b_id"), "left_semi")
-        .agg(count(lit(1)).as("n_caught"))
-        .select(lit(codebook).as("codebook"), lit(probe).as("probe"),
-          col("n_caught"))
-    val nTrue = brute.agg(count(lit(1)).as("n_true"))
+    val brute = nearDupBrute(emb)
+    def arm(pairs: DataFrame, codebook: String, probe: Long): DataFrame =
+      caught(brute, pairs, lit(codebook).as("codebook"), lit(probe).as("probe"))
     // train ONCE for all three trained arms (Lloyd is deterministic, so
     // per-arm retraining would produce the same codebook 3x slower — at
     // 200k vectors an iteration is a full N x K kernel pass)
     val trainedFlat = SimilarityOps.lloydFlatCodebook(
       SimilarityOps.lloydCodebook(
         emb.select(col("vec_id"), col("embedding")), k))
-    caught(nearDupPairsCells(emb, k), "random", 1L)
-      .union(caught(nearDupPairsCellsProbe2(emb, k), "random", 2L))
-      .union(caught(nearDupPairsCellsProbeK(emb, k, probes = 4), "random", 4L))
-      .union(caught(pairsOverFlat(emb, trainedFlat, probes = 1), "trained", 1L))
-      .union(caught(pairsOverFlat(emb, trainedFlat, probes = 2), "trained", 2L))
-      .union(caught(pairsOverFlat(emb, trainedFlat, probes = 4), "trained", 4L))
-      .crossJoin(broadcast(nTrue))
-      .select(col("codebook"), col("probe"), col("n_true"), col("n_caught"),
-        expr("n_caught / n_true").as("recall"))
+    recallOf(arm(nearDupPairsCells(emb, k), "random", 1L)
+      .union(arm(nearDupPairsCellsProbe2(emb, k), "random", 2L))
+      .union(arm(nearDupPairsCellsProbeK(emb, k, probes = 4), "random", 4L))
+      .union(arm(pairsOverFlat(emb, trainedFlat, probes = 1), "trained", 1L))
+      .union(arm(pairsOverFlat(emb, trainedFlat, probes = 2), "trained", 2L))
+      .union(arm(pairsOverFlat(emb, trainedFlat, probes = 4), "trained", 4L)),
+      brute, "codebook", "probe")
       .orderBy("codebook", "probe")
   }
 
@@ -1941,46 +1833,15 @@ object DedupOps {
     * non-argmax cell still co-locates with near-duplicates routed the
     * same way, so pair recall under routed blocking can exceed
     * agreement². Same fixed-sample brute-force base as
-    * [[nearDupRecall]]; the blocked arm enumerates pairs within the
-    * Θ(√K)-assigned cells ([[graft.ops.SimilarityOps.twoLevelAssign]]
-    * at the deployed coarse probes). Read beside `d_neardup_recall`'s
-    * probe-1 row: the difference is exactly what the Θ(√K) assignment
-    * spelling costs in blocking recall at the deployed P₁. */
+    * [[nearDupRecall]]; the blocked arm is the deployed
+    * [[nearDupPairsCellsRouted]] relation. Read beside
+    * `d_neardup_recall`'s probe-1 row: the difference is exactly what
+    * the Θ(√K) assignment spelling costs in blocking recall at the
+    * deployed P₁. */
   def nearDupRecall2Level(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
-    val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)
-    val v = emb.filter(col("vec_id") < NearDupRecallSample)
-      .select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-    val brute = broadcast(v.as("a"))
-      .join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .select(col("a_id"), col("b_id"))
-    val routed = SimilarityOps.twoLevelAssign(
-      emb.select(col("vec_id"), col("embedding")), k)
-    val base = emb.select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-      .join(routed, Seq("vec_id"))
-    val pairs = base.as("a")
-      .join(base.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-    val nTrue = brute.agg(count(lit(1)).as("n_true"))
-    brute.join(
-        pairs.filter(col("a_id") < NearDupRecallSample &&
-            col("b_id") < NearDupRecallSample)
-          .select(col("a_id"), col("b_id")),
-        Seq("a_id", "b_id"), "left_semi")
-      .agg(count(lit(1)).as("n_caught"))
-      .crossJoin(broadcast(nTrue))
-      .select(col("n_true"), col("n_caught"),
-        expr("n_caught / n_true").as("recall"))
+    val brute = nearDupBrute(emb)
+    recallOf(caught(brute, nearDupPairsCellsRouted(emb)), brute)
   }
 
   /** ROUTED pair-recall MELT (`d_neardup_recall_melt`, r17 verdict asks
@@ -2012,14 +1873,7 @@ object DedupOps {
     val p1s = (Seq(2L, 4L, 8L) :+ k1.toLong).distinct.sorted
     val samp = emb.filter(col("vec_id") < NearDupRecallSample)
       .select(col("vec_id"), col("embedding"))
-    val v = samp.withColumn("nrm", expr(s"sqrt(${Vec.normSq("embedding")})"))
-    val brute = broadcast(v.as("a"))
-      .join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .select(col("a_id"), col("b_id"))
+    val brute = nearDupBrute(emb)
     // both coarse codebooks ride as ONE-ROW relations (r18 verdict ask
     // #3): the md5-random level generated where it is joined, the
     // Lloyd-trained one the trainer's own bounded √K-row output as
@@ -2035,17 +1889,10 @@ object DedupOps {
         .select(lit(cb).as("cb"), col("p1"), col("vec_id"), col("cell"))
     val assigned = arm(SimilarityOps.coarseFlatDf(s, k1), k1, "random")
       .union(arm(SimilarityOps.oneRowFlatDf(s, tflat), nTrained, "trained"))
-    val rbase = assigned.join(v, Seq("vec_id"))
-    val pairs = rbase.as("a")
-      .join(rbase.as("b"),
-        col("a.cb") === col("b.cb") && col("a.p1") === col("b.p1") &&
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cb").as("cb"), col("a.p1").as("p1"),
-        col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
+    val rbase = assigned.join(withNorm(samp), Seq("vec_id"))
+    val caught = cosinePairs(rbase, rbase, "cb", "p1", "cell")
       .filter(col("cosine") >= NearDupCos)
-    val caught = pairs.select(col("cb"), col("p1"), col("a_id"), col("b_id"))
+      .select(col("cb"), col("p1"), col("a_id"), col("b_id"))
       .join(brute, Seq("a_id", "b_id"), "left_semi")
       .groupBy("cb", "p1").agg(count(lit(1)).as("n_caught"))
     // an arm that catches NOTHING must still emit its zero row — the
@@ -2059,14 +1906,6 @@ object DedupOps {
         expr("coalesce(n_caught, 0) / n_true").as("recall"))
       .orderBy("cb", "p1")
   }
-
-  /** Sample bound of [[nearDupRecall]]'s brute-force base: the recall
-    * of the blocked paths is ESTIMATED on the pairs within this fixed
-    * id range, so the measurement stays O(sample²) at ANY corpus
-    * scale — the [[graft.ops.SimilarityOps.pqRecall]] discipline (the
-    * brute-force arm is the cost the blocking exists to avoid; never
-    * run it corpus-wide). */
-  private val NearDupRecallSample = 500L
 
   /** RECALL of the cell-blocked near-dup paths against brute force —
     * the measurement that prices the [[nearDupPairsCells]] /
@@ -2086,44 +1925,29 @@ object DedupOps {
   def nearDupRecall(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val k = SimilarityOps.resolveCells(emb, SimilarityOps.AutoCells)
-    val v = emb.filter(col("vec_id") < NearDupRecallSample)
-      .select(col("vec_id"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-    val brute = broadcast(v.as("a"))
-      .join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
-      .filter(col("cosine") >= NearDupCos)
-      .select(col("a_id"), col("b_id"))
-    def caught(pairs: DataFrame, probe: Long): DataFrame =
-      brute.join(
-        pairs.filter(col("a_id") < NearDupRecallSample &&
-            col("b_id") < NearDupRecallSample)
-          .select(col("a_id"), col("b_id")),
-        Seq("a_id", "b_id"), "left_semi")
-        .agg(count(lit(1)).as("n_caught"))
-        .select(lit(probe).as("probe"), col("n_caught"))
-    val nTrue = brute.agg(count(lit(1)).as("n_true"))
-    caught(nearDupPairsCells(emb, k), 1L)
-      .union(caught(nearDupPairsCellsProbe2(emb, k), 2L))
-      .crossJoin(broadcast(nTrue))
-      .select(col("probe"), col("n_true"), col("n_caught"),
-        expr("n_caught / n_true").as("recall"))
+    val brute = nearDupBrute(emb)
+    recallOf(caught(brute, nearDupPairsCells(emb, k), lit(1L).as("probe"))
+      .union(caught(brute, nearDupPairsCellsProbe2(emb, k), lit(2L).as("probe"))),
+      brute, "probe")
       .orderBy("probe")
   }
+
+  /** Near-dup CLUSTERS over a pair relation: connected components, one
+    * canonical (min-id) vector per component, as `(vec_id, cluster_id)`
+    * — the shared [[dedupClustersFrom]] machinery. */
+  private def clustersOver(pairs: DataFrame): DataFrame =
+    dedupClustersFrom(pairs.select(col("a_id"), col("b_id")))
+      .select(col("doc_id").as("vec_id"), col("cluster_id"))
 
   /** [[embeddingClusters]]' production composition at scale: the same
     * large-star/small-star contraction over the CELL-blocked pair
     * relation (the gate query keeps the label-blocked oracle
     * semantics; the r16 100× probe measured that twin at 168 s / 200k
     * vectors vs 16 s here, diverging quadratically). [[semanticDedup]]
-    * composes identically — its dropped set is
-    * `nearDupPairsCells(emb).select("b_id").distinct`. */
+    * composes identically over the same relation
+    * ([[semanticDedupAuto]]). */
   private[ops] def embeddingClustersAuto(emb: DataFrame): DataFrame =
-    dedupClustersFrom(
-      nearDupPairsCellsRouted(emb).select(col("a_id"), col("b_id")))
-      .select(col("doc_id").as("vec_id"), col("cluster_id"))
+    clustersOver(nearDupPairsCellsRouted(emb))
 
   /** [[embeddingClusters]]' scale path as its own gate query
     * (`d_embedding_clusters_auto`, r16 verdict ask #2): connected
@@ -2137,83 +1961,39 @@ object DedupOps {
   def embeddingClustersAutoQ(s: SparkSession, d: String): DataFrame =
     embeddingClustersAuto(embeddings(s, d))
 
-  /** [[semanticDedup]]'s scale path as its own gate query
-    * (`d_semantic_dedup_auto`): the same edge-based drop rule — a vector
-    * is a duplicate iff some LOWER-id vector shares its CELL at cosine ≥
-    * [[NearDupCos]] — with the dropped set derived from the cell-blocked
-    * pair relation exactly as [[embeddingClustersAuto]]'s scaladoc
-    * states. Same two uniform id-key shuffles after the blocked pairwise
-    * core; the per-block quadratic is occupancy-bounded (∝ N·occ). */
-  def semanticDedupAuto(s: SparkSession, d: String): DataFrame = {
-    val dropped = nearDupPairsCellsRouted(embeddings(s, d))
+  /** The SemDeDup edge-rule verdict over a pair relation: every vector
+    * of `corpus` with `is_dup` = some LOWER-id vector pairs with it
+    * (the dropped set IS the pair relation's higher-id column). Two
+    * uniform id-key shuffles after the blocked pairwise core. */
+  private def dedupOver(pairs: DataFrame, corpus: DataFrame): DataFrame = {
+    val dropped = pairs
       .select(col("b_id").as("vec_id")).distinct()
       .withColumn("is_dup", lit(true))
-    embeddings(s, d).select(col("vec_id"), col("label"))
+    corpus.select(col("vec_id"), col("label"))
       .join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("label"),
         coalesce(col("is_dup"), lit(false)).as("is_dup"))
       .orderBy("vec_id")
   }
 
-  /** [[semanticSweep]]'s scale path as its own gate query
-    * (`d_semantic_sweep_auto`): the identical 4-threshold melt/rollup
-    * over the CELL-blocked pair base (the label-blocked original's own
-    * scaladoc prescribes exactly this composition at corpus scale — the
-    * occupancy-blocked base is ∝ N where label blocking is ∝ N²).
-    * Readings differ from the label-blocked sweep BY DESIGN: each
-    * blocking only sees its own within-block pairs, and this is the one
-    * the corpus-scale dedup would act on. */
-  def semanticSweepAuto(s: SparkSession, d: String): DataFrame = {
-    val melt = cellPairsAllRouted(embeddings(s, d))
-      .select(col("a_id"), col("b_id"), col("cosine"),
-        explode(expr("array(30L, 40L, 50L, 60L)")).as("pct"))
-      .filter(col("cosine") >= expr("CAST(pct AS DOUBLE) / 100.0e0"))
-    val g = melt.groupBy("pct").agg(
-      count(lit(1)).as("n_pairs"),
-      countDistinct(col("b_id")).as("n_removed"))
-    val nodes = melt
-      .select(col("pct"), explode(expr("array(a_id, b_id)")).as("node"))
-      .distinct()
-      .groupBy("pct").agg(count(lit(1)).as("n_dup_docs"))
-    val tot = embeddings(s, d).agg(count(lit(1)).as("n_vecs"))
-    g.join(nodes, Seq("pct"))
-      .crossJoin(broadcast(tot))
-      .select(col("pct"), col("n_pairs"), col("n_dup_docs"),
-        col("n_removed"), col("n_vecs"),
-        expr("n_removed / n_vecs").as("removal_rate"))
-      .orderBy("pct")
-  }
+  /** [[semanticDedup]]'s scale path as its own gate query
+    * (`d_semantic_dedup_auto`): the same edge-based drop rule — a vector
+    * is a duplicate iff some LOWER-id vector shares its CELL at cosine ≥
+    * [[NearDupCos]] — over the routed cell-blocked pair relation; the
+    * per-block quadratic is occupancy-bounded (∝ N·occ). */
+  def semanticDedupAuto(s: SparkSession, d: String): DataFrame =
+    dedupOver(nearDupPairsCellsRouted(embeddings(s, d)), embeddings(s, d))
 
-  /** SemDeDup THRESHOLD SWEEP — the ε dial for the embedding tier,
-    * the [[thresholdSweep]] discipline applied to cosine instead of
-    * Jaccard: pair count, touched-document count, removals under the
-    * [[semanticDedup]] edge rule (every non-minimal pair member), and
-    * the corpus removal rate at cosine ∈ {0.30, 0.40, 0.50, 0.60} —
-    * bracketing the production [[NearDupCos]] = 0.40 so a curator sees
-    * what ±0.1 of threshold would have cost or spared BEFORE rerunning
-    * the dedup. Thresholds ride as integer-percent keys; each compare
-    * is against pct/100 computed identically (one IEEE division of the
-    * same integers) in both engines.
-    *
-    * Plan/scale: the SAME label-blocked pairwise pass as
-    * [[embeddingNearDup]] (the threshold filter was post-join anyway —
-    * the sweep costs ONE extra 4-way melt, not four passes), two
+  /** The SemDeDup THRESHOLD-SWEEP rollup over an UNFILTERED scored pair
+    * relation: pair count, touched-document count, removals under the
+    * [[semanticDedup]] edge rule (every non-minimal pair member), and the
+    * corpus removal rate at cosine ∈ {0.30, 0.40, 0.50, 0.60}.
+    * Thresholds ride as integer-percent keys; each compare is against
+    * pct/100 computed identically (one IEEE division of the same
+    * integers) in both engines. ONE 4-way melt (not four passes), two
     * pct-keyed aggs, a 1-row corpus count broadcast. A threshold with
-    * zero pairs emits no row — itself a reading. Label blocking
-    * carries the fixed-block quadratic the r16 100× probe measured
-    * (blocks ∝ N → Σnᵢ² ≈ N²/|labels|): at corpus scale run the sweep
-    * over [[nearDupPairsCells]] (drop the threshold filter, melt the
-    * same way) — the occupancy-blocked pair base is ∝ N. */
-  def semanticSweep(s: SparkSession, d: String): DataFrame = {
-    val v = embeddings(s, d)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        expr(s"sqrt(${Vec.normSq("embedding")})").as("nrm"))
-    val pairs = v.as("a")
-      .join(v.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        expr(s"(${Vec.dot("`a`.embedding", "`b`.embedding")}) / (`a`.nrm * `b`.nrm)")
-          .as("cosine"))
+    * zero pairs emits no row — itself a reading. */
+  private def sweepOver(pairs: DataFrame, corpus: DataFrame): DataFrame = {
     val melt = pairs
       .select(col("a_id"), col("b_id"), col("cosine"),
         explode(expr("array(30L, 40L, 50L, 60L)")).as("pct"))
@@ -2225,7 +2005,7 @@ object DedupOps {
       .select(col("pct"), explode(expr("array(a_id, b_id)")).as("node"))
       .distinct()
       .groupBy("pct").agg(count(lit(1)).as("n_dup_docs"))
-    val tot = embeddings(s, d).agg(count(lit(1)).as("n_vecs"))
+    val tot = corpus.agg(count(lit(1)).as("n_vecs"))
     g.join(nodes, Seq("pct"))
       .crossJoin(broadcast(tot))
       .select(col("pct"), col("n_pairs"), col("n_dup_docs"),
@@ -2234,19 +2014,39 @@ object DedupOps {
       .orderBy("pct")
   }
 
+  /** [[semanticSweep]]'s scale path as its own gate query
+    * (`d_semantic_sweep_auto`): the identical [[sweepOver]] rollup over
+    * the routed CELL-blocked pair base (∝ N where label blocking is
+    * ∝ N²). Readings differ from the label-blocked sweep BY DESIGN:
+    * each blocking only sees its own within-block pairs, and this is
+    * the one the corpus-scale dedup would act on. */
+  def semanticSweepAuto(s: SparkSession, d: String): DataFrame =
+    sweepOver(cellPairsAllRouted(embeddings(s, d)), embeddings(s, d))
+
+  /** SemDeDup THRESHOLD SWEEP — the ε dial for the embedding tier,
+    * the [[thresholdSweep]] discipline applied to cosine instead of
+    * Jaccard, bracketing the production [[NearDupCos]] = 0.40 so a
+    * curator sees what ±0.1 of threshold would have cost or spared
+    * BEFORE rerunning the dedup: the [[sweepOver]] rollup over the SAME
+    * label-blocked pairwise pass as [[embeddingNearDup]] (the threshold
+    * filter was post-join anyway). Label blocking carries the
+    * fixed-block quadratic the r16 100× probe measured (blocks ∝ N →
+    * Σnᵢ² ≈ N²/|labels|): at corpus scale [[semanticSweepAuto]] runs
+    * the same rollup over the occupancy-blocked pair base. */
+  def semanticSweep(s: SparkSession, d: String): DataFrame =
+    sweepOver(labelPairsAll(s, d), embeddings(s, d))
+
   /** Near-dup CLUSTERS at the EMBEDDING tier — the SemDeDup decision
     * grain, completing the clustering ladder (text-exact
     * [[dedupClusters]], text-sketch [[minhashClusters]], perceptual
     * [[graft.ops.MultimodalOps.phashClusters]], and now semantic):
-    * connected components over the blocked cosine-similarity pair graph,
-    * one canonical (min-id) vector per component — what
+    * [[clustersOver]] the label-blocked cosine pair graph — what
     * [[semanticDedup]]'s edge-based drop rule stops short of (it drops
     * every non-minimal member of a chain even when nothing kept
     * resembles it; the component view keeps exactly one per transitive
-    * group). Same shared [[dedupClustersFrom]] machinery. */
+    * group). */
   def embeddingClusters(s: SparkSession, d: String): DataFrame =
-    dedupClustersFrom(nearDupPairs(s, d).select(col("a_id"), col("b_id")))
-      .select(col("doc_id").as("vec_id"), col("cluster_id"))
+    clustersOver(nearDupPairs(s, d))
 
   /** SemDeDup-style semantic dedup: within each block (label here; the
     * embedding's coarse cluster id in production), a vector is a duplicate
@@ -2261,22 +2061,10 @@ object DedupOps {
     * caller can either filter (`NOT is_dup`) or audit the kill rate per
     * block.
     *
-    * Plan/scale: same blocked pairwise core as [[embeddingNearDup]] (the
-    * per-block join never goes corpus-wide), then one distinct on the
-    * dropped ids and a left join back on vec_id — both shuffles on the
-    * uniform id key. The cosine chain is the codegen'd vec_dot. */
-  def semanticDedup(s: SparkSession, d: String): DataFrame = {
-    // the dropped set IS the near-dup report's higher-id column — derived
-    // from the shared pair relation, not a re-stated join/threshold
-    val dropped = nearDupPairs(s, d)
-      .select(col("b_id").as("vec_id")).distinct()
-      .withColumn("is_dup", lit(true))
-    embeddings(s, d).select(col("vec_id"), col("label"))
-      .join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("label"),
-        coalesce(col("is_dup"), lit(false)).as("is_dup"))
-      .orderBy("vec_id")
-  }
+    * Plan/scale: [[dedupOver]] the same blocked pairwise core as
+    * [[embeddingNearDup]] (the per-block join never goes corpus-wide). */
+  def semanticDedup(s: SparkSession, d: String): DataFrame =
+    dedupOver(nearDupPairs(s, d), embeddings(s, d))
 
   /** Pairwise source-overlap matrix: distinct-shingle Jaccard between
     * every pair of SOURCES (crawls, dumps, vendors) that share at least
@@ -2459,9 +2247,9 @@ object DedupOps {
 
   /** The unfiltered cell-blocked scored pair CTE over the
     * [[graft.ops.SimilarityOps.AutoCellCtes]] `assigned` relation — the
-    * DuckDB twin of [[cellPairsAll]], shared by the three auto-twin
-    * oracles (clusters / dedup / sweep) so the pair grain can never
-    * diverge between them. */
+    * DuckDB twin of [[nearDupPairsCells]] before its threshold, shared
+    * by the three auto-twin oracles (clusters / dedup / sweep) so the
+    * pair grain can never diverge between them. */
   private val CellPairsCte: String = s"""
       cp AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
                $NearDupCosSql AS cosine
@@ -3349,7 +3137,7 @@ object DedupOps {
     "d_semantic_dedup_auto" -> semanticDedupAuto,
     "d_semantic_sweep_auto" -> semanticSweepAuto,
     "d_embedding_neardup_probe2" -> embeddingNearDupProbe2,
-    "d_embedding_neardup_trained" -> embeddingNearDupTrained,
+    "d_embedding_neardup_trained" -> embeddingNearDupHier,
     "d_embedding_neardup_hier" -> embeddingNearDupHier,
     "d_neardup_recall" -> nearDupRecall,
     "d_neardup_recall_grid" -> nearDupRecallGrid,
@@ -3655,6 +3443,28 @@ object DedupOps {
                     FROM k${k}c) z
               WHERE n = mx GROUP BY 1)"""
   }.mkString(",\n      ")
+
+  /** The oracle of the hierarchically-trained pair relation — ONE string
+    * for both names it serves (`d_embedding_neardup_hier` and the
+    * re-gated `d_embedding_neardup_trained`): the full
+    * [[graft.ops.SimilarityOps.HierChain]] replay. */
+  private val HierPairsOracle = s"""
+      WITH ${SimilarityOps.AutoCellCtes},
+      ${SimilarityOps.TwoLevelCtes},
+      ${SimilarityOps.HierChain},
+      hbase AS (SELECT e.vec_id, e.embedding,
+                  sqrt(list_reduce(list_prepend(0::DOUBLE,
+                    list_transform(e.embedding,
+                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
+                    (a, v) -> a + v)) AS nrm,
+                  hasg.cell
+                FROM embeddings e JOIN hasg ON e.vec_id = hasg.vec_id)
+      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+             $NearDupCosSql AS cosine
+      FROM hbase a JOIN hbase b
+        ON a.cell = b.cell AND a.vec_id < b.vec_id
+      WHERE $NearDupCosSql >= $NearDupCos
+      ORDER BY a_id, b_id"""
 
   val oracles: Map[String, String] = Map(
     // The [[kcore]] oracle peels via a RECURSIVE CTE (r12 verdict ask
@@ -4454,23 +4264,7 @@ object DedupOps {
              (SELECT count(*) FROM brute JOIN rp USING (a_id, b_id))
                / nt.n_true AS recall
       FROM nt""",
-    "d_embedding_neardup_hier" -> s"""
-      WITH ${SimilarityOps.AutoCellCtes},
-      ${SimilarityOps.TwoLevelCtes},
-      ${SimilarityOps.HierChain},
-      hbase AS (SELECT e.vec_id, e.embedding,
-                  sqrt(list_reduce(list_prepend(0::DOUBLE,
-                    list_transform(e.embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-                    (a, v) -> a + v)) AS nrm,
-                  hasg.cell
-                FROM embeddings e JOIN hasg ON e.vec_id = hasg.vec_id)
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             $NearDupCosSql AS cosine
-      FROM hbase a JOIN hbase b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE $NearDupCosSql >= $NearDupCos
-      ORDER BY a_id, b_id""",
+    "d_embedding_neardup_hier" -> HierPairsOracle,
     "d_neardup_recall_melt" -> s"""
       WITH ${SimilarityOps.AutoCellCtes},
       ${SimilarityOps.routeMeltCtes(s"vec_id < $NearDupRecallSample")},
@@ -4499,27 +4293,9 @@ object DedupOps {
              coalesce(ct.n_caught, 0) / nt.n_true AS recall
       FROM gr LEFT JOIN ct USING (cb, p1) CROSS JOIN nt
       ORDER BY cb, p1""",
-    // r19 DECLARED RE-GATE (r18 verdict ask #1): the trained tier now
-    // trains hierarchically, so its oracle is the full HierChain replay
-    // (identical to d_embedding_neardup_hier's — the re-gate makes the
-    // two queries compute the same relation by design)
-    "d_embedding_neardup_trained" -> s"""
-      WITH ${SimilarityOps.AutoCellCtes},
-      ${SimilarityOps.TwoLevelCtes},
-      ${SimilarityOps.HierChain},
-      hbase AS (SELECT e.vec_id, e.embedding,
-                  sqrt(list_reduce(list_prepend(0::DOUBLE,
-                    list_transform(e.embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-                    (a, v) -> a + v)) AS nrm,
-                  hasg.cell
-                FROM embeddings e JOIN hasg ON e.vec_id = hasg.vec_id)
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             $NearDupCosSql AS cosine
-      FROM hbase a JOIN hbase b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE $NearDupCosSql >= $NearDupCos
-      ORDER BY a_id, b_id""",
+    // r19 DECLARED RE-GATE (r18 verdict ask #1): the trained tier IS
+    // the hier relation, so it is checked against the same oracle string
+    "d_embedding_neardup_trained" -> HierPairsOracle,
     "d_neardup_recall_grid" -> s"""
       WITH ${SimilarityOps.AutoCellCtes},
       assignedk AS (

@@ -6,7 +6,7 @@ import graft.{SparkEntry, SparkSpec}
   * advice r6 #8): a compact operator-count fingerprint of each executed
   * plan, committed here, so a lost pushdown, a surprise Exchange, or a
   * join flavor change fails CI loudly instead of waiting for a manual
-  * `graft.Probe` audit. [[PlanSpec]] asserts targeted INVARIANTS (the
+  * `graft.Dev plan` audit. [[PlanSpec]] asserts targeted INVARIANTS (the
   * properties that must hold); this spec pins the WHOLE coarse shape —
   * an intentional plan improvement updates the table (print actuals with
   * GRAFT_PLAN_SNAPSHOT_PRINT=1), an accidental one fails.
@@ -486,6 +486,39 @@ class PlanSnapshotSpec extends SparkSpec {
       } else assert(got == want,
         s"$q plan shape drifted:\n  pinned: $want\n  actual: $got\n" +
           "If intentional, re-pin via GRAFT_PLAN_SNAPSHOT_PRINT=1.")
+    }
+  }
+
+  // The embedding near-dup tier's output schemas, recorded from the tier
+  // before its builders were folded onto one cosine-pair enumerator. The
+  // oracle compare sorts columns by name, so only this pin sees order.
+  private val nearDupSchemas = Seq(
+    "d_embedding_neardup" -> "a_id:bigint,b_id:bigint,label:int,cosine:double",
+    "d_embedding_neardup_auto" -> "a_id:bigint,b_id:bigint,cell:bigint,cosine:double",
+    "d_embedding_neardup_probe2" -> "a_id:bigint,b_id:bigint,cosine:double",
+    "d_embedding_neardup_trained" -> "a_id:bigint,b_id:bigint,cosine:double",
+    "d_embedding_neardup_hier" -> "a_id:bigint,b_id:bigint,cosine:double",
+    "d_neardup_recall" -> "probe:bigint,n_true:bigint,n_caught:bigint,recall:double",
+    "d_neardup_recall_grid" ->
+      "codebook:string,probe:bigint,n_true:bigint,n_caught:bigint,recall:double",
+    "d_neardup_recall_2level" -> "n_true:bigint,n_caught:bigint,recall:double",
+    "d_neardup_recall_melt" ->
+      "cb:string,p1:bigint,n_true:bigint,n_caught:bigint,recall:double",
+    "d_embedding_clusters" -> "vec_id:bigint,cluster_id:bigint",
+    "d_embedding_clusters_auto" -> "vec_id:bigint,cluster_id:bigint",
+    "d_semantic_dedup" -> "vec_id:bigint,label:int,is_dup:boolean",
+    "d_semantic_dedup_auto" -> "vec_id:bigint,label:int,is_dup:boolean",
+    "d_semantic_sweep" -> ("pct:bigint,n_pairs:bigint,n_dup_docs:bigint," +
+      "n_removed:bigint,n_vecs:bigint,removal_rate:double"),
+    "d_semantic_sweep_auto" -> ("pct:bigint,n_pairs:bigint,n_dup_docs:bigint," +
+      "n_removed:bigint,n_vecs:bigint,removal_rate:double"))
+
+  test("the 15 near-dup tier queries keep their column names, order " +
+      "and types") {
+    for ((q, want) <- nearDupSchemas) {
+      val got = SparkEntry.queries(q)(spark, sf).schema.fields
+        .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+      assert(got == want, s"$q schema drifted")
     }
   }
 }

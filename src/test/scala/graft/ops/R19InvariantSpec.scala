@@ -143,12 +143,18 @@ class R19InvariantSpec extends SparkSpec {
       "near-dup pairs at gate SF") {
     graft.GraftSession.init(spark)
     val d = "/root/testdata/sf0.01"
-    val trained = DedupOps.embeddingNearDupTrained(spark, d)
+    val trained = DedupOps.queries("d_embedding_neardup_trained")(spark, d)
     val hier = DedupOps.embeddingNearDupHier(spark, d)
     val tk = pairKey(trained)
     assert(tk == pairKey(hier),
       "trained must equal hier after the declared re-gate")
     assert(tk.nonEmpty, "gate corpus must produce near-dup pairs")
+  }
+
+  test("d_embedding_neardup_trained and d_embedding_neardup_hier are " +
+      "checked against the same oracle string") {
+    val o = graft.SparkEntry.oracleSql
+    assert(o("d_embedding_neardup_trained") == o("d_embedding_neardup_hier"))
   }
 
   test("s_triplets_auto (routed assignment, K ∝ N policy) equals the " +
