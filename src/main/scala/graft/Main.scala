@@ -47,12 +47,8 @@ object Main {
       case "--simple" :: t               => simple = true; t
       case ("-g" | "--glob") :: v :: t   => glob = Some(v); t
       case "--row-group-size" :: v :: t  =>
-        rowGroupSize =
-          try v.toInt
-          catch { case _: NumberFormatException =>
-            GraftError.raise(GraftError.InvalidArgument(
-              s"--row-group-size expects a number, got '$v'"))
-          }
+        rowGroupSize = v.toIntOption.filter(_ > 0).getOrElse(GraftError.raise(
+          GraftError.InvalidArgument(s"--row-group-size expects a positive number, got '$v'")))
         t
       case other :: _ =>
         GraftError.raise(GraftError.InvalidArgument(s"unknown argument: $other"))

@@ -52,17 +52,24 @@ import graft.zip.{GlobRegex, GraftError, ZipExtract}
   * Options: `glob` (wax-style entry-name glob, as `-g`, src/main.rs:38-40)
   * and `maxBodyBytes` (per-entry scale guard, a non-negative integer,
   * default 1 GiB).
-  * Partitioning: one [[InputPartition]] per archive, except that a scan
-  * which reads entry data (`body` or `hash`) splits an archive larger than
-  * [[ZipScan.cutTarget]] into contiguous entry ranges of about equal
-  * compressed bytes. The central directory, read once on the driver, says
-  * where every entry starts, so a range task seeks straight to its first
-  * entry; the reference instead caps an archive at one thread
-  * (src/builder.rs:49-50,64). Scans of no data column (names-only,
-  * COUNT(*)) read only the directory and keep one task per archive. Rows
-  * come in archive order, then entry order. Entries stream one at a time,
-  * so task memory is bounded by the archive's central directory plus one
-  * decompressed entry, never the archive.
+  * Partitioning: about one [[InputPartition]] per core, each a contiguous
+  * run of archives and entry ranges of about equal bytes. One target,
+  * [[ZipScan.cutTarget]] (a core's even share of the scan's archive
+  * bytes), serves twice: a scan which reads entry data (`body` or `hash`)
+  * first cuts an archive above it into contiguous entry ranges of about
+  * equal compressed bytes, and then the ordered run of whole archives and
+  * ranges is packed into partitions of about that many bytes, as Spark's
+  * own file sources pack small files into `maxSplitBytes` splits. The
+  * central directory, read once on the driver, says where every entry
+  * starts, so a range task seeks straight to its first entry; the
+  * reference instead caps an archive at one thread
+  * (src/builder.rs:49-50,64), and runs one thread per archive however
+  * small. Scans of no data column (names-only, COUNT(*)) read only the
+  * directories: they pack whole archives and read nothing on the driver.
+  * A task reads its archives one at a time. Rows come in archive order,
+  * then entry order. Entries stream one at a time, so task memory is
+  * bounded by one archive's central directory plus one decompressed
+  * entry, never the archive.
   */
 class ZipDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zip"
@@ -101,7 +108,7 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
       v.toLongOption.filter(_ >= 0).getOrElse(GraftError.raise(GraftError.InvalidArgument(
         s"option maxBodyBytes expects a non-negative integer, got '$v'")))
     }
-  private[sources] val archives: Seq[ZipInputPartition] =
+  private[sources] val archives: Seq[ZipSlice] =
     ZipTable.list(SparkSession.active, paths)
 
   private def paths: Seq[String] = {
@@ -126,7 +133,7 @@ object ZipTable {
     * FileSystem; `displayPath` is the plain path for the `source` column
     * (the reference stores the path as given, src/builder.rs:216 — local
     * files there carry no `file:` scheme). */
-  def list(spark: SparkSession, patterns: Seq[String]): Seq[ZipInputPartition] = {
+  def list(spark: SparkSession, patterns: Seq[String]): Seq[ZipSlice] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val archives = patterns.flatMap { pat =>
       val p = new Path(pat)
@@ -135,7 +142,7 @@ object ZipTable {
         .filter(_.isFile).map { st =>
           val uri = st.getPath.toUri
           val display = if (uri.getScheme == "file") uri.getPath else st.getPath.toString
-          ZipInputPartition(st.getPath.toString, display, st.getLen)
+          ZipSlice(st.getPath.toString, display, st.getLen)
         }
     }.distinctBy(_.readPath).sortBy(_.readPath)
     if (archives.isEmpty) GraftError.raise(GraftError.NoInputsFound(patterns))
@@ -185,7 +192,8 @@ class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
     * A broadcast join against a small manifest (the ingest-dedup story:
     * "only archives not yet ingested") hands the scan an IN-set of source
     * paths after the build side materializes; [[planInputPartitions]] then
-    * drops whole archives before a single byte is opened. Partition-exact:
+    * drops the slices of every other archive, and the partitions left
+    * empty, before a single byte is opened. Partition-exact:
     * `source` is constant per archive, so archive-level pruning applies
     * the filter fully and Spark's join stays correct either way. */
   private var runtimeFilters: Array[Filter] = Array.empty
@@ -223,31 +231,43 @@ class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
     Array(new ZipEntriesRead)
 
   /** The scan's partitions before runtime filtering, made once because
-    * Spark plans every copy of the scan node again: one per archive the
-    * pushed filters keep, except that a scan which reads entry data splits
-    * an archive above [[ZipScan.cutTarget]] into entry ranges (its central
-    * directory is read here, on the driver), or drops it when the glob and
-    * pushed filters leave it no entry. */
+    * Spark plans every copy of the scan node again. The archives the
+    * pushed filters keep are weighed by their listed bytes; a scan which
+    * reads entry data cuts an archive above [[ZipScan.cutTarget]] into
+    * entry ranges (its central directory is read here, on the driver), or
+    * drops it when the glob and pushed filters leave it no entry. The
+    * ordered run of archives and ranges is then cut at the same target
+    * into contiguous packs, one partition each. */
   private lazy val plan: Seq[ZipInputPartition] = {
     val kept = table.archives.filter(a => ZipFilterEval.sourceMayMatch(filters, a.displayPath))
-    lazy val target = ZipScan.cutTarget(kept.map(_.bytes).sum,
+    val target = ZipScan.cutTarget(kept.map(_.bytes).sum,
       SparkSession.active.sparkContext.defaultParallelism)
-    kept.flatMap(a => if (readsData && a.bytes > target) split(a, target) else Seq(a))
+    val slices = kept.flatMap(a =>
+      if (readsData && a.bytes > target) split(a, target) else Seq(a -> a.bytes)).toIndexedSeq
+    ZipScan.cut(slices.map(_._2), target).map { case (from, until) =>
+      ZipInputPartition(slices.slice(from, until).map(_._1))
+    }
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    plan.filter(a => ZipFilterEval.sourceMayMatch(runtimeFilters, a.displayPath)).toArray
+    plan.flatMap { p =>
+      val kept = p.slices.filter(s => ZipFilterEval.sourceMayMatch(runtimeFilters, s.displayPath))
+      if (kept.isEmpty) None else Some(ZipInputPartition(kept))
+    }.toArray
 
-  private def split(a: ZipInputPartition, target: Long): Seq[ZipInputPartition] = {
+  /** `a` as entry ranges, each with the compressed bytes it reads. */
+  private def split(a: ZipSlice, target: Long): Seq[(ZipSlice, Long)] = {
     val zip = ZipEntryWalk.open(a, SparkSession.active.sparkContext.hadoopConfiguration)
     val entries = try zip.entries finally zip.close()
     val emits = entries.map(ZipEntryWalk.emits(_, table.glob, filters, a))
     // entries this scan skips cost no data read: they weigh nothing
-    val ranges = ZipScan.cut(
-      entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L), target)
+    val weights = entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L)
+    val ranges = ZipScan.cut(weights, target)
     if (!emits.contains(true)) Seq.empty // no row to read: no task
-    else if (ranges.size <= 1) Seq(a)
-    else ranges.map { case (from, until) => a.copy(from = from, until = until) }
+    else if (ranges.size <= 1) Seq(a -> a.bytes)
+    else ranges.map { case (from, until) =>
+      a.copy(from = from, until = until) -> weights.slice(from, until).sum
+    }
   }
 
   /** The Hadoop conf rides one broadcast per scan (as Spark's own
@@ -260,27 +280,31 @@ class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
 }
 
 object ZipScan {
-  /** Test seam: when positive, replaces the derived cut target. */
-  @volatile private[sources] var cutTargetOverride: Long = 0L
+  /** Test seam: when positive, replaces the derived cut target, and so
+    * sets both the entry-range cut and the partition packing. */
+  @volatile private[graft] var cutTargetOverride: Long = 0L
 
-  /** Largest archive (listed bytes) a data-reading scan keeps as one
-    * partition, and the compressed bytes a split range aims at: half a
-    * core's even share of the scan's archives, so a skewed corpus still
-    * fills every core, but never below 1 MiB, where a task's fixed cost
-    * (opening the archive, reading its directory, starting a Parquet
-    * part) would outweigh its work. */
-  def cutTarget(totalBytes: Long, parallelism: Int): Long =
+  /** Bytes a scan partition aims at: a core's even share of the scan's
+    * archives (rounded up, so an even cut needs no extra task), but never
+    * below 1 MiB, where a task's fixed cost (opening its archives, reading
+    * their directories, starting a Parquet part) would outweigh its work.
+    * A data-reading scan cuts an archive above it into entry ranges; every
+    * scan packs its archives and ranges into partitions of about it. */
+  def cutTarget(totalBytes: Long, parallelism: Int): Long = {
+    val cores = math.max(parallelism, 1).toLong
     if (cutTargetOverride > 0) cutTargetOverride
-    else math.max(totalBytes / (2L * math.max(parallelism, 1)), 1L << 20)
+    else math.max((totalBytes + cores - 1) / cores, 1L << 20)
+  }
 
-  /** Cut entries with these weights (compressed bytes, in directory
-    * order) into contiguous `[from, until)` index ranges that cover every
-    * entry. Each range is non-empty and weighs at most `target`, unless it
-    * is one entry that alone weighs more; ranges aim at an equal share of
-    * the total so the last one is not a sliver. */
+  /** Cut items with these weights (an archive's entries by compressed
+    * bytes, in directory order, or a scan's archives and ranges by bytes,
+    * in row order) into contiguous `[from, until)` index ranges that cover
+    * every item. Each range is non-empty and weighs at most `target`,
+    * unless it is one item that alone weighs more; ranges aim at an equal
+    * share of the total so the last one is not a sliver. */
   def cut(weights: IndexedSeq[Long], target: Long): Seq[(Int, Int)] = {
     val total = weights.sum
-    val n = math.max(1L, (total + target - 1) / target)
+    val n = (math.max(total, 1L) - 1) / target + 1 // no overflow at Long.MaxValue
     val aim = total / n
     val out = Seq.newBuilder[(Int, Int)]
     var from = 0
@@ -317,12 +341,15 @@ object ZipEntriesRead {
   val Description = "zip entries read"
 }
 
-/** One archive, or the entries `[from, until)` of its central directory:
-  * the unit of partitioning. `bytes` is the archive's listed length. A
-  * whole archive has `until = Int.MaxValue`: its entry count is known
-  * only once a task reads the directory. */
-case class ZipInputPartition(readPath: String, displayPath: String, bytes: Long,
-    from: Int = 0, until: Int = Int.MaxValue) extends InputPartition
+/** One archive, or the entries `[from, until)` of its central directory.
+  * `bytes` is the archive's listed length. A whole archive has
+  * `until = Int.MaxValue`: its entry count is known only once a task reads
+  * the directory. */
+case class ZipSlice(readPath: String, displayPath: String, bytes: Long,
+    from: Int = 0, until: Int = Int.MaxValue)
+
+/** A scan task's input: archives and entry ranges, read in this order. */
+case class ZipInputPartition(slices: Seq[ZipSlice]) extends InputPartition
 
 case class ZipReaderFactory(
     conf: Broadcast[SerializableConfiguration],
@@ -343,7 +370,7 @@ case class ZipReaderFactory(
 private[sources] object ZipEntryWalk {
   /** Open the archive and read its central directory (typed `ReadFile`
     * when the file cannot be opened, `Zip` when it is no readable zip). */
-  def open(part: ZipInputPartition, conf: Configuration): ZipArchive = {
+  def open(part: ZipSlice, conf: Configuration): ZipArchive = {
     val in =
       try {
         val p = new Path(part.readPath)
@@ -358,14 +385,15 @@ private[sources] object ZipEntryWalk {
   /** Does this scan emit entry `e`? Directories never; then the glob and
     * the pushed filters. */
   def emits(e: ZipCdEntry, glob: Option[Pattern], filters: Array[Filter],
-      part: ZipInputPartition): Boolean =
+      part: ZipSlice): Boolean =
     !e.isDirectory &&
       glob.forall(_.matcher(e.name).matches()) &&
       ZipFilterEval.matches(filters, e.name, part.displayPath)
 }
 
-/** Streams one partition's entries as InternalRows, honoring pushed filters
-  * (before the entry read) and the pruned projection (read elision). */
+/** Streams one partition's entries as InternalRows, one archive at a
+  * time, honoring pushed filters (before the entry read) and the pruned
+  * projection (read elision). */
 class ZipPartitionReader(
     part: ZipInputPartition,
     conf: Configuration,
@@ -379,37 +407,50 @@ class ZipPartitionReader(
   private val needBody = columns.contains("body")
   private val needHash = columns.contains("hash")
 
-  private val zip = ZipEntryWalk.open(part, conf)
-  private val end = math.min(part.until, zip.entries.length)
-  private var at = part.from // index of the next directory entry to consider
+  private val slices = part.slices.iterator
+  private var slice: ZipSlice = _
+  private var zip: ZipArchive = _ // the open archive of `slice`, or null
+  private var end = 0
+  private var at = 0 // index of the next directory entry to consider
   private var current: InternalRow = _
   private var closed = false
 
   override def next(): Boolean = {
     current = null
-    if (closed) return false
-    // pushed name/source predicates run BEFORE the entry read — the DSv2
-    // form of src/builder.rs:180-183
-    val entries = zip.entries
-    while (at < end && !ZipEntryWalk.emits(entries(at), glob, filters, part))
-      at += 1
-    if (at >= end) { close(); return false }
-    val e = entries(at)
-    at += 1
-    // read elision: src/builder.rs:185; hash src/builder.rs:196-209, body
-    // src/builder.rs:185-195
-    val (body, hash) =
-      if (needBody || needHash) zip.read(e, needBody, needHash, maxBodyBytes)
-      else (null, null)
-    val values = columns.map {
-      case "name" => UTF8String.fromString(e.name)
-      case "source" => UTF8String.fromString(part.displayPath)
-      case "body" => body
-      case "hash" => if (hash != null) UTF8String.fromString(hash) else null
+    while (!closed) {
+      if (zip == null) {
+        if (!slices.hasNext) { close(); return false }
+        slice = slices.next()
+        zip = ZipEntryWalk.open(slice, conf)
+        end = math.min(slice.until, zip.entries.length)
+        at = slice.from
+      }
+      // pushed name/source predicates run BEFORE the entry read — the DSv2
+      // form of src/builder.rs:180-183
+      val entries = zip.entries
+      while (at < end && !ZipEntryWalk.emits(entries(at), glob, filters, slice))
+        at += 1
+      if (at < end) {
+        val e = entries(at)
+        at += 1
+        // read elision: src/builder.rs:185; hash src/builder.rs:196-209, body
+        // src/builder.rs:185-195
+        val (body, hash) =
+          if (needBody || needHash) zip.read(e, needBody, needHash, maxBodyBytes)
+          else (null, null)
+        val values = columns.map {
+          case "name" => UTF8String.fromString(e.name)
+          case "source" => UTF8String.fromString(slice.displayPath)
+          case "body" => body
+          case "hash" => if (hash != null) UTF8String.fromString(hash) else null
+        }
+        current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
+        emitted += 1
+        return true
+      }
+      closeArchive()
     }
-    current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
-    emitted += 1
-    true
+    false
   }
 
   override def get(): InternalRow = current
@@ -422,7 +463,9 @@ class ZipPartitionReader(
     })
   }
 
-  override def close(): Unit = if (!closed) { closed = true; zip.close() }
+  private def closeArchive(): Unit = if (zip != null) { zip.close(); zip = null }
+
+  override def close(): Unit = if (!closed) { closed = true; closeArchive() }
 }
 
 /** Driver/executor-side evaluation of the pushed v1 filters over the two

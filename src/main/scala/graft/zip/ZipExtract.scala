@@ -105,11 +105,14 @@ object GraftError {
   * src/builder.rs:23-119), served by the one zip reader, the DSv2
   * `format("zip")` source (`graft.sources.ZipDataSource`).
   *
-  * Scale design: the unit of parallelism is one Spark task per zip archive,
-  * the reference's one-thread-per-zip grain (src/builder.rs:49-50,64),
-  * except that a read of entry data splits a large archive into entry
-  * ranges cut from its central directory, so one big archive no longer
-  * holds the whole scan on one core. We deliberately do NOT use
+  * Scale design: the unit of parallelism is about one Spark task per core,
+  * not the reference's one thread per zip (src/builder.rs:49-50,64): the
+  * scan packs contiguous runs of archives into tasks of about equal bytes,
+  * and a read of entry data first splits a large archive into entry ranges
+  * cut from its central directory, so one big archive does not hold the
+  * scan on one core and a thousand small ones do not pay a thousand task
+  * start-ups (each task of [[run]] also starts a Parquet writer). We
+  * deliberately do NOT use
   * `format("binaryFile")`, which materializes the whole archive as one row
   * (2 GiB max, full copy in memory): instead tasks open a Hadoop
   * `FileSystem` stream, read the archive's central directory, and stream
@@ -152,7 +155,8 @@ object ZipExtract {
     ZipTable.list(spark, patterns).map(a => (a.readPath, a.displayPath))
 
   /** The extractor: `format("zip")` projected to the fixed 4-column layout,
-    * one task per archive or, for a large archive, per entry range. A
+    * read by about one task per core, each a contiguous run of archives and
+    * entry ranges. A
     * column whose flag is off is a typed NULL literal, so column pruning
     * keeps it out of the scan: with neither body nor hash the entry read
     * is elided. The glob and the inputs are checked
@@ -212,6 +216,9 @@ object ZipExtract {
   def run(spark: SparkSession, cfg: ZipToParquetConfig): Unit = {
     // src/error.rs:41 + src/main.rs:57-62 — a sink must be chosen up front
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
+    // parquet-mr rejects a row-group ceiling below 1 only inside a write task
+    if (cfg.rowGroupSize <= 0) GraftError.raise(GraftError.InvalidArgument(
+      s"rowGroupSize must be positive, got ${cfg.rowGroupSize}"))
     val df0 = entries(spark, cfg)
     if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
     val outPath = new Path(cfg.output)
@@ -225,8 +232,8 @@ object ZipExtract {
     val tmp = new Path(cfg.output + ".graft-tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
     try {
-      // no exchange: every scan task (an archive or an entry range of
-      // one) encodes its own part, in parallel
+      // no exchange: every scan task (a run of archives and entry
+      // ranges) encodes its own part, in parallel
       writeParquetDir(df0, cfg, tmp.toString)
       promote(fs, tmp, outPath, cfg.output)
     } finally {

@@ -52,6 +52,13 @@ class MainSpec extends SparkSpec {
       Main.parse(Seq("-i", "a.zip", "-o", "x", "--row-group-size", "abc")))
     assert(e1.err.isInstanceOf[GraftError.InvalidArgument])
     assert(e1.err.message.contains("--row-group-size"))
+    // a row-group ceiling below 1 fails here, not inside a Parquet write task
+    for (v <- Seq("0", "-5")) {
+      val e = intercept[GraftError.GraftException](
+        Main.parse(Seq("-i", "a.zip", "-o", "x", "--row-group-size", v)))
+      assert(e.err == GraftError.InvalidArgument(
+        s"--row-group-size expects a positive number, got '$v'"))
+    }
     val e2 = intercept[GraftError.GraftException](
       Main.parse(Seq("--bogus")))
     assert(e2.err.isInstanceOf[GraftError.InvalidArgument])

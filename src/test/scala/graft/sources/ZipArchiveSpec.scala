@@ -8,7 +8,9 @@ import java.util.zip.{CRC32, ZipEntry, ZipFile, ZipOutputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 import graft.SparkSpec
 import graft.zip.{GraftError, ZipExtract}
@@ -170,43 +172,56 @@ class ZipArchiveSpec extends SparkSpec {
     assert(hashed >= bytes.length - bound, s"hash read only $hashed bytes")
   }
 
+  private val nameChar = Gen.oneOf("abcxyzABC019_-.ñéüßç".toSeq)
+  private val wideChar = Gen.oneOf("数据жλ".toSeq)
+  private val bodyGen: Gen[Array[Byte]] = Gen.oneOf(
+    Gen.choose(0, 3000).flatMap(n => Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue))
+      .map(_.toArray)),
+    // compressible: DEFLATED shrinks it
+    Gen.zip(Gen.alphaStr, Gen.choose(1, 400)).map { case (s, k) => (s * k).getBytes("UTF-8") })
+  private def entryGen(i: Int, cp437: Boolean): Gen[Spec] = for {
+    base <- Gen.listOfN(6, if (cp437) nameChar else Gen.frequency(4 -> nameChar, 1 -> wideChar))
+    kind <- Gen.choose(0, 9)
+    body <- bodyGen
+  } yield {
+    val name = s"$i/${base.mkString}"
+    if (kind == 0) Spec(name + "/", Array.emptyByteArray, stored = true) // directory
+    else Spec(name, body, stored = kind % 2 == 0)
+  }
+  /** A seeded archive: cp437 or UTF-8 names, 1–12 entries, some of them
+    * directories, and maybe a self-extracting stub in front. */
+  private val archiveGen = for {
+    cp437 <- Gen.oneOf(true, false) // cp437 names carry no EFS flag
+    n <- Gen.choose(1, 12)
+    entries <- Gen.sequence[List[Spec], Spec]((0 until n).map(entryGen(_, cp437)))
+    stub <- Gen.oneOf(Gen.const(0), Gen.choose(1, 5000)) // self-extracting stub
+  } yield (cp437, entries, Array.tabulate[Byte](stub)(i => (i * 31 + 7).toByte))
+
+  private def archiveBytes(archive: (Boolean, List[Spec], Array[Byte])): Array[Byte] = {
+    val (cp437, entries, stub) = archive
+    zipBytes(entries, if (cp437) Cp437 else StandardCharsets.UTF_8, stub)
+  }
+
+  /** `java.util.zip.ZipFile`'s file entries of the archive at `path`:
+    * (name, bytes), in directory order. */
+  private def zipFileEntries(path: String): List[(String, Array[Byte])] = {
+    val zf = new ZipFile(new File(path), Cp437)
+    try zf.entries().asScala.filterNot(_.isDirectory).map { e =>
+        val in = zf.getInputStream(e)
+        try (e.getName, in.readAllBytes()) finally in.close()
+      }.toList
+    finally zf.close()
+  }
+
   /** The parity property over 25 seeded archives. With `split`, every
     * data-reading scan cuts each archive with two or more data-bearing
     * entries into entry ranges, and the property checks that it did. */
   private def parity(split: Boolean): SCTest.Result = {
-    val nameChar = Gen.oneOf("abcxyzABC019_-.ñéüßç".toSeq)
-    val wideChar = Gen.oneOf("数据жλ".toSeq)
-    val bodyGen: Gen[Array[Byte]] = Gen.oneOf(
-      Gen.choose(0, 3000).flatMap(n => Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue))
-        .map(_.toArray)),
-      // compressible: DEFLATED shrinks it
-      Gen.zip(Gen.alphaStr, Gen.choose(1, 400)).map { case (s, k) => (s * k).getBytes("UTF-8") })
-    def entryGen(i: Int, cp437: Boolean): Gen[Spec] = for {
-      base <- Gen.listOfN(6, if (cp437) nameChar else Gen.frequency(4 -> nameChar, 1 -> wideChar))
-      kind <- Gen.choose(0, 9)
-      body <- bodyGen
-    } yield {
-      val name = s"$i/${base.mkString}"
-      if (kind == 0) Spec(name + "/", Array.emptyByteArray, stored = true) // directory
-      else Spec(name, body, stored = kind % 2 == 0)
-    }
-    val archiveGen = for {
-      cp437 <- Gen.oneOf(true, false) // cp437 names carry no EFS flag
-      n <- Gen.choose(1, 12)
-      entries <- Gen.sequence[List[Spec], Spec]((0 until n).map(entryGen(_, cp437)))
-      stub <- Gen.oneOf(Gen.const(0), Gen.choose(1, 5000)) // self-extracting stub
-    } yield (cp437, entries, Array.tabulate[Byte](stub)(i => (i * 31 + 7).toByte))
     var trial = 0
-    val prop = Prop.forAll(archiveGen) { case (cp437, entries, stub) =>
+    val prop = Prop.forAll(archiveGen) { archive =>
       trial += 1
-      val path = write(s"parity_${if (split) "split_" else ""}$trial.zip",
-        zipBytes(entries, if (cp437) Cp437 else StandardCharsets.UTF_8, stub))
-      val zf = new ZipFile(new File(path), Cp437)
-      val want = try zf.entries().asScala.filterNot(_.isDirectory).map { e =>
-          val in = zf.getInputStream(e)
-          try (e.getName, in.readAllBytes()) finally in.close()
-        }.toList
-        finally zf.close()
+      val path = write(s"parity_${if (split) "split_" else ""}$trial.zip", archiveBytes(archive))
+      val want = zipFileEntries(path)
       val got = spark.read.format("zip").load(path).select("name", "body", "hash")
         .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getString(2))).toList
       val dataEntries = want.count(_._2.nonEmpty)
@@ -229,10 +244,18 @@ class ZipArchiveSpec extends SparkSpec {
     try body finally ZipScan.cutTargetOverride = 0L
   }
 
+  private def scanOf(df: org.apache.spark.sql.DataFrame): ZipScan =
+    df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.scan.asInstanceOf[ZipScan]
+    }.get
+
   private def partitions(df: org.apache.spark.sql.DataFrame): Seq[ZipInputPartition] =
+    scanOf(df).planInputPartitions().map(_.asInstanceOf[ZipInputPartition]).toSeq
+
+  private def entriesRead(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.flatMap(_.toBatch.planInputPartitions().map(_.asInstanceOf[ZipInputPartition]))
+      case b: BatchScanExec => b.metrics(ZipEntriesRead.Name).value
+    }
 
   test("property: format(zip) rows equal java.util.zip.ZipFile's, in order, " +
       "with bytes and hashes") {
@@ -296,7 +319,8 @@ class ZipArchiveSpec extends SparkSpec {
     val whole = answers()
     assert(partitions(load().select("name", "hash")).size == 1)
     withCutTarget(20000L) {
-      val ranges = partitions(load().select("name", "hash"))
+      val packs = partitions(load().select("name", "hash"))
+      val ranges = packs.flatMap(_.slices)
       assert(ranges.size >= 4, s"only ${ranges.size} ranges")
       assert(ranges.map(_.from).head == 0 && ranges.last.until == 60 &&
         ranges.zip(ranges.tail).forall { case (a, b) => a.until == b.from })
@@ -305,19 +329,74 @@ class ZipArchiveSpec extends SparkSpec {
       // the entries-read metric, summed over the range tasks
       val df = load().select("name", "body")
       assert(df.collect().length == 60)
-      val read = df.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.metrics(ZipEntriesRead.Name).value
-      }
+      val read = entriesRead(df)
       assert(read == Seq(60L), s"entries read: $read")
       // a reader of no column (a COUNT(*)'s) serves only its range too
       val conf = spark.sparkContext.broadcast(
         new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-      val counts = ranges.map { p =>
+      val counts = packs.map { p =>
         val r = ZipReaderFactory(conf, None, Array.empty, Array.empty).createReader(p)
         try Iterator.continually(r.next()).takeWhile(identity).size finally r.close()
       }
-      assert(counts.sum == 60 && counts.forall(_ > 0), s"range counts: $counts")
+      assert(counts.sum == 60 && counts.forall(_ > 0), s"pack counts: $counts")
+    }
+  }
+
+  /** The packing property over 1–5 seeded archives in one scan, at a
+    * target of 1 byte (every entry with data its own task), at the derived
+    * target (`target` 0) or at no bound at all. */
+  private def packed(target: Long): SCTest.Result = {
+    var trial = 0
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 5).flatMap(Gen.listOfN(_, archiveGen)),
+        Gen.long) { (archives, seed) =>
+      trial += 1
+      val d = new File(dir, s"packed_${target}_$trial")
+      d.mkdirs()
+      val paths = archives.zipWithIndex.map { case (archive, k) =>
+        val f = new File(d, s"a$k.zip")
+        Files.write(f.toPath, archiveBytes(archive))
+        f.getAbsolutePath
+      }
+      val want = paths.flatMap(p => zipFileEntries(p).map { case (n, b) => (n, p, b) })
+      val rnd = new scala.util.Random(seed)
+      // rows come in path order whatever order the inputs are given in
+      val df = spark.read.format("zip").load(rnd.shuffle(paths): _*)
+        .select("name", "source", "body", "hash")
+      val got = df.collect().map(r =>
+        (r.getString(0), r.getString(1), r.getAs[Array[Byte]](2), r.getString(3))).toList
+      val rowsMatch = got.size == want.size &&
+        got.zip(want).forall { case ((name, source, body, hash), (n, p, b)) =>
+          name == n && source == p && body.sameElements(b) && hash == ZipExtract.sha256Hex(b)
+        }
+      // a runtime IN-filter on source drops exactly the other archives'
+      // slices, and the packs it empties, and moves no slice
+      val keep = paths.filter(_ => rnd.nextBoolean())
+      val scan = scanOf(spark.read.format("zip").load(paths: _*).select("name", "hash"))
+      def packs = scan.planInputPartitions().map(_.asInstanceOf[ZipInputPartition].slices).toSeq
+      val before = packs
+      scan.filter(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.In("source", keep.toArray[Any])))
+      val after = packs
+      (s"rows: ${got.map(_._1)} vs ${want.map(_._1)}" |: rowsMatch) &&
+        (s"entries read ${entriesRead(df)} for ${got.size} rows" |:
+          entriesRead(df) == Seq(got.size.toLong)) &&
+        (s"packs $before, kept $keep: $after" |:
+          after == before.map(_.filter(s => keep.contains(s.displayPath))).filter(_.nonEmpty)) &&
+        // at 1 byte no two entries with data share a task; otherwise
+        // these small archives are one task
+        (s"packs at target $target: $before" |:
+          (if (target == 1L) before.size >= want.count(_._3.nonEmpty) else before.size == 1))
+    }
+    SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), prop)
+  }
+
+  test("property: a packed scan reads every archive's ZipFile rows in path " +
+      "order, its entries-read metric sums to the rows, and a runtime source " +
+      "filter drops exactly the other archives' slices") {
+    for (target <- Seq(1L, 0L, Long.MaxValue)) {
+      val res = withCutTarget(target)(packed(target))
+      assert(res.passed, s"packed property at target $target failed: ${res.status}")
     }
   }
 }

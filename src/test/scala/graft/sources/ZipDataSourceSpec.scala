@@ -100,9 +100,11 @@ class ZipDataSourceSpec extends SparkSpec {
       .filter(col("source") === zip2)
     val scan = scanOf(df)
     assert(scan.description().contains(s"EqualTo(source,$zip2)"))
-    // archive-level pruning: only zip2 is planned as an input partition
-    assert(scan.planInputPartitions().map(_.asInstanceOf[ZipInputPartition].readPath)
-      .forall(_.endsWith("ds_two.zip")))
+    // archive-level pruning: only zip2 is planned, as one whole archive
+    val slices = scan.planInputPartitions().toSeq.map(_.asInstanceOf[ZipInputPartition].slices)
+    assert(slices.flatten.map(_.readPath).forall(_.endsWith("ds_two.zip")))
+    assert(slices.map(_.map(s => (s.displayPath, s.from, s.until))) ==
+      Seq(Seq((zip2, 0, Int.MaxValue))), s"planned: $slices")
     assert(df.collect().map(_.getString(0)).toSeq == Seq("c.txt"))
   }
 

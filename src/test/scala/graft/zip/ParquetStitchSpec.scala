@@ -10,15 +10,19 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.sources.{ZipInputPartition, ZipScan}
 
 /** The single-file sink when the scan has several tasks: each task
   * writes its own Parquet part and [[ParquetStitch]] joins the parts into
   * the one file at PATH. The joined file must read back as the rows the
   * extraction emits, in order, with valid page indexes and the footer a
-  * one-writer run gives. */
+  * one-writer run gives. The three archives here are far below the 1 MiB
+  * scan target, so by default they pack into one task; the multi-part
+  * cases set the target so that the scan plans several. */
 class ParquetStitchSpec extends SparkSpec {
 
   private lazy val dir: File = {
@@ -58,18 +62,58 @@ class ParquetStitchSpec extends SparkSpec {
     try r.getFooter finally r.close()
   }
 
+  private def withTarget[T](bytes: Long)(body: => T): T = {
+    ZipScan.cutTargetOverride = bytes
+    try body finally ZipScan.cutTargetOverride = 0L
+  }
+
+  private def listed(i: Int): Long = new File(zips(i)).length
+
+  /** Three tasks: at a target of b's and c's bytes together, a (larger)
+    * is cut into two entry ranges, its second range packs with b, and c
+    * is left alone (see [[ThreeParts]]). */
+  private def threeParts[T](body: => T): T = withTarget(listed(1) + listed(2))(body)
+
+  private val Whole = Int.MaxValue
+  private val ThreeParts = Seq(Seq(("a.zip", 0, 7)),
+    Seq(("a.zip", 7, 13), ("b.zip", 0, Whole)), Seq(("c.zip", 0, Whole)))
+
+  /** The scan tasks `cfg` plans: each one's archives and entry ranges. */
+  private def plan(cfg: ZipToParquetConfig): Seq[Seq[(String, Int, Int)]] =
+    ZipExtract.entries(spark, cfg).queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.scan.toBatch.planInputPartitions().toSeq
+    }.get.map(_.asInstanceOf[ZipInputPartition].slices
+      .map(s => (new File(s.displayPath).getName, s.from, s.until)))
+
+  test("the default plan packs the three archives into one part, its row " +
+      "groups full but the last") {
+    val out = new File(dir, "packed.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = zips, output = out, rowGroupSize = 4)
+    assert(plan(cfg) == Seq(Seq(("a.zip", 0, Whole), ("b.zip", 0, Whole), ("c.zip", 0, Whole))))
+    ZipExtract.run(spark, cfg)
+    assert(rowsOf(spark.read.parquet(out).collect()) ==
+      rowsOf(ZipExtract.entries(spark, cfg).collect()))
+    val groups = footer(out).getBlocks.asScala.map(_.getRowCount).toSeq
+    assert(groups == Seq(4, 4, 4, 4, 4, 4, 3), s"row groups: $groups")
+  }
+
   test("a multi-part run reads back as the extraction's rows, in order, in " +
       "each part's row groups") {
     val out = new File(dir, "multi.parquet").getAbsolutePath
     val cfg = ZipToParquetConfig(inputs = zips, output = out, rowGroupSize = 4)
-    ZipExtract.run(spark, cfg)
+    threeParts {
+      assert(plan(cfg) == ThreeParts)
+      ZipExtract.run(spark, cfg)
+    }
     assert(new File(out).isFile)
     assert(rowsOf(spark.read.parquet(out).collect()) ==
       rowsOf(ZipExtract.entries(spark, cfg).collect()))
     val groups = footer(out).getBlocks.asScala.map(_.getRowCount).toSeq
     assert(groups.forall(_ <= 4), s"row groups: $groups")
-    // one part per archive, in archive order: each ends with its short group
-    assert(groups == Seq(4, 4, 4, 1, 4, 1, 4, 4, 1), s"row groups: $groups")
+    // one part per planned task, in task order: 7 rows, then 6 + 5 (a
+    // group holds the end of a and the start of b), then 9; each part
+    // ends with its short group
+    assert(groups == Seq(4, 3, 4, 4, 3, 4, 4, 1), s"row groups: $groups")
     val siblings = dir.listFiles().map(_.getName)
     assert(!siblings.exists(_.contains(".graft-tmp-")) && !siblings.contains(".multi.parquet.crc"),
       s"litter left behind: ${siblings.mkString(", ")}")
@@ -83,13 +127,14 @@ class ParquetStitchSpec extends SparkSpec {
     val pageConf = Seq("parquet.page.row.count.limit" -> "2",
       "parquet.page.size.row.check.min" -> "1", "parquet.page.size.check.estimate" -> "false")
     pageConf.foreach { case (k, v) => conf.set(k, v) }
-    try ZipExtract.run(spark, cfg)
+    try threeParts(ZipExtract.run(spark, cfg))
     finally pageConf.foreach { case (k, _) => conf.unset(k) }
     val len = new File(out).length
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(out), conf))
     try {
       val blocks = r.getFooter.getBlocks.asScala
-      assert(blocks.size == 5, s"${blocks.size} row groups")
+      // 7 | 8 + 3 | 8 + 1 rows
+      assert(blocks.map(_.getRowCount) == Seq(7, 8, 3, 8, 1), s"row groups: $blocks")
       for (b <- blocks; c <- b.getColumns.asScala) {
         assert(r.readColumnIndex(c) != null, s"no column index for ${c.getPath}")
         val oi = r.readOffsetIndex(c)
@@ -114,7 +159,7 @@ class ParquetStitchSpec extends SparkSpec {
       "rest OPTIONAL, and Spark's row schema in the key-value metadata") {
     import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
     val out = new File(dir, "footer.parquet").getAbsolutePath
-    ZipExtract.run(spark, ZipToParquetConfig(inputs = zips, output = out))
+    threeParts(ZipExtract.run(spark, ZipToParquetConfig(inputs = zips, output = out)))
     val meta = footer(out).getFileMetaData
     assert(meta.getSchema.getFields.asScala.toSeq.map(f => (f.getName, f.getRepetition)) ==
       Seq("name" -> REQUIRED, "source" -> OPTIONAL, "body" -> OPTIONAL, "hash" -> OPTIONAL))
@@ -134,7 +179,12 @@ class ParquetStitchSpec extends SparkSpec {
     assert(back.count() == 0L && back.columns.toSeq == Seq("name", "source", "body", "hash"))
     val png = new File(dir, "png.parquet").getAbsolutePath
     val cfg = ZipToParquetConfig(inputs = zips, output = png, entryGlob = Some("**/*.png"))
-    ZipExtract.run(spark, cfg)
+    // at a's bytes a is not cut (so not read on the driver): it is task 0
+    // alone, with no png, and b and c pack into task 1
+    withTarget(listed(0)) {
+      assert(plan(cfg) == Seq(Seq(("a.zip", 0, Whole)), Seq(("b.zip", 0, Whole), ("c.zip", 0, Whole))))
+      ZipExtract.run(spark, cfg)
+    }
     assert(rowsOf(spark.read.parquet(png).collect()) ==
       rowsOf(ZipExtract.entries(spark, cfg).collect()))
     assert(spark.read.parquet(png).count() == 9L)
@@ -143,8 +193,8 @@ class ParquetStitchSpec extends SparkSpec {
   /** A directory of Spark parts from a multi-file run over `zips`. */
   private def partsDir(name: String): (File, Seq[File]) = {
     val d = new File(dir, name)
-    ZipExtract.run(spark, ZipToParquetConfig(inputs = zips, output = d.getAbsolutePath,
-      singleFile = false))
+    threeParts(ZipExtract.run(spark, ZipToParquetConfig(inputs = zips,
+      output = d.getAbsolutePath, singleFile = false)))
     val fs = new Path(d.getAbsolutePath).getFileSystem(conf)
     (d, ZipExtract.partFiles(fs, new Path(d.getAbsolutePath)).map(p => new File(p.toUri)))
   }

@@ -197,6 +197,22 @@ class ZipExtractSpec extends SparkSpec {
       .map(f => (f.name, if (f.nullable) OPTIONAL else REQUIRED)))
   }
 
+  test("run() rejects a row-group size below 1 typed InvalidArgument before " +
+      "any Spark job starts") {
+    val sc = spark.sparkContext
+    for (size <- Seq(0, -3)) {
+      val out = new File(dir, s"rgs_$size.parquet")
+      sc.setJobGroup("graft-row-group-size", "row-group size check")
+      val e = try intercept[GraftError.GraftException] {
+          ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(zip1),
+            output = out.getAbsolutePath, rowGroupSize = size))
+        } finally sc.clearJobGroup()
+      assert(e.err == GraftError.InvalidArgument(s"rowGroupSize must be positive, got $size"))
+      assert(sc.statusTracker.getJobIdsForGroup("graft-row-group-size").isEmpty)
+      assert(!out.exists && !dir.list().exists(_.startsWith(s"rgs_$size")))
+    }
+  }
+
   test("run(singleFile=false) writes the scalable multi-file directory layout") {
     val out = new File(dir, "out_multi.parquet").getAbsolutePath
     ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(zip1), output = out,
