@@ -111,6 +111,14 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
   private[sources] val archives: Seq[ZipSlice] =
     ZipTable.list(SparkSession.active, paths)
 
+  /** Does a scan of every entry of this table (its glob, no pushed filter)
+    * give pairwise distinct bodies? Read from the central directories on
+    * the driver, see [[ZipEntryWalk.bodiesDistinct]]; an unreadable
+    * archive fails typed `ReadFile`/`Zip` here. */
+  private[graft] def bodiesDistinct(): Boolean =
+    ZipEntryWalk.bodiesDistinct(archives, glob, Array.empty,
+      SparkSession.active.sparkContext.hadoopConfiguration)
+
   private def paths: Seq[String] = {
     val fromPaths = Option(options.get("paths")).toSeq.flatMap { json =>
       // Spark encodes multi-path load() as a JSON array of strings —
@@ -364,9 +372,10 @@ case class ZipReaderFactory(
   }
 }
 
-/** What the driver's range split and the reader share — opening an
-  * archive and the predicate for "which entries this scan emits" — so the
-  * split weighs exactly the entries the tasks read. */
+/** What the driver's directory passes (the range split, the body check)
+  * and the reader share — opening an archive and the predicate for "which
+  * entries this scan emits" — so the split weighs, and the check sees,
+  * exactly the entries the tasks read. */
 private[sources] object ZipEntryWalk {
   /** Open the archive and read its central directory (typed `ReadFile`
     * when the file cannot be opened, `Zip` when it is no readable zip). */
@@ -389,6 +398,24 @@ private[sources] object ZipEntryWalk {
     !e.isDirectory &&
       glob.forall(_.matcher(e.name).matches()) &&
       ZipFilterEval.matches(filters, e.name, part.displayPath)
+
+  /** Do the entries a scan of `archives` emits have pairwise distinct
+    * bodies, by the central directories alone? Equal bodies have equal
+    * CRC-32 and inflated size, and a read checks both against the
+    * directory, so no repeated (CRC-32, size) pair proves every body
+    * distinct; a repeat proves nothing either way. One pass in listing
+    * order, each archive read as [[open]] reads it (its tail and
+    * directory, no entry data), which stops at the first repeat — the
+    * shape of the reference's count pass (src/builder.rs:24-45). */
+  def bodiesDistinct(archives: Seq[ZipSlice], glob: Option[Pattern],
+      filters: Array[Filter], conf: Configuration): Boolean = {
+    val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    archives.forall { a =>
+      val zip = open(a, conf)
+      val entries = try zip.entries finally zip.close()
+      entries.forall(e => !emits(e, glob, filters, a) || seen.add((e.crc, e.size)))
+    }
+  }
 }
 
 /** Streams one partition's entries as InternalRows, one archive at a

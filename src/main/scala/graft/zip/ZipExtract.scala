@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -212,7 +213,17 @@ object ZipExtract {
     * `parquet.block.row.count.limit` is the same rows-per-group ceiling, so
     * the knob maps exactly. One deviation: parquet-mr ALSO closes a group
     * when the byte limit (`parquet.block.size`) fills — a safety net the
-    * reference lacks; it never fires at the reference's 100-row default. */
+    * reference lacks; it never fires at the reference's 100-row default.
+    * `body` encoding: parquet-mr tries a dictionary on every column chunk
+    * and keeps it only when, at the chunk's first page, the dictionary
+    * plus the encoded ids weigh less than the plain values. Both sides
+    * count 4 + length bytes per distinct value, so a chunk of distinct
+    * bodies always falls back to PLAIN, after hashing and copying every
+    * body into the dictionary. When [[bodiesDistinct]] proves every body
+    * distinct, `body` is written with `parquet.enable.dictionary#body`
+    * off: the same PLAIN pages (pages flush on the plain size either way),
+    * without the attempt. Otherwise the attempt stays, so duplicate-heavy
+    * corpora keep their dictionary. */
   def run(spark: SparkSession, cfg: ZipToParquetConfig): Unit = {
     // src/error.rs:41 + src/main.rs:57-62 — a sink must be chosen up front
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
@@ -220,7 +231,8 @@ object ZipExtract {
     if (cfg.rowGroupSize <= 0) GraftError.raise(GraftError.InvalidArgument(
       s"rowGroupSize must be positive, got ${cfg.rowGroupSize}"))
     val df0 = entries(spark, cfg)
-    if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
+    val plainBody = bodiesDistinct(df0, cfg)
+    if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output, plainBody); return }
     val outPath = new Path(cfg.output)
     val fs =
       try outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -234,7 +246,7 @@ object ZipExtract {
     try {
       // no exchange: every scan task (a run of archives and entry
       // ranges) encodes its own part, in parallel
-      writeParquetDir(df0, cfg, tmp.toString)
+      writeParquetDir(df0, cfg, tmp.toString, plainBody)
       promote(fs, tmp, outPath, cfg.output)
     } finally {
       // tmp holds only the committer droppings (_SUCCESS, .crc) and the
@@ -243,6 +255,16 @@ object ZipExtract {
       try fs.delete(tmp, true) catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Is `body` in `df`, a frame of [[entries]], known to hold pairwise
+    * distinct values? False when `body` is off (the directories are then
+    * not read) or when two emitted entries share a (CRC-32, size) pair;
+    * see [[graft.sources.ZipTable.bodiesDistinct]]. */
+  private[zip] def bodiesDistinct(df: DataFrame, cfg: ZipToParquetConfig): Boolean =
+    cfg.includeBody && df.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[ZipTable] =>
+        r.table.asInstanceOf[ZipTable]
+    }.exists(_.bodiesDistinct())
 
   /** Spark's part files in `dir`, in row order: by the partition index in
     * `part-NNNNN-…`, then the `cNNN` file counter. */
@@ -292,16 +314,19 @@ object ZipExtract {
         GraftError.raise(GraftError.WriteFile(output, e.toString))
     }
 
-  private def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,
-      target: String): Unit = {
-    try df.write
-      .mode("overwrite")
-      .option("compression", "snappy") // src/builder.rs:253
-      // rows-per-row-group ceiling (src/builder.rs:254); writer options are
-      // copied into the task Hadoop conf, where parquet-mr reads this key
-      .option("parquet.block.row.count.limit", cfg.rowGroupSize.toString)
-      .parquet(target)
-    catch {
+  private[zip] def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,
+      target: String, plainBody: Boolean): Unit = {
+    try {
+      val writer = df.write
+        .mode("overwrite")
+        .option("compression", "snappy") // src/builder.rs:253
+        // rows-per-row-group ceiling (src/builder.rs:254); writer options are
+        // copied into the task Hadoop conf, where parquet-mr reads this key
+        .option("parquet.block.row.count.limit", cfg.rowGroupSize.toString)
+      // parquet-mr's per-column form of the dictionary switch
+      (if (plainBody) writer.option("parquet.enable.dictionary#body", "false") else writer)
+        .parquet(target)
+    } catch {
       // extraction-side typed errors pass through unchanged; failures of
       // the sink itself become WriteFile/Parquet (src/error.rs:9-12,22-24).
       // Executor-side IO errors arrive wrapped in SparkException — walk the

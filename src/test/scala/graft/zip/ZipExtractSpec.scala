@@ -5,8 +5,15 @@ import java.nio.file.Files
 import java.security.MessageDigest
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.types._
 import graft.SparkSpec
+import graft.sources.ZipScan
 
 /** Golden tests for the zip → rows extractor: schema (SURVEY.md §1.2), flag
   * matrix (reference src/builder.rs:185-217), glob filter (src/builder.rs:
@@ -282,5 +289,172 @@ class ZipExtractSpec extends SparkSpec {
         assert(h == sha(byName(n)), s"hash mismatch for $n")
       }
     }
+  }
+
+  // ---- `body` encoding: parquet-mr's dictionary attempt is skipped only
+  // when the central directories prove every emitted body distinct
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** Per row group of the file at `path`: its rows, and the `body` chunk's
+    * dictionary page, encodings and compressed size. */
+  private def bodyChunks(path: String): Seq[(Long, Boolean, Set[Encoding], Long)] = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+      val c = b.getColumns.asScala.find(_.getPath.toDotString == "body").get
+      (b.getRowCount, c.hasDictionaryPage, c.getEncodings.asScala.toSet, c.getTotalSize)
+    } finally r.close()
+  }
+
+  private def hasDictionary(c: (Long, Boolean, Set[Encoding], Long)): Boolean =
+    c._2 || c._3.exists(_.usesDictionary)
+
+  /** The one part that [[ZipExtract.writeParquetDir]] writes for `cfg`'s
+    * entries, with the `body` dictionary switched as `plainBody` says. */
+  private def partWith(cfg: ZipToParquetConfig, name: String, plainBody: Boolean): String = {
+    val d = new File(dir, name).getAbsolutePath
+    ZipExtract.writeParquetDir(ZipExtract.entries(spark, cfg), cfg, d, plainBody)
+    val parts = ZipExtract.partFiles(new Path(d).getFileSystem(conf), new Path(d))
+    assert(parts.size == 1, s"expected one part in $d, got $parts")
+    parts.head.toUri.getPath
+  }
+
+  private def bodiesDistinct(cfg: ZipToParquetConfig): Boolean =
+    ZipExtract.bodiesDistinct(ZipExtract.entries(spark, cfg), cfg)
+
+  private def randomBody(seed: Int, n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    new scala.util.Random(seed).nextBytes(b)
+    b
+  }
+
+  test("100 copies of one 8 KiB body keep the body dictionary, and the file " +
+      "its small size") {
+    val body = randomBody(8, 8192)
+    val zip = makeZip("dup100.zip", (0 until 100).map(i => f"d$i%03d.bin" -> body): _*)
+    val out = new File(dir, "dup100.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out)
+    assert(!bodiesDistinct(cfg))
+    ZipExtract.run(spark, cfg)
+    val chunks = bodyChunks(out)
+    assert(chunks.nonEmpty && chunks.forall(c => c._2 && hasDictionary(c)), chunks)
+    // no larger than a write that always tries the dictionary; a write
+    // without it stores the 100 copies PLAIN, many times larger
+    val tried = partWith(cfg, "dup100_tried", plainBody = false)
+    val plain = partWith(cfg, "dup100_plain", plainBody = true)
+    assert(new File(out).length <= new File(tried).length)
+    assert(new File(out).length * 5 < new File(plain).length,
+      s"${new File(out).length} B with the dictionary, ${new File(plain).length} B without")
+  }
+
+  test("a body repeated across two archives keeps the body dictionary") {
+    val body = randomBody(2, 4096)
+    val a = makeZip("rep_a.zip", "a.bin" -> body)
+    val b = makeZip("rep_b.zip", "b.bin" -> body)
+    val out = new File(dir, "rep.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = Seq(a, b), output = out)
+    assert(!bodiesDistinct(cfg))
+    ZipExtract.run(spark, cfg)
+    assert(bodyChunks(out).forall(c => c._2 && hasDictionary(c)))
+  }
+
+  test("two zero-length entries keep the body dictionary") {
+    val zip = makeZip("empties.zip", "e1.txt" -> Array.emptyByteArray,
+      "e2.txt" -> Array.emptyByteArray)
+    val out = new File(dir, "empties.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out)
+    assert(!bodiesDistinct(cfg))
+    ZipExtract.run(spark, cfg)
+    assert(bodyChunks(out).forall(c => c._2 && hasDictionary(c)))
+  }
+
+  test("a repeat only among entries the glob excludes turns the body " +
+      "dictionary off") {
+    val dup = randomBody(3, 2048)
+    val zip = makeZip("globbed.zip", "keep/a.txt" -> randomBody(4, 900),
+      "skip/x.bin" -> dup, "keep/b.txt" -> randomBody(5, 1100), "skip/y.bin" -> dup)
+    val out = new File(dir, "globbed.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out,
+      entryGlob = Some("keep/*.txt"))
+    assert(bodiesDistinct(cfg))
+    assert(!bodiesDistinct(cfg.copy(entryGlob = None)))
+    ZipExtract.run(spark, cfg)
+    val chunks = bodyChunks(out)
+    assert(chunks.map(_._1).sum == 2 && !chunks.exists(hasDictionary), chunks)
+  }
+
+  test("an all-distinct multi-archive run writes body PLAIN with no " +
+      "dictionary page, the same pages as a write that tries the dictionary, " +
+      "and reads back as the extraction's rows, in order") {
+    val rnd = new scala.util.Random(11)
+    val zips = (0 until 3).map { z =>
+      makeZip(s"distinct_$z.zip", (0 until 40 + 30 * z).map { i =>
+        f"z$z/e$i%03d.bin" -> randomBody(1000 * z + i, 100 + rnd.nextInt(4000))
+      }: _*)
+    }
+    val out = new File(dir, "distinct.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = zips, output = out, rowGroupSize = 30)
+    assert(bodiesDistinct(cfg))
+    // at the smallest archive's bytes the other two are cut into entry
+    // ranges: several parts, stitched
+    ZipScan.cutTargetOverride = new File(zips.head).length
+    try ZipExtract.run(spark, cfg) finally ZipScan.cutTargetOverride = 0L
+    val chunks = bodyChunks(out)
+    assert(chunks.map(_._1).sum == 210 && chunks.forall(_._1 <= 30) && chunks.size > 7)
+    assert(!chunks.exists(hasDictionary), chunks)
+    assert(chunks.forall(_._3.contains(Encoding.PLAIN)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getString(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq, r.getString(3)))
+    assert(rows(spark.read.parquet(out)) == rows(ZipExtract.entries(spark, cfg)))
+    // one archive written both ways: the same groups and body chunk sizes
+    val one = cfg.copy(inputs = zips.take(1))
+    val tried = bodyChunks(partWith(one, "distinct_tried", plainBody = false))
+    val skipped = bodyChunks(partWith(one, "distinct_plain", plainBody = true))
+    assert(tried.map(c => (c._1, c._2, c._4)) == skipped.map(c => (c._1, c._2, c._4)))
+  }
+
+  /** Bytes read so far through Hadoop's local (`file`) FileSystem. */
+  private def fsReadBytes(): Long =
+    FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
+
+  test("the body check reads only each archive's tail and directory, and " +
+      "nothing when body is off") {
+    val zips = (0 until 2).map(z => makeZip(s"traffic_$z.zip",
+      (0 until 60).map(i => f"t$i%02d.bin" -> randomBody(100 * z + i, 20000)): _*))
+    // the tail holds the longest end record and the ZIP64 records
+    val bound = zips.map { p =>
+      val b = java.nio.file.Files.readAllBytes(new File(p).toPath)
+      val cen = java.nio.ByteBuffer.wrap(b, b.length - 22 + 12, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt.toLong
+      math.min(b.length.toLong, 0xFFFFL + 22 + 20 + 56) + cen
+    }.sum
+    def readOf(cfg: ZipToParquetConfig, expect: Boolean): Long = {
+      val df = ZipExtract.entries(spark, cfg)
+      val before = fsReadBytes()
+      assert(ZipExtract.bodiesDistinct(df, cfg) == expect)
+      fsReadBytes() - before
+    }
+    val cfg = ZipToParquetConfig(inputs = zips)
+    val read = readOf(cfg, expect = true)
+    assert(read > 0 && read <= bound, s"the check read $read bytes, the tails and " +
+      s"directories are $bound of ${zips.map(new File(_).length).sum}")
+    assert(readOf(cfg.copy(includeBody = false), expect = false) == 0L)
+  }
+
+  test("an unreadable archive fails typed Zip on the driver, before the " +
+      "write job") {
+    val f = new File(dir, "truncated.zip")
+    val whole = java.nio.file.Files.readAllBytes(new File(zip1).toPath)
+    java.nio.file.Files.write(f.toPath, whole.take(whole.length - 30))
+    val out = new File(dir, "truncated.parquet")
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-body-check", "body check errors")
+    val e = try intercept[GraftError.GraftException] {
+        ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(f.getAbsolutePath),
+          output = out.getAbsolutePath))
+      } finally sc.clearJobGroup()
+    assert(e.err.isInstanceOf[GraftError.Zip], e.err)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-body-check").isEmpty)
+    assert(!out.exists)
   }
 }
