@@ -1,7 +1,11 @@
 package graft.sources
 
 import java.util
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap, ExecutionException, Executors}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import java.util.regex.Pattern
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -18,6 +22,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import shaded.parquet.it.unimi.dsi.fastutil.longs.LongOpenHashSet
 
 import graft.zip.{GlobRegex, GraftError, ZipExtract}
 
@@ -108,16 +113,78 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
       v.toLongOption.filter(_ >= 0).getOrElse(GraftError.raise(GraftError.InvalidArgument(
         s"option maxBodyBytes expects a non-negative integer, got '$v'")))
     }
-  private[sources] val archives: Seq[ZipSlice] =
+  private[graft] val archives: Seq[ZipSlice] =
     ZipTable.list(SparkSession.active, paths)
 
-  /** Does a scan of every entry of this table (its glob, no pushed filter)
-    * give pairwise distinct bodies? Read from the central directories on
-    * the driver, see [[ZipEntryWalk.bodiesDistinct]]; an unreadable
-    * archive fails typed `ReadFile`/`Zip` here. */
-  private[graft] def bodiesDistinct(): Boolean =
-    ZipEntryWalk.bodiesDistinct(archives, glob, Array.empty,
-      SparkSession.active.sparkContext.hadoopConfiguration)
+  /** Directories [[bodiesDistinct]] read of the archives a data scan cuts
+    * into entry ranges, each taken (and dropped) by the first such scan's
+    * split instead of read a second time. */
+  private val checked = new ConcurrentHashMap[String, Array[ZipCdEntry]]()
+
+  /** `a`'s central directory: as [[bodiesDistinct]] left it, else read. */
+  private[sources] def takeDirectory(a: ZipSlice, conf: Configuration): Array[ZipCdEntry] =
+    Option(checked.remove(a.readPath)).getOrElse(ZipEntryWalk.directory(a, conf))
+
+  /** Do the entries a scan of this table emits (its glob, no pushed
+    * filter) have pairwise distinct bodies, by the central directories
+    * alone? Equal bodies have equal CRC-32 and inflated size, and a read
+    * checks both against the directory, so no repeated (CRC-32, size)
+    * pair proves every body distinct; a repeat proves nothing either way.
+    * The pair is packed into one long (the CRC above the size's low 32
+    * bits): two pairs that pack alike only look like a repeat, which
+    * answers false, the safe side.
+    *
+    * Reads each archive's tail and directory, no entry data, on
+    * [[ZipTable.DirectoryThreads]] driver threads, and stops at the first
+    * repeat: the shape of the reference's count pass
+    * (src/builder.rs:24-45). Driver memory is the set (a primitive
+    * open-addressed one, 8-byte slots at most three quarters full) plus
+    * one directory per thread. The directories of archives above the
+    * table's cut target stay for the scan's split. An unreadable archive
+    * fails typed `ReadFile`/`Zip` here (the first in listing order of
+    * those read). */
+  private[graft] def bodiesDistinct(): Boolean = {
+    val sc = SparkSession.active.sparkContext
+    val conf = sc.hadoopConfiguration
+    val listed = archives.toIndexedSeq
+    val cutAbove = ZipScan.cutTarget(listed.map(_.bytes).sum, sc.defaultParallelism)
+    val seen = new LongOpenHashSet()
+    val next = new AtomicInteger(0)
+    val stop = new AtomicBoolean(false)
+    val repeated = new AtomicBoolean(false)
+    val failed = new ConcurrentSkipListMap[Int, Throwable]()
+    def walk(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < listed.size && !stop.get) {
+        val a = listed(i)
+        try {
+          val entries = ZipEntryWalk.directory(a, conf)
+          if (a.bytes > cutAbove) checked.put(a.readPath, entries)
+          seen.synchronized {
+            var j = 0
+            while (j < entries.length && !stop.get) {
+              val e = entries(j)
+              if (ZipEntryWalk.emits(e, glob, Array.empty, a) &&
+                  !seen.add((e.crc << 32) | (e.size & 0xFFFFFFFFL))) {
+                repeated.set(true); stop.set(true)
+              }
+              j += 1
+            }
+          }
+        } catch { case NonFatal(x) => failed.put(i, x); stop.set(true) }
+        i = next.getAndIncrement()
+      }
+    }
+    val threads = math.min(ZipTable.DirectoryThreads, listed.size)
+    val pool = Executors.newFixedThreadPool(threads, { (r: Runnable) =>
+      val t = new Thread(r, "graft-zip-directories"); t.setDaemon(true); t
+    })
+    try Seq.fill(threads)(pool.submit((() => walk()): Runnable)).foreach { f =>
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
+    } finally pool.shutdown()
+    if (!failed.isEmpty) throw failed.firstEntry.getValue
+    !repeated.get
+  }
 
   private def paths: Seq[String] = {
     val fromPaths = Option(options.get("paths")).toSeq.flatMap { json =>
@@ -135,6 +202,10 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
 }
 
 object ZipTable {
+  /** Threads [[ZipTable.bodiesDistinct]] reads directories on: enough to
+    * overlap a remote filesystem's per-open latency, few for a driver. */
+  private val DirectoryThreads = 8
+
   /** Expand input patterns (literal paths or globs, reference
     * src/builder.rs:25-29) into concrete archives via the Hadoop FS,
     * sorted by path. `readPath` keeps the full URI so tasks open the right
@@ -265,8 +336,7 @@ class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
 
   /** `a` as entry ranges, each with the compressed bytes it reads. */
   private def split(a: ZipSlice, target: Long): Seq[(ZipSlice, Long)] = {
-    val zip = ZipEntryWalk.open(a, SparkSession.active.sparkContext.hadoopConfiguration)
-    val entries = try zip.entries finally zip.close()
+    val entries = table.takeDirectory(a, SparkSession.active.sparkContext.hadoopConfiguration)
     val emits = entries.map(ZipEntryWalk.emits(_, table.glob, filters, a))
     // entries this scan skips cost no data read: they weigh nothing
     val weights = entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L)
@@ -399,22 +469,10 @@ private[sources] object ZipEntryWalk {
       glob.forall(_.matcher(e.name).matches()) &&
       ZipFilterEval.matches(filters, e.name, part.displayPath)
 
-  /** Do the entries a scan of `archives` emits have pairwise distinct
-    * bodies, by the central directories alone? Equal bodies have equal
-    * CRC-32 and inflated size, and a read checks both against the
-    * directory, so no repeated (CRC-32, size) pair proves every body
-    * distinct; a repeat proves nothing either way. One pass in listing
-    * order, each archive read as [[open]] reads it (its tail and
-    * directory, no entry data), which stops at the first repeat — the
-    * shape of the reference's count pass (src/builder.rs:24-45). */
-  def bodiesDistinct(archives: Seq[ZipSlice], glob: Option[Pattern],
-      filters: Array[Filter], conf: Configuration): Boolean = {
-    val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    archives.forall { a =>
-      val zip = open(a, conf)
-      val entries = try zip.entries finally zip.close()
-      entries.forall(e => !emits(e, glob, filters, a) || seen.add((e.crc, e.size)))
-    }
+  /** `a`'s central directory, read as [[open]] reads it. */
+  def directory(a: ZipSlice, conf: Configuration): Array[ZipCdEntry] = {
+    val zip = open(a, conf)
+    try zip.entries finally zip.close()
   }
 }
 

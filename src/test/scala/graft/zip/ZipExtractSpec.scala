@@ -320,7 +320,7 @@ class ZipExtractSpec extends SparkSpec {
   }
 
   private def bodiesDistinct(cfg: ZipToParquetConfig): Boolean =
-    ZipExtract.bodiesDistinct(ZipExtract.entries(spark, cfg), cfg)
+    ZipExtract.zipTable(ZipExtract.entries(spark, cfg)).bodiesDistinct()
 
   private def randomBody(seed: Int, n: Int): Array[Byte] = {
     val b = new Array[Byte](n)
@@ -418,7 +418,7 @@ class ZipExtractSpec extends SparkSpec {
     FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
 
   test("the body check reads only each archive's tail and directory, and " +
-      "nothing when body is off") {
+      "the split reads none of them again") {
     val zips = (0 until 2).map(z => makeZip(s"traffic_$z.zip",
       (0 until 60).map(i => f"t$i%02d.bin" -> randomBody(100 * z + i, 20000)): _*))
     // the tail holds the longest end record and the ZIP64 records
@@ -428,33 +428,72 @@ class ZipExtractSpec extends SparkSpec {
         .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt.toLong
       math.min(b.length.toLong, 0xFFFFL + 22 + 20 + 56) + cen
     }.sum
-    def readOf(cfg: ZipToParquetConfig, expect: Boolean): Long = {
-      val df = ZipExtract.entries(spark, cfg)
+    def readOf(body: => Unit): Long = {
       val before = fsReadBytes()
-      assert(ZipExtract.bodiesDistinct(df, cfg) == expect)
+      body
       fsReadBytes() - before
     }
     val cfg = ZipToParquetConfig(inputs = zips)
-    val read = readOf(cfg, expect = true)
+    val df = ZipExtract.entries(spark, cfg)
+    val read = readOf(assert(ZipExtract.zipTable(df).bodiesDistinct()))
     assert(read > 0 && read <= bound, s"the check read $read bytes, the tails and " +
       s"directories are $bound of ${zips.map(new File(_).length).sum}")
-    assert(readOf(cfg.copy(includeBody = false), expect = false) == 0L)
+    // at 1 byte both archives are above the cut target: the data scan cuts
+    // them into entry ranges from the directories the check read
+    ZipScan.cutTargetOverride = 1L
+    try {
+      val fresh = ZipExtract.entries(spark, cfg)
+      assert(readOf(fresh.rdd.getNumPartitions) > 0) // plans read them
+      val checked = ZipExtract.entries(spark, cfg)
+      assert(ZipExtract.zipTable(checked).bodiesDistinct())
+      var parts = 0
+      assert(readOf { parts = checked.rdd.getNumPartitions } == 0L)
+      assert(parts == 120) // one entry a range
+    } finally ZipScan.cutTargetOverride = 0L
+  }
+
+  test("the body check over more archives than its threads: a repeat in " +
+      "the last archive, and one unreadable archive among them") {
+    val zips = (0 until 20).map(z => makeZip(f"many_$z%02d.zip",
+      (0 until 5).map(i => s"m$i.bin" -> randomBody(10 * z + i, 300 + i)): _*))
+    assert(bodiesDistinct(ZipToParquetConfig(inputs = zips)))
+    val last = makeZip("many_99.zip", "again.bin" -> randomBody(190, 300))
+    assert(!bodiesDistinct(ZipToParquetConfig(inputs = zips :+ last)))
+    val bad = new File(dir, "many_10.zip") // sorts among the others
+    val whole = java.nio.file.Files.readAllBytes(new File(zips(10)).toPath)
+    java.nio.file.Files.write(bad.toPath, whole.take(whole.length - 30))
+    val e = intercept[GraftError.GraftException](bodiesDistinct(ZipToParquetConfig(
+      inputs = zips.patch(10, Seq(bad.getAbsolutePath), 1))))
+    assert(e.err.isInstanceOf[GraftError.Zip] && e.err.message.contains("many_10.zip"), e.err)
   }
 
   test("an unreadable archive fails typed Zip on the driver, before the " +
-      "write job") {
-    val f = new File(dir, "truncated.zip")
-    val whole = java.nio.file.Files.readAllBytes(new File(zip1).toPath)
-    java.nio.file.Files.write(f.toPath, whole.take(whole.length - 30))
+      "write job; with body off, or archives under the check's size, the " +
+      "check does not run and the write job fails") {
+    def truncated(name: String, entries: (String, Array[Byte])*): String = {
+      val whole = java.nio.file.Files.readAllBytes(new File(makeZip(name, entries: _*)).toPath)
+      val f = new File(dir, "truncated_" + name)
+      java.nio.file.Files.write(f.toPath, whole.take(whole.length - 30))
+      f.getAbsolutePath
+    }
+    val big = truncated("big.zip", (0 until 20).map(i => s"b$i.bin" -> randomBody(300 + i, 20000)): _*)
+    val small = truncated("small.zip", "a.txt" -> bodyA, "b.bin" -> bodyB)
+    assert(new File(big).length >= ZipExtract.MinCheckedArchiveBytes)
+    assert(new File(small).length < ZipExtract.MinCheckedArchiveBytes)
     val out = new File(dir, "truncated.parquet")
     val sc = spark.sparkContext
-    sc.setJobGroup("graft-body-check", "body check errors")
-    val e = try intercept[GraftError.GraftException] {
-        ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(f.getAbsolutePath),
-          output = out.getAbsolutePath))
-      } finally sc.clearJobGroup()
-    assert(e.err.isInstanceOf[GraftError.Zip], e.err)
-    assert(sc.statusTracker.getJobIdsForGroup("graft-body-check").isEmpty)
-    assert(!out.exists)
+    def jobsOfFailedRun(cfg: ZipToParquetConfig, group: String): Int = {
+      sc.setJobGroup(group, "body check errors")
+      // from the write job it arrives inside Spark's task failure
+      val e = try intercept[Exception](ZipExtract.run(spark, cfg))
+        finally sc.clearJobGroup()
+      assert(GraftError.unwrap(e).exists(_.isInstanceOf[GraftError.Zip]), e)
+      assert(!out.exists)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val cfg = ZipToParquetConfig(inputs = Seq(big), output = out.getAbsolutePath)
+    assert(jobsOfFailedRun(cfg, "graft-body-check") == 0)
+    assert(jobsOfFailedRun(cfg.copy(includeBody = false), "graft-no-body-check") == 1)
+    assert(jobsOfFailedRun(cfg.copy(inputs = Seq(small)), "graft-small-archives") == 1)
   }
 }
