@@ -265,16 +265,18 @@ object ZipExtract {
   }
 
   /** The listed bytes per archive, on average, from which [[run]] checks
-    * the central directories for distinct bodies. The check costs a fixed
-    * amount per archive (one more open, on the driver): 33–41 µs over the
-    * local filesystem on 4 cores, most of it Hadoop's open. Skipping the
-    * dictionary attempt saves an amount per body byte: about 1.1 ms per
-    * MB of body, 1.5–1.9 ms per listed MB (medians of 16 alternated
-    * writes in one JVM). They break even near 25 KB an archive: 1,000
-    * archives of 29 KB saved 54 ms for a 41 ms check, 10,000 of 8 KB
-    * saved 95 ms for a 328 ms check. From 256 KiB the check costs at most
-    * about a tenth of what it saves; below it the attempt stays, as when
-    * a body repeats. */
+    * the central directories for distinct bodies. The check costs about
+    * a fixed amount per archive (one more open and tail read, on the
+    * driver): 33–41 µs over the local filesystem on 4 cores for archives
+    * of 8–29 KB, most of it Hadoop's open, and 140 µs for 320 KB ones,
+    * which read a 64 KiB tail. Skipping the dictionary attempt saves an
+    * amount per body byte: about 1.1 ms per MB of body (medians of 16
+    * alternated writes in one JVM). Below the gate the check did not pay
+    * or barely paid: 10,000 archives of 8 KB saved 95 ms for a 328 ms
+    * check, 1,000 of 29 KB 54 ms for 41 ms. Above it, 150 archives of
+    * 320 KB saved 66 ms for 21 ms, and the benchmark's 16 archives of
+    * 2.1 MB 54 ms for 6 ms. Below it the attempt stays, as when a body
+    * repeats. */
   private[zip] val MinCheckedArchiveBytes = 256L << 10
 
   /** The `format("zip")` table that `df`, a frame of [[entries]], reads. */
