@@ -1,11 +1,7 @@
 package graft.sources
 
 import java.util
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap, ExecutionException, Executors}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import java.util.regex.Pattern
-
-import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -22,7 +18,6 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import shaded.parquet.it.unimi.dsi.fastutil.longs.LongOpenHashSet
 
 import graft.zip.{GlobRegex, GraftError, ZipExtract}
 
@@ -93,7 +88,9 @@ class ZipDataSource extends TableProvider with DataSourceRegister {
   * here, on the driver, so a bad glob or an input that matches nothing
   * fails typed at `load()`, and every scan of the DataFrame plans from
   * this one listing (an archive deleted afterwards fails typed `ReadFile`
-  * in its task). */
+  * in its task). The table opens no archive: the driver reads a central
+  * directory only where a data scan cuts an archive into entry ranges
+  * ([[ZipScan]]). */
 class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
   override def name(): String = "zip"
   override def schema(): StructType = ZipExtract.schema
@@ -116,81 +113,6 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
   private[graft] val archives: Seq[ZipSlice] =
     ZipTable.list(SparkSession.active, paths)
 
-  /** Directories [[bodiesDistinct]] read of the archives a data scan cuts
-    * into entry ranges, each taken (and dropped) by the first such scan's
-    * split instead of read a second time. */
-  private val checked = new ConcurrentHashMap[String, Array[ZipCdEntry]]()
-
-  /** `a`'s central directory: as [[bodiesDistinct]] left it, else read. */
-  private[sources] def takeDirectory(a: ZipSlice, conf: Configuration): Array[ZipCdEntry] =
-    Option(checked.remove(a.readPath)).getOrElse(ZipEntryWalk.directory(a, conf))
-
-  /** Do the entries a scan of this table emits (its glob, no pushed
-    * filter) have pairwise distinct bodies, by the central directories
-    * alone? Equal bodies have equal CRC-32 and inflated size, and a read
-    * checks both against the directory, so no repeated (CRC-32, size)
-    * pair proves every body distinct; a repeat proves nothing either way.
-    * The pair is packed into one long (the CRC above the size's low 32
-    * bits): two pairs that pack alike only look like a repeat, which
-    * answers false, the safe side.
-    *
-    * Reads each archive's tail and directory, no entry data, on up to
-    * [[ZipTable.DirectoryThreads]] driver threads (one per 16 archives),
-    * and stops at the first repeat: the shape of the reference's count pass
-    * (src/builder.rs:24-45). Driver memory is the set (a primitive
-    * open-addressed one, 8-byte slots at most three quarters full) plus
-    * one directory per thread. The directories of archives above the
-    * table's cut target stay for the scan's split. An unreadable archive
-    * fails typed `ReadFile`/`Zip` here (the first in listing order of
-    * those read). */
-  private[graft] def bodiesDistinct(): Boolean = {
-    val sc = SparkSession.active.sparkContext
-    val conf = sc.hadoopConfiguration
-    val listed = archives.toIndexedSeq
-    val cutAbove = ZipScan.cutTarget(listed.map(_.bytes).sum, sc.defaultParallelism)
-    val seen = new LongOpenHashSet()
-    val next = new AtomicInteger(0)
-    val stop = new AtomicBoolean(false)
-    val repeated = new AtomicBoolean(false)
-    val failed = new ConcurrentSkipListMap[Int, Throwable]()
-    def walk(): Unit = {
-      var i = next.getAndIncrement()
-      while (i < listed.size && !stop.get) {
-        val a = listed(i)
-        try {
-          val entries = ZipEntryWalk.directory(a, conf)
-          if (a.bytes > cutAbove) checked.put(a.readPath, entries)
-          seen.synchronized {
-            var j = 0
-            while (j < entries.length && !stop.get) {
-              val e = entries(j)
-              if (ZipEntryWalk.emits(e, glob, Array.empty, a) &&
-                  !seen.add((e.crc << 32) | (e.size & 0xFFFFFFFFL))) {
-                repeated.set(true); stop.set(true)
-              }
-              j += 1
-            }
-          }
-        } catch { case NonFatal(x) => failed.put(i, x); stop.set(true) }
-        i = next.getAndIncrement()
-      }
-    }
-    // a pool pays for itself only past a few archives a thread: 16
-    // archives took 6.6 ms on 8 threads against 5.3 ms on the caller's
-    val threads = math.min(ZipTable.DirectoryThreads, (listed.size + 15) / 16)
-    if (threads == 1) walk()
-    else {
-      val pool = Executors.newFixedThreadPool(threads, { (r: Runnable) =>
-        val t = new Thread(r, "graft-zip-directories"); t.setDaemon(true); t
-      })
-      try Seq.fill(threads)(pool.submit((() => walk()): Runnable)).foreach { f =>
-        try f.get() catch { case e: ExecutionException => throw e.getCause }
-      } finally pool.shutdown()
-    }
-    if (!failed.isEmpty) throw failed.firstEntry.getValue
-    !repeated.get
-  }
-
   private def paths: Seq[String] = {
     val fromPaths = Option(options.get("paths")).toSeq.flatMap { json =>
       // Spark encodes multi-path load() as a JSON array of strings —
@@ -207,10 +129,6 @@ class ZipTable(options: CaseInsensitiveStringMap) extends Table with SupportsRea
 }
 
 object ZipTable {
-  /** Threads [[ZipTable.bodiesDistinct]] reads directories on: enough to
-    * overlap a remote filesystem's per-open latency, few for a driver. */
-  private val DirectoryThreads = 8
-
   /** Expand input patterns (literal paths or globs, reference
     * src/builder.rs:25-29) into concrete archives via the Hadoop FS,
     * sorted by path. `readPath` keeps the full URI so tasks open the right
@@ -341,7 +259,7 @@ class ZipScan(table: ZipTable, filters: Array[Filter], required: StructType)
 
   /** `a` as entry ranges, each with the compressed bytes it reads. */
   private def split(a: ZipSlice, target: Long): Seq[(ZipSlice, Long)] = {
-    val entries = table.takeDirectory(a, SparkSession.active.sparkContext.hadoopConfiguration)
+    val entries = ZipEntryWalk.directory(a, SparkSession.active.sparkContext.hadoopConfiguration)
     val emits = entries.map(ZipEntryWalk.emits(_, table.glob, filters, a))
     // entries this scan skips cost no data read: they weigh nothing
     val weights = entries.indices.map(i => if (emits(i)) entries(i).compressedSize else 0L)
@@ -383,8 +301,10 @@ object ZipScan {
     * bytes, in directory order, or a scan's archives and ranges by bytes,
     * in row order) into contiguous `[from, until)` index ranges that cover
     * every item. Each range is non-empty and weighs at most `target`,
-    * unless it is one item that alone weighs more; ranges aim at an equal
-    * share of the total so the last one is not a sliver. */
+    * unless it holds exactly one weighted item that alone weighs more;
+    * weightless items join a neighbouring range, so no range is weightless
+    * unless every item is. Ranges aim at an equal share of the total so
+    * the last one is not a sliver. */
   def cut(weights: IndexedSeq[Long], target: Long): Seq[(Int, Int)] = {
     val total = weights.sum
     val n = (math.max(total, 1L) - 1) / target + 1 // no overflow at Long.MaxValue
@@ -395,7 +315,8 @@ object ZipScan {
     var left = total // weight of [i, length)
     var i = 0
     while (i < weights.length) {
-      if (i > from && sum + weights(i) > target) {
+      // a weightless item never closes a range, nor does one close weightless
+      if (weights(i) > 0 && sum > 0 && sum + weights(i) > target) {
         out += ((from, i)); from = i; sum = 0L
       }
       sum += weights(i)
@@ -447,10 +368,9 @@ case class ZipReaderFactory(
   }
 }
 
-/** What the driver's directory passes (the range split, the body check)
-  * and the reader share — opening an archive and the predicate for "which
-  * entries this scan emits" — so the split weighs, and the check sees,
-  * exactly the entries the tasks read. */
+/** What the driver's range split and the reader share — opening an
+  * archive and the predicate for "which entries this scan emits" — so the
+  * split weighs exactly the entries the tasks read. */
 private[sources] object ZipEntryWalk {
   /** Open the archive and read its central directory (typed `ReadFile`
     * when the file cannot be opened, `Zip` when it is no readable zip). */

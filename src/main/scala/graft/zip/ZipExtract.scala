@@ -4,7 +4,6 @@ import java.security.MessageDigest
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -218,17 +217,25 @@ object ZipExtract {
     * and keeps it only when, at the chunk's first page, the dictionary
     * plus the encoded ids weigh less than the plain values. Both sides
     * count 4 + length bytes per distinct value, so a chunk of distinct
-    * bodies always falls back to PLAIN, after hashing and copying every
-    * body into the dictionary. When the central directories prove every
-    * emitted body distinct (`ZipTable.bodiesDistinct`, read only when
-    * `body` is on), `body` is written with `parquet.enable.dictionary#body`
-    * off: the same PLAIN pages (pages flush on the plain size either way),
-    * without the attempt. All or nothing over the input: one repeated
-    * (CRC-32, size) pair anywhere, two empty files say, keeps the attempt
-    * on every chunk, so duplicate-heavy corpora keep their dictionary and
-    * such an input pays the directory pass (up to its first repeat) for
-    * no gain. The pass opens every archive once more, so it runs only
-    * where it can pay: see [[MinCheckedArchiveBytes]]. */
+    * bodies always falls back to PLAIN, but by default only after hashing
+    * and copying up to 1 MiB of bodies into the dictionary. The sink caps
+    * every dictionary at [[DictionaryPageBytes]] instead: parquet-mr gives
+    * the attempt up as soon as a chunk's dictionary passes the cap (it
+    * checks after every value), so each `body` chunk decides for itself
+    * after about 64 KiB plus one body, and a chunk whose distinct bodies
+    * stay under the cap keeps its dictionary. At 100-row groups the
+    * `name`, `source` and `hash` dictionaries stay far below it. Trades
+    * against trying every chunk up to 1 MiB:
+    *   - a `body` chunk whose distinct bodies pass 64 KiB in its first page
+    *     writes PLAIN even when it holds a repeat, storing the repeated
+    *     bytes again;
+    *   - `source` can lose its dictionary when one row group spans more
+    *     than about 1,000 archives (a row-group size far above 100);
+    *   - a chunk may copy the one body that crosses the cap into the
+    *     dictionary before giving up.
+    * No archive is read before the write: an unreadable one fails typed
+    * `Zip`/`ReadFile` from the write itself (its task, or the range split
+    * while it plans), and nothing is left at `output`. */
   def run(spark: SparkSession, cfg: ZipToParquetConfig): Unit = {
     // src/error.rs:41 + src/main.rs:57-62 — a sink must be chosen up front
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
@@ -236,11 +243,7 @@ object ZipExtract {
     if (cfg.rowGroupSize <= 0) GraftError.raise(GraftError.InvalidArgument(
       s"rowGroupSize must be positive, got ${cfg.rowGroupSize}"))
     val df0 = entries(spark, cfg)
-    val table = zipTable(df0)
-    val plainBody = cfg.includeBody &&
-      table.archives.map(_.bytes).sum >= MinCheckedArchiveBytes * table.archives.size &&
-      table.bodiesDistinct()
-    if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output, plainBody); return }
+    if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
     val outPath = new Path(cfg.output)
     val fs =
       try outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -254,7 +257,7 @@ object ZipExtract {
     try {
       // no exchange: every scan task (a run of archives and entry
       // ranges) encodes its own part, in parallel
-      writeParquetDir(df0, cfg, tmp.toString, plainBody)
+      writeParquetDir(df0, cfg, tmp.toString)
       promote(fs, tmp, outPath, cfg.output)
     } finally {
       // tmp holds only the committer droppings (_SUCCESS, .crc) and the
@@ -264,27 +267,9 @@ object ZipExtract {
     }
   }
 
-  /** The listed bytes per archive, on average, from which [[run]] checks
-    * the central directories for distinct bodies. The check costs about
-    * a fixed amount per archive (one more open and tail read, on the
-    * driver): 33–41 µs over the local filesystem on 4 cores for archives
-    * of 8–29 KB, most of it Hadoop's open, and 140 µs for 320 KB ones,
-    * which read a 64 KiB tail. Skipping the dictionary attempt saves an
-    * amount per body byte: about 1.1 ms per MB of body (medians of 16
-    * alternated writes in one JVM). Below the gate the check did not pay
-    * or barely paid: 10,000 archives of 8 KB saved 95 ms for a 328 ms
-    * check, 1,000 of 29 KB 54 ms for 41 ms. Above it, 150 archives of
-    * 320 KB saved 66 ms for 21 ms, and the benchmark's 16 archives of
-    * 2.1 MB 54 ms for 6 ms. Below it the attempt stays, as when a body
-    * repeats. */
-  private[zip] val MinCheckedArchiveBytes = 256L << 10
-
-  /** The `format("zip")` table that `df`, a frame of [[entries]], reads. */
-  private[zip] def zipTable(df: DataFrame): ZipTable =
-    df.queryExecution.analyzed.collectFirst {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[ZipTable] =>
-        r.table.asInstanceOf[ZipTable]
-    }.get
+  /** The cap on each column chunk's dictionary (parquet-mr's
+    * `parquet.dictionary.page.size`, 1 MiB by default). */
+  private val DictionaryPageBytes = 64 << 10
 
   /** Spark's part files in `dir`, in row order: by the partition index in
     * `part-NNNNN-…`, then the `cNNN` file counter. */
@@ -334,17 +319,16 @@ object ZipExtract {
         GraftError.raise(GraftError.WriteFile(output, e.toString))
     }
 
-  private[zip] def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,
-      target: String, plainBody: Boolean): Unit = {
+  private def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,
+      target: String): Unit = {
     try {
-      val writer = df.write
+      df.write
         .mode("overwrite")
         .option("compression", "snappy") // src/builder.rs:253
         // rows-per-row-group ceiling (src/builder.rs:254); writer options are
         // copied into the task Hadoop conf, where parquet-mr reads this key
         .option("parquet.block.row.count.limit", cfg.rowGroupSize.toString)
-      // parquet-mr's per-column form of the dictionary switch
-      (if (plainBody) writer.option("parquet.enable.dictionary#body", "false") else writer)
+        .option("parquet.dictionary.page.size", DictionaryPageBytes.toString)
         .parquet(target)
     } catch {
       // extraction-side typed errors pass through unchanged; failures of

@@ -270,7 +270,8 @@ class ZipArchiveSpec extends SparkSpec {
   }
 
   test("cut: contiguous non-empty ranges that cover every entry, none above " +
-      "the target unless it is one entry") {
+      "the target unless it holds one weighted entry, none weightless unless " +
+      "all are") {
     val prop = Prop.forAll(Gen.listOf(Gen.frequency(1 -> Gen.const(0L),
         6 -> Gen.choose(1L, 5000L), 1 -> Gen.choose(5000L, 50000L))),
       Gen.choose(1L, 20000L)) { (ws, target) =>
@@ -278,9 +279,11 @@ class ZipArchiveSpec extends SparkSpec {
       val ranges = ZipScan.cut(weights, target)
       val covered = ranges.flatMap { case (from, until) => from until until }
       covered == weights.indices &&
-        ranges.forall { case (from, until) => from < until } &&
         ranges.forall { case (from, until) =>
-          until - from == 1 || weights.slice(from, until).sum <= target
+          val range = weights.slice(from, until)
+          from < until &&
+            (range.sum <= target || range.count(_ > 0) == 1) &&
+            (range.sum > 0 || weights.sum == 0)
         }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500)
@@ -290,6 +293,9 @@ class ZipArchiveSpec extends SparkSpec {
     assert(ZipScan.cut(IndexedSeq.fill(10)(10L), 60L) == Seq((0, 5), (5, 10)))
     assert(ZipScan.cut(IndexedSeq(5L, 100L, 5L), 50L) == Seq((0, 1), (1, 2), (2, 3)))
     assert(ZipScan.cut(IndexedSeq(0L, 0L, 0L), 50L) == Seq((0, 3)))
+    // a weightless entry joins a range above the target, and leads the next
+    assert(ZipScan.cut(IndexedSeq(5L, 0L, 0L), 1L) == Seq((0, 3)))
+    assert(ZipScan.cut(IndexedSeq(5L, 0L, 0L, 5L), 1L) == Seq((0, 1), (1, 4)))
     assert(ZipScan.cut(IndexedSeq.empty, 50L).isEmpty)
   }
 

@@ -7,7 +7,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -291,8 +291,8 @@ class ZipExtractSpec extends SparkSpec {
     }
   }
 
-  // ---- `body` encoding: parquet-mr's dictionary attempt is skipped only
-  // when the central directories prove every emitted body distinct
+  // ---- encodings: each column chunk keeps or drops its dictionary on its
+  // own, and the attempt stops at the sink's 64 KiB dictionary cap
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
@@ -309,18 +309,16 @@ class ZipExtractSpec extends SparkSpec {
   private def hasDictionary(c: (Long, Boolean, Set[Encoding], Long)): Boolean =
     c._2 || c._3.exists(_.usesDictionary)
 
-  /** The one part that [[ZipExtract.writeParquetDir]] writes for `cfg`'s
-    * entries, with the `body` dictionary switched as `plainBody` says. */
-  private def partWith(cfg: ZipToParquetConfig, name: String, plainBody: Boolean): String = {
+  /** The one part that a write of `cfg`'s entries at parquet-mr's default
+    * dictionary settings makes, in `run`'s row groups. */
+  private def defaultPart(cfg: ZipToParquetConfig, name: String): String = {
     val d = new File(dir, name).getAbsolutePath
-    ZipExtract.writeParquetDir(ZipExtract.entries(spark, cfg), cfg, d, plainBody)
+    ZipExtract.entries(spark, cfg).write
+      .option("parquet.block.row.count.limit", cfg.rowGroupSize.toString).parquet(d)
     val parts = ZipExtract.partFiles(new Path(d).getFileSystem(conf), new Path(d))
     assert(parts.size == 1, s"expected one part in $d, got $parts")
     parts.head.toUri.getPath
   }
-
-  private def bodiesDistinct(cfg: ZipToParquetConfig): Boolean =
-    ZipExtract.zipTable(ZipExtract.entries(spark, cfg)).bodiesDistinct()
 
   private def randomBody(seed: Int, n: Int): Array[Byte] = {
     val b = new Array[Byte](n)
@@ -334,17 +332,16 @@ class ZipExtractSpec extends SparkSpec {
     val zip = makeZip("dup100.zip", (0 until 100).map(i => f"d$i%03d.bin" -> body): _*)
     val out = new File(dir, "dup100.parquet").getAbsolutePath
     val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out)
-    assert(!bodiesDistinct(cfg))
     ZipExtract.run(spark, cfg)
     val chunks = bodyChunks(out)
     assert(chunks.nonEmpty && chunks.forall(c => c._2 && hasDictionary(c)), chunks)
-    // no larger than a write that always tries the dictionary; a write
-    // without it stores the 100 copies PLAIN, many times larger
-    val tried = partWith(cfg, "dup100_tried", plainBody = false)
-    val plain = partWith(cfg, "dup100_plain", plainBody = true)
+    // no larger than a write at parquet-mr's 1 MiB dictionary cap; the 100
+    // copies stored PLAIN would be many times larger (random bytes do not
+    // compress)
+    val tried = defaultPart(cfg, "dup100_default")
     assert(new File(out).length <= new File(tried).length)
-    assert(new File(out).length * 5 < new File(plain).length,
-      s"${new File(out).length} B with the dictionary, ${new File(plain).length} B without")
+    assert(new File(out).length * 5 < 100L * body.length,
+      s"${new File(out).length} B with the dictionary, ${100L * body.length} B of bodies")
   }
 
   test("a body repeated across two archives keeps the body dictionary") {
@@ -352,9 +349,7 @@ class ZipExtractSpec extends SparkSpec {
     val a = makeZip("rep_a.zip", "a.bin" -> body)
     val b = makeZip("rep_b.zip", "b.bin" -> body)
     val out = new File(dir, "rep.parquet").getAbsolutePath
-    val cfg = ZipToParquetConfig(inputs = Seq(a, b), output = out)
-    assert(!bodiesDistinct(cfg))
-    ZipExtract.run(spark, cfg)
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(a, b), output = out))
     assert(bodyChunks(out).forall(c => c._2 && hasDictionary(c)))
   }
 
@@ -362,9 +357,7 @@ class ZipExtractSpec extends SparkSpec {
     val zip = makeZip("empties.zip", "e1.txt" -> Array.emptyByteArray,
       "e2.txt" -> Array.emptyByteArray)
     val out = new File(dir, "empties.parquet").getAbsolutePath
-    val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out)
-    assert(!bodiesDistinct(cfg))
-    ZipExtract.run(spark, cfg)
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(zip), output = out))
     assert(bodyChunks(out).forall(c => c._2 && hasDictionary(c)))
   }
 
@@ -376,11 +369,13 @@ class ZipExtractSpec extends SparkSpec {
     val out = new File(dir, "globbed.parquet").getAbsolutePath
     val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out,
       entryGlob = Some("keep/*.txt"))
-    assert(bodiesDistinct(cfg))
-    assert(!bodiesDistinct(cfg.copy(entryGlob = None)))
     ZipExtract.run(spark, cfg)
     val chunks = bodyChunks(out)
     assert(chunks.map(_._1).sum == 2 && !chunks.exists(hasDictionary), chunks)
+    // without the glob the repeat is emitted, and its chunk keeps the dictionary
+    ZipExtract.run(spark, cfg.copy(entryGlob = None))
+    val all = bodyChunks(out)
+    assert(all.map(_._1).sum == 4 && all.forall(hasDictionary), all)
   }
 
   test("an all-distinct multi-archive run writes body PLAIN with no " +
@@ -394,7 +389,6 @@ class ZipExtractSpec extends SparkSpec {
     }
     val out = new File(dir, "distinct.parquet").getAbsolutePath
     val cfg = ZipToParquetConfig(inputs = zips, output = out, rowGroupSize = 30)
-    assert(bodiesDistinct(cfg))
     // at the smallest archive's bytes the other two are cut into entry
     // ranges: several parts, stitched
     ZipScan.cutTargetOverride = new File(zips.head).length
@@ -406,94 +400,59 @@ class ZipExtractSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
       (r.getString(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq, r.getString(3)))
     assert(rows(spark.read.parquet(out)) == rows(ZipExtract.entries(spark, cfg)))
-    // one archive written both ways: the same groups and body chunk sizes
-    val one = cfg.copy(inputs = zips.take(1))
-    val tried = bodyChunks(partWith(one, "distinct_tried", plainBody = false))
-    val skipped = bodyChunks(partWith(one, "distinct_plain", plainBody = true))
-    assert(tried.map(c => (c._1, c._2, c._4)) == skipped.map(c => (c._1, c._2, c._4)))
+    // one archive written by run and at parquet-mr's defaults: the same
+    // groups and body chunk sizes
+    val oneOut = new File(dir, "distinct_one.parquet").getAbsolutePath
+    val one = cfg.copy(inputs = zips.take(1), output = oneOut)
+    ZipExtract.run(spark, one)
+    val capped = bodyChunks(oneOut)
+    val tried = bodyChunks(defaultPart(one, "distinct_default"))
+    assert(tried.map(c => (c._1, c._2, c._4)) == capped.map(c => (c._1, c._2, c._4)))
   }
 
-  /** Bytes read so far through Hadoop's local (`file`) FileSystem. */
-  private def fsReadBytes(): Long =
-    FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
-
-  test("the body check reads only each archive's tail and directory, and " +
-      "the split reads none of them again") {
-    val zips = (0 until 2).map(z => makeZip(s"traffic_$z.zip",
-      (0 until 60).map(i => f"t$i%02d.bin" -> randomBody(100 * z + i, 20000)): _*))
-    // the tail holds the longest end record and the ZIP64 records
-    val bound = zips.map { p =>
-      val b = java.nio.file.Files.readAllBytes(new File(p).toPath)
-      val cen = java.nio.ByteBuffer.wrap(b, b.length - 22 + 12, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt.toLong
-      math.min(b.length.toLong, 0xFFFFL + 22 + 20 + 56) + cen
-    }.sum
-    def readOf(body: => Unit): Long = {
-      val before = fsReadBytes()
-      body
-      fsReadBytes() - before
-    }
-    val cfg = ZipToParquetConfig(inputs = zips)
-    val df = ZipExtract.entries(spark, cfg)
-    val read = readOf(assert(ZipExtract.zipTable(df).bodiesDistinct()))
-    assert(read > 0 && read <= bound, s"the check read $read bytes, the tails and " +
-      s"directories are $bound of ${zips.map(new File(_).length).sum}")
-    // at 1 byte both archives are above the cut target: the data scan cuts
-    // them into entry ranges from the directories the check read
-    ZipScan.cutTargetOverride = 1L
-    try {
-      val fresh = ZipExtract.entries(spark, cfg)
-      assert(readOf(fresh.rdd.getNumPartitions) > 0) // plans read them
-      val checked = ZipExtract.entries(spark, cfg)
-      assert(ZipExtract.zipTable(checked).bodiesDistinct())
-      var parts = 0
-      assert(readOf { parts = checked.rdd.getNumPartitions } == 0L)
-      assert(parts == 120) // one entry a range
-    } finally ZipScan.cutTargetOverride = 0L
+  test("each row group's body chunk decides its own dictionary: only the " +
+      "group that holds a repeat keeps one") {
+    val bodies = (0 until 30).map(i => randomBody(500 + i, 1024))
+    // rows 10-19 hold bodies 10-18 and a second copy of body 12
+    val order = (0 until 15) ++ Seq(12) ++ (15 until 30)
+    val zip = makeZip("groups.zip", order.zipWithIndex.map { case (b, row) =>
+      f"g$row%02d.bin" -> bodies(b) }: _*)
+    val out = new File(dir, "groups.parquet").getAbsolutePath
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(zip), output = out,
+      rowGroupSize = 10))
+    val chunks = bodyChunks(out)
+    assert(chunks.map(_._1) == Seq(10L, 10L, 10L, 1L), chunks)
+    assert(chunks.map(hasDictionary) == Seq(false, true, false, false), chunks)
   }
 
-  test("the body check over more archives than its threads: a repeat in " +
-      "the last archive, and one unreadable archive among them") {
-    val zips = (0 until 20).map(z => makeZip(f"many_$z%02d.zip",
-      (0 until 5).map(i => s"m$i.bin" -> randomBody(10 * z + i, 300 + i)): _*))
-    assert(bodiesDistinct(ZipToParquetConfig(inputs = zips)))
-    val last = makeZip("many_99.zip", "again.bin" -> randomBody(190, 300))
-    assert(!bodiesDistinct(ZipToParquetConfig(inputs = zips :+ last)))
-    val bad = new File(dir, "many_10.zip") // sorts among the others
-    val whole = java.nio.file.Files.readAllBytes(new File(zips(10)).toPath)
+  test("99 distinct 8 KiB bodies and one copy in a 100-row chunk write body " +
+      "PLAIN: the attempt stops at the 64 KiB dictionary cap") {
+    val bodies = (0 until 99).map(i => randomBody(900 + i, 8192))
+    val zip = makeZip("capped.zip", (bodies :+ bodies.head).zipWithIndex.map {
+      case (b, i) => f"c$i%02d.bin" -> b }: _*)
+    val out = new File(dir, "capped.parquet").getAbsolutePath
+    val cfg = ZipToParquetConfig(inputs = Seq(zip), output = out)
+    ZipExtract.run(spark, cfg)
+    val chunks = bodyChunks(out)
+    assert(chunks.map(_._1) == Seq(100L) && !chunks.exists(hasDictionary), chunks)
+    // parquet-mr's 1 MiB default holds all 99 bodies and keeps the dictionary
+    // for the one repeat: the trade the cap makes
+    assert(bodyChunks(defaultPart(cfg, "capped_default")).forall(hasDictionary))
+  }
+
+  test("an unreadable archive fails typed Zip from the write and leaves no " +
+      "file at the output, with body on and off") {
+    val whole = java.nio.file.Files.readAllBytes(new File(
+      makeZip("whole.zip", "a.txt" -> bodyA, "b.bin" -> bodyB)).toPath)
+    val bad = new File(dir, "truncated.zip")
     java.nio.file.Files.write(bad.toPath, whole.take(whole.length - 30))
-    val e = intercept[GraftError.GraftException](bodiesDistinct(ZipToParquetConfig(
-      inputs = zips.patch(10, Seq(bad.getAbsolutePath), 1))))
-    assert(e.err.isInstanceOf[GraftError.Zip] && e.err.message.contains("many_10.zip"), e.err)
-  }
-
-  test("an unreadable archive fails typed Zip on the driver, before the " +
-      "write job; with body off, or archives under the check's size, the " +
-      "check does not run and the write job fails") {
-    def truncated(name: String, entries: (String, Array[Byte])*): String = {
-      val whole = java.nio.file.Files.readAllBytes(new File(makeZip(name, entries: _*)).toPath)
-      val f = new File(dir, "truncated_" + name)
-      java.nio.file.Files.write(f.toPath, whole.take(whole.length - 30))
-      f.getAbsolutePath
-    }
-    val big = truncated("big.zip", (0 until 20).map(i => s"b$i.bin" -> randomBody(300 + i, 20000)): _*)
-    val small = truncated("small.zip", "a.txt" -> bodyA, "b.bin" -> bodyB)
-    assert(new File(big).length >= ZipExtract.MinCheckedArchiveBytes)
-    assert(new File(small).length < ZipExtract.MinCheckedArchiveBytes)
     val out = new File(dir, "truncated.parquet")
-    val sc = spark.sparkContext
-    def jobsOfFailedRun(cfg: ZipToParquetConfig, group: String): Int = {
-      sc.setJobGroup(group, "body check errors")
-      // from the write job it arrives inside Spark's task failure
-      val e = try intercept[Exception](ZipExtract.run(spark, cfg))
-        finally sc.clearJobGroup()
+    val cfg = ZipToParquetConfig(inputs = Seq(bad.getAbsolutePath), output = out.getAbsolutePath)
+    for (c <- Seq(cfg, cfg.copy(includeBody = false))) {
+      // it arrives inside Spark's task failure
+      val e = intercept[Exception](ZipExtract.run(spark, c))
       assert(GraftError.unwrap(e).exists(_.isInstanceOf[GraftError.Zip]), e)
       assert(!out.exists)
-      sc.statusTracker.getJobIdsForGroup(group).length
     }
-    val cfg = ZipToParquetConfig(inputs = Seq(big), output = out.getAbsolutePath)
-    assert(jobsOfFailedRun(cfg, "graft-body-check") == 0)
-    assert(jobsOfFailedRun(cfg.copy(includeBody = false), "graft-no-body-check") == 1)
-    assert(jobsOfFailedRun(cfg.copy(inputs = Seq(small)), "graft-small-archives") == 1)
   }
 }
